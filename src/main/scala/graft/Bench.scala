@@ -40,9 +40,14 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Interleaved: pass 1 runs the whole catalog, then pass 2 — so a
     // contended wall-clock window lands on DIFFERENT queries each pass.
+    // Each pass also reports on stderr how many generated classes Janino
+    // compiled during it: a pass that reuses the codegen cache compiles
+    // few, and a count near the first pass's means the cache thrashes.
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val samples: Seq[(String, Double, Boolean)] =
-      (1 to repeat).flatMap { _ =>
-        catalog.map { case (name, fn) =>
+      (1 to repeat).flatMap { pass =>
+        val compiledBefore = compiles.getCount
+        val runs = catalog.map { case (name, fn) =>
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -51,6 +56,9 @@ object Bench {
             }
           (name, (System.nanoTime() - t0) / 1e9, ok)
         }
+        System.err.println(
+          s"[bench] pass $pass: ${compiles.getCount - compiledBefore} generated classes compiled")
+        runs
       }
     // Per query: MIN over successful passes (any-pass failure → -1).
     val byName = samples.groupBy(_._1)

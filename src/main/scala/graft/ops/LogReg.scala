@@ -28,6 +28,7 @@ import org.apache.spark.sql.functions._
 object LogReg {
 
   /** Train `iters` full-batch GD steps from w = 0; labels are 0/1.
+    * Ids must be non-null: a null id fails the call.
     *
     * @return `(bucket, w)` — one row per feature bucket that occurs in
     *         `df`, `w` the raw double weight (caller rounds)
@@ -37,10 +38,15 @@ object LogReg {
       dim: Int = 256, lr: Double = 1.0, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(lr > 0, s"lr must be positive: $lr")
+    // A null id would drop out of the label join and the `countDistinct`
+    // behind nDocs without a trace, so it raises instead. The check rides
+    // the feature build's scan: no extra job.
+    val docs = df.withColumn(idCol, coalesce(col(idCol),
+      raise_error(lit(s"LogReg.train: null $idCol"))))
     val spark = df.sparkSession
-    val labels = df.select(col(idCol),
+    val labels = docs.select(col(idCol),
       col(labelCol).cast("double").as("y"))
-    val hashed = Dsir.docFeatures(df, idCol, textCol, dim)
+    val hashed = Dsir.docFeatures(docs, idCol, textCol, dim)
       .withColumn("x",
         col("n").cast("double") /
           sum(col("n")).over(org.apache.spark.sql.expressions.Window

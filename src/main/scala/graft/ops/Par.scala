@@ -3,31 +3,33 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Scan-parallelism floor for compute-dense stages (optimization r19,
-  * guide §2.5 "input skew" / §6 "input split size").
+/** Scan-parallelism floor for compute-dense stages.
   *
-  * The driver's parquet tables are single-row-group files, and a
-  * parquet row group is not byte-splittable — so every scan is ONE
-  * task regardless of `spark.sql.files.*`, and any expensive per-row
-  * kernel above it (MinHash signature fold, hashed-feature explode,
-  * 64-dim vector math, ownership regex split) runs serially while 31
-  * cores idle. Measured at sf0.1: the q293 whitening fold was a single
-  * 3.3 s task; q115's DSIR feature fold two ~1.5 s tasks; q43's
-  * wrangle+totals rode 2-task stages for ~5 s of its 9.6 s wall.
+  * A parquet row group is not byte-splittable, so a small table written
+  * as one row group scans as ONE task whatever `spark.sql.files.*` says,
+  * and an expensive per-row kernel above it (MinHash signature fold,
+  * hashed-feature explode, vector math, ownership regex split) runs
+  * serially while the other cores idle. Measured at sf0.1: the q293
+  * whitening fold was a single 3.3 s task; q115's DSIR feature fold two
+  * ~1.5 s tasks; q43's wrangle+totals rode 2-task stages for ~5 s of
+  * its 9.6 s wall.
   *
   * [[spread]] repartitions such inputs up to the session's default
-  * parallelism BEFORE the expensive kernel — but only when the frame's
-  * file sources are too small to have produced that parallelism
-  * natively (sum of scan bytes < cores × `maxPartitionBytes`). On a
-  * production table (100 TB across many ≥128 MB files) the condition
-  * is false and the call is a plan-identical no-op — this is NOT a
-  * local[32] constant baked into the operators; the decision derives
-  * from input size vs. the session's own scan-split config, exactly
-  * the "derive from input size" posture the optimization brief asks
-  * for. The extra exchange moves only the bytes the kernel was going
-  * to read anyway (sub-MB here), and hash-partitioning on the caller's
-  * key keeps the assignment deterministic under task retry (guide
-  * §2.5's rand()-repartition trap does not apply).
+  * parallelism BEFORE the expensive kernel. It fires only when the
+  * summed bytes of the frame's file sources are below
+  * `min(defaultParallelism, 4) × maxPartitionBytes`: a few splits' worth
+  * of input, the regime where the scan is starved of parallelism on its
+  * own. The cap of 4 keeps the trigger from scaling with cluster size
+  * (on 2000 cores, `defaultParallelism × maxPartitionBytes` would cover
+  * a multi-GB input that already scans with hundreds of tasks). On a
+  * production table the condition is false and the call is a
+  * plan-identical no-op. The extra exchange moves only the bytes the
+  * kernel was going to read anyway, and hash-partitioning on the
+  * caller's key keeps the assignment deterministic under task retry.
+  *
+  * Blind spot: the trigger reads bytes, not scan tasks, so a
+  * single-row-group input above the cap still scans as one task and is
+  * not spread.
   */
 object Par {
 
@@ -56,12 +58,7 @@ object Par {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    // Trigger cap (ADVICE r19): `bytes < target × maxSplit` alone
-    // scales with CLUSTER size — on 2000 cores it would re-shuffle a
-    // multi-GB input that already scans with hundreds of tasks. Only
-    // spread when the scan is provably starved of parallelism on its
-    // own: under a few splits' worth of bytes (the single-row-group
-    // fixture regime), never because the cluster is merely large.
+    // Trigger capped at 4 splits' worth of bytes (see the object doc).
     scanBytes(df) match {
       case Some(bytes) if bytes < math.min(target.toLong, 4L) * maxSplit =>
         if (keys.nonEmpty) df.repartition(target, keys: _*)

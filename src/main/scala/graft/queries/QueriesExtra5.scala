@@ -693,8 +693,9 @@ private[queries] object QueriesExtra5 {
           col("jaccard") >= p / 1000.0, 1L).otherwise(0L)), lit(0L))
           .as(s"_n$p"))
         val pc = pairs0.agg(pcAggs.head, pcAggs.tail: _*)
-          .select(expr("stack(3, 700, _n700, 800, _n800, 900, _n900)" +
-            " AS (threshold_permil, n_pairs)"))
+          .select(expr(s"stack(${taus.size}, " +
+            taus.map(p => s"$p, _n$p").mkString(", ") +
+            ") AS (threshold_permil, n_pairs)"))
         val n = slice.agg(count(lit(1)).as("_n"))
         // LEFT join: a threshold whose clustering is empty still
         // reports its row (0 clusters), never vanishes.

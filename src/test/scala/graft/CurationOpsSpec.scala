@@ -377,6 +377,18 @@ class CurationOpsSpec extends SparkSpec {
     assert(ws.forall { case (_, w) => !w.isNaN && !w.isInfinite })
   }
 
+  test("logreg: a null doc id fails training instead of vanishing") {
+    val docs = Seq(
+      (Some(1L), "good clean prose", 1), (None, "good tidy text", 1),
+      (Some(3L), "spam junk noise", 0)
+    ).toDF("doc_id", "text", "y")
+    val e = intercept[Exception](graft.ops.LogReg.train(
+      docs, "doc_id", "text", "y", dim = 256, lr = 1.0, iters = 1))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("LogReg.train: null doc_id")), e.toString)
+  }
+
   test("dsir importanceSelect: target-like docs outrank disjoint ones") {
     val raw = Seq(
       (1L, "the cat sat"), // shares all features with the target
