@@ -1,23 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 import org.apache.spark.sql.functions._
 
 /** Disposable micro-probe for the per-task CPU constant on tiny
   * shuffle-write stages (r20 diagnostics; not part of any query path).
-  * args: k=v spark-conf overrides applied to a fresh session.
+  * args: k=v spark-conf overrides, set as system properties so
+  * [[Graft.session]] takes them over its own defaults.
   */
 object ScratchProbe {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().appName("graft-scratch")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
     args.foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
+      val Array(k, v) = kv.split("=", 2); sys.props(k) = v
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-scratch")
     val sc = spark.sparkContext
     import org.apache.spark.scheduler._
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

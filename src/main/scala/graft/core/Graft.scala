@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Session factory + table loading for the graft engine.
   *
-  * Design notes (100 TB posture): the session enables AQE (runtime
-  * partition coalescing + skew-join splitting), sizes shuffle
+  * Design notes (100 TB posture): the session keeps Spark's default
+  * AQE (runtime partition coalescing + skew-join splitting), sizes shuffle
   * partitions to the harness core count, and pins UTC so timestamp
   * semantics match the DuckDB oracle and any downstream warehouse.
   *
@@ -25,9 +25,6 @@ object Graft {
   def session(appName: String = "graft"): SparkSession = {
     val defaults = Seq(
       "spark.sql.shuffle.partitions" -> cpus,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // r19: AQE's coalesce floor, lowered from the 1 MB default so
       // parallelism-first coalescing keeps compute-dense SMALL
       // shuffles wide (a ~1 MB post-rollup frame feeding the 19-col

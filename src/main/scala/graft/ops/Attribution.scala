@@ -26,6 +26,35 @@ import org.apache.spark.sql.functions._
   */
 object Attribution {
 
+  /** Conversions (`cid`, `e`, `cts`, `cents`) and, joined to them on
+    * the entity, every touch (`tts`, `channel`) inside the lookback
+    * window before the conversion.
+    */
+  private def matchTouches(
+      df: DataFrame, idCol: String, entityCol: String, tsCol: String,
+      typeCol: String, convType: String, touchTypes: Seq[String],
+      valueCol: String, lookbackDays: Int): (DataFrame, DataFrame) = {
+    val conv = df.where(col(typeCol) === convType)
+      .select(col(idCol).as("cid"), col(entityCol).as("e"),
+        expr(s"unix_micros(cast($tsCol as timestamp))").as("cts"),
+        round(col(valueCol) * 100).cast("long").as("cents"))
+    val touch = df.where(col(typeCol).isin(touchTypes: _*))
+      .select(col(entityCol).as("e"),
+        expr(s"unix_micros(cast($tsCol as timestamp))").as("tts"),
+        col(typeCol).as("channel"))
+    val lookbackUs = lookbackDays.toLong * 86400000000L
+    (conv, conv.join(touch, Seq("e"))
+      .where(col("tts") < col("cts") &&
+        col("tts") >= col("cts") - lit(lookbackUs)))
+  }
+
+  /** Conversions nothing touched: the 'direct' bucket. */
+  private def untouched(conv: DataFrame, matched: DataFrame): DataFrame =
+    conv.join(
+        matched.select("cid").distinct().withColumn("_hit", lit(1)),
+        Seq("cid"), "left")
+      .where(col("_hit").isNull)
+
   /** @param df event frame
     * @param idCol      unique event id (the conversion grain key —
     *                   deterministic, so the oracle groups identically)
@@ -45,18 +74,8 @@ object Attribution {
       df: DataFrame, idCol: String, entityCol: String, tsCol: String,
       typeCol: String, convType: String, touchTypes: Seq[String],
       valueCol: String, lookbackDays: Int): DataFrame = {
-    val conv = df.where(col(typeCol) === convType)
-      .select(col(idCol).as("cid"), col(entityCol).as("e"),
-        expr(s"unix_micros(cast($tsCol as timestamp))").as("cts"),
-        round(col(valueCol) * 100).cast("long").as("cents"))
-    val touch = df.where(col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("e"),
-        expr(s"unix_micros(cast($tsCol as timestamp))").as("tts"),
-        col(typeCol).as("channel"))
-    val lookbackUs = lookbackDays.toLong * 86400000000L
-    val matched = conv.join(touch, Seq("e"))
-      .where(col("tts") < col("cts") &&
-        col("tts") >= col("cts") - lit(lookbackUs))
+    val (conv, matched) = matchTouches(df, idCol, entityCol, tsCol,
+      typeCol, convType, touchTypes, valueCol, lookbackDays)
     val wC = Window.partitionBy("cid")
     // Tie-break on (tts, channel): two touches in the same microsecond
     // must rank deterministically in both engines.
@@ -77,11 +96,7 @@ object Attribution {
       sum("first_c").as("first_cents"),
       sum("last_c").as("last_cents"),
       sum("linear_c").as("linear_cents"))
-    // Conversions nothing touched: the 'direct' bucket.
-    val direct = conv.join(
-        matched.select("cid").distinct().withColumn("_hit", lit(1)),
-        Seq("cid"), "left")
-      .where(col("_hit").isNull)
+    val direct = untouched(conv, matched)
       .agg(count(lit(1)).as("n_conversions"),
         sum("cents").as("first_cents"))
       .select(lit("direct").as("channel"), col("n_conversions"),
@@ -107,19 +122,10 @@ object Attribution {
       typeCol: String, convType: String, touchTypes: Seq[String],
       valueCol: String, lookbackDays: Int,
       halfLifeDays: Double): DataFrame = {
-    val conv = df.where(col(typeCol) === convType)
-      .select(col(idCol).as("cid"), col(entityCol).as("e"),
-        expr(s"unix_micros(cast($tsCol as timestamp))").as("cts"),
-        round(col(valueCol) * 100).cast("long").as("cents"))
-    val touch = df.where(col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("e"),
-        expr(s"unix_micros(cast($tsCol as timestamp))").as("tts"),
-        col(typeCol).as("channel"))
-    val lookbackUs = lookbackDays.toLong * 86400000000L
+    val (conv, touched) = matchTouches(df, idCol, entityCol, tsCol,
+      typeCol, convType, touchTypes, valueCol, lookbackDays)
     val hlUs = halfLifeDays * 86400000000.0
-    val matched = conv.join(touch, Seq("e"))
-      .where(col("tts") < col("cts") &&
-        col("tts") >= col("cts") - lit(lookbackUs))
+    val matched = touched
       // Clamp to >= 1 micro-unit: a touch whose decay rounds to 0
       // (conversion-touch gap >> halfLife under a long lookback) must
       // not zero Σw — (cents · w) DIV 0 is null and would silently
@@ -139,10 +145,7 @@ object Attribution {
     val byChannel = credited.groupBy("channel").agg(
       countDistinct("cid").as("n_conversions"),
       sum("decay_c").as("decay_cents"))
-    val direct = conv.join(
-        matched.select("cid").distinct().withColumn("_hit", lit(1)),
-        Seq("cid"), "left")
-      .where(col("_hit").isNull)
+    val direct = untouched(conv, matched)
       .agg(count(lit(1)).as("n_conversions"),
         coalesce(sum("cents"), lit(0L)).as("decay_cents"))
       .select(lit("direct").as("channel"), col("n_conversions"),

@@ -202,14 +202,8 @@ object Dedup {
     val toksOld = toksOf(old)
     val toksBatch = toksOf(batch)
     def selfPairs(b: DataFrame, toks: DataFrame): DataFrame = {
-      val candidates = b.as("l")
-        .join(b.as("r"),
-          col("l.band_id") === col("r.band_id") &&
-            col("l.band_hash") === col("r.band_hash") &&
-            col(s"l.$idCol") < col(s"r.$idCol"))
-        .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
-        .distinct()
-      verifyJaccard(candidates, toks, toks, idCol, threshold, "id_a", "id_b")
+      verifyJaccard(bandCandidates(b, idCol), toks, toks, idCol, threshold,
+        "id_a", "id_b")
     }
     val crossCand = bandsBatch.as("l")
       .join(bandsOld.as("r"),
@@ -271,6 +265,18 @@ object Dedup {
       .select("batch_id", "index_id", "jaccard")
   }
 
+  /** Candidate pairs (`id_a` < `id_b`) sharing at least one LSH band of
+    * the band frame `b`.
+    */
+  private def bandCandidates(b: DataFrame, idCol: String): DataFrame =
+    b.as("l")
+      .join(b.as("r"),
+        col("l.band_id") === col("r.band_id") &&
+          col("l.band_hash") === col("r.band_hash") &&
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
+      .distinct()
+
   /** MinHash+LSH near-dup candidate pairs, verified with exact Jaccard
     * over distinct token sets. Returns (id_a, id_b, jaccard) pairs with
     * jaccard >= threshold, id_a < id_b.
@@ -288,14 +294,10 @@ object Dedup {
     // materializing ("10 s vs 19 s") was through the STORAGE layer
     // (bucketed table write), not the block manager. An eager action
     // inside the operator matches the binCounts/ngramJaccard posture.
+    // Executor loss then fails the job instead of recomputing the
+    // frames (see the failure model in [[Iterate]]'s doc).
     val b = lshBands(df, idCol, textCol, k, bands).localCheckpoint(true)
-    val candidates = b.as("l")
-      .join(b.as("r"),
-        col("l.band_id") === col("r.band_id") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
-      .distinct()
+    val candidates = bandCandidates(b, idCol)
     // Verify with a merge-count over SORTED distinct token arrays
     // (graft_overlap): one scan per candidate pair instead of the
     // array_intersect + array_union hash-set builds. With distinct

@@ -184,7 +184,11 @@ object Drift {
         (round(col("q_b") - col("q_a"), 4) + lit(0.0)).as("gap"))
   }
 
-  def ksFromHists(
+  /** Per (group, bin) of the two sides' `graft_hist` sketches: the
+    * running counts `cum_a`/`cum_b` and the totals `n_a`/`n_b`; groups
+    * empty on either side are dropped.
+    */
+  private def histCdfs(
       a: DataFrame, b: DataFrame, groupCol: String, valueCol: String,
       lo: Double, hi: Double, nbins: Int): DataFrame = {
     def buckets(df: DataFrame, cnt: String): DataFrame =
@@ -194,18 +198,25 @@ object Drift {
         .select(col(groupCol), posexplode(col("_h")).as(Seq("b", cnt)))
     val w = Window.partitionBy(groupCol).orderBy("b")
     val wAll = Window.partitionBy(groupCol)
-    val joined = buckets(a, "ca").join(buckets(b, "cb"), Seq(groupCol, "b"))
+    buckets(a, "ca").join(buckets(b, "cb"), Seq(groupCol, "b"))
       .withColumn("cum_a", sum("ca").over(w))
       .withColumn("cum_b", sum("cb").over(w))
       .withColumn("n_a", sum("ca").over(wAll))
       .withColumn("n_b", sum("cb").over(wAll))
-    joined
       .where(col("n_a") > 0 && col("n_b") > 0)
+  }
+
+  /** |F_A − F_B| at one bin of [[histCdfs]]. */
+  private def cdfGap: Column =
+    abs(col("cum_a").cast("double") / col("n_a").cast("double") -
+      col("cum_b").cast("double") / col("n_b").cast("double"))
+
+  def ksFromHists(
+      a: DataFrame, b: DataFrame, groupCol: String, valueCol: String,
+      lo: Double, hi: Double, nbins: Int): DataFrame = {
+    histCdfs(a, b, groupCol, valueCol, lo, hi, nbins)
       .groupBy(col(groupCol), col("n_a"), col("n_b"))
-      .agg((round(max(abs(
-        col("cum_a").cast("double") / col("n_a").cast("double") -
-          col("cum_b").cast("double") / col("n_b").cast("double"))), 4)
-        + lit(0.0)).as("ks"))
+      .agg((round(max(cdfGap), 4) + lit(0.0)).as("ks"))
       .select(col(groupCol), col("n_a"), col("n_b"), col("ks"))
   }
 
@@ -274,26 +285,10 @@ object Drift {
   def emdFromHists(
       a: DataFrame, b: DataFrame, groupCol: String, valueCol: String,
       lo: Double, hi: Double, nbins: Int): DataFrame = {
-    def buckets(df: DataFrame, cnt: String): DataFrame =
-      df.groupBy(groupCol)
-        .agg(expr(s"graft_hist(CAST($valueCol AS DOUBLE), ${lo}D, ${hi}D, $nbins)")
-          .as("_h"))
-        .select(col(groupCol), posexplode(col("_h")).as(Seq("b", cnt)))
-    val w = Window.partitionBy(groupCol).orderBy("b")
-    val wAll = Window.partitionBy(groupCol)
     val width = (hi - lo) / nbins
-    val joined = buckets(a, "ca").join(buckets(b, "cb"), Seq(groupCol, "b"))
-      .withColumn("cum_a", sum("ca").over(w))
-      .withColumn("cum_b", sum("cb").over(w))
-      .withColumn("n_a", sum("ca").over(wAll))
-      .withColumn("n_b", sum("cb").over(wAll))
-    joined
-      .where(col("n_a") > 0 && col("n_b") > 0)
+    histCdfs(a, b, groupCol, valueCol, lo, hi, nbins)
       .groupBy(col(groupCol), col("n_a"), col("n_b"))
-      .agg((round(sum(abs(
-        col("cum_a").cast("double") / col("n_a").cast("double") -
-          col("cum_b").cast("double") / col("n_b").cast("double"))) *
-        lit(width), 4) + lit(0.0)).as("emd"))
+      .agg((round(sum(cdfGap) * lit(width), 4) + lit(0.0)).as("emd"))
       .select(col(groupCol), col("n_a"), col("n_b"), col("emd"))
   }
 

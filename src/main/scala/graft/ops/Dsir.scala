@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.Hashing
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data Selection via Importance Resampling (Xie et al., NeurIPS 2023)
@@ -33,6 +33,16 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
+  /** The features of a token array `tk`: every token plus every
+    * adjacent `"prev cur"` bigram.
+    */
+  private def feats(tk: Column): Column =
+    concat(tk,
+      when(size(tk) >= 2,
+        transform(sequence(lit(2), size(tk)), i =>
+          concat(element_at(tk, i - 1), lit(" "), element_at(tk, i))))
+        .otherwise(array().cast("array<string>")))
+
   /** Per-document hashed feature-bucket counts: `(idCol, bucket, n)`.
     * Features = every token plus every adjacent `"prev cur"` bigram
     * (tokens never contain spaces, so the bigram key cannot collide
@@ -41,18 +51,12 @@ object Dsir {
   def docFeatures(
       df: DataFrame, idCol: String, textCol: String, dim: Int): DataFrame = {
     require(dim > 0, s"dim must be positive: $dim")
-    val tk = col("tk")
-    val feats = concat(tk,
-      when(size(tk) >= 2,
-        transform(sequence(lit(2), size(tk)), i =>
-          concat(element_at(tk, i - 1), lit(" "), element_at(tk, i))))
-        .otherwise(array().cast("array<string>")))
     // Spread before the token+bigram explode: the feature fold is the
     // hot kernel and the driver's single-row-group inputs scan as one
     // task (no-op at production scale — see [[Par.spread]]).
     Par.spread(df, col(idCol))
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .select(col(idCol), explode(feats).as("f"))
+      .select(col(idCol), explode(feats(col("tk"))).as("f"))
       .select(col(idCol),
         pmod(Hashing.portableHash(col("f")), lit(dim.toLong)).as("bucket"))
       .groupBy(idCol, "bucket").agg(count(lit(1)).as("n"))
@@ -63,14 +67,8 @@ object Dsir {
     */
   def corpusFeatures(df: DataFrame, textCol: String, dim: Int): DataFrame = {
     require(dim > 0, s"dim must be positive: $dim")
-    val tk = col("tk")
-    val feats = concat(tk,
-      when(size(tk) >= 2,
-        transform(sequence(lit(2), size(tk)), i =>
-          concat(element_at(tk, i - 1), lit(" "), element_at(tk, i))))
-        .otherwise(array().cast("array<string>")))
     Par.spread(df).select(TextAnalysis.tokens(col(textCol)).as("tk"))
-      .select(explode(feats).as("f"))
+      .select(explode(feats(col("tk"))).as("f"))
       .select(pmod(Hashing.portableHash(col("f")), lit(dim.toLong))
         .as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))

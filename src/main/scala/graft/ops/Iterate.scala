@@ -31,6 +31,12 @@ import org.apache.spark.sql.DataFrame
   *
   * Loops with a fixed round count ≤ 10 (PageRank, LPA, BPE) sit
   * safely below the knee either way.
+  *
+  * Failure model of every `localCheckpoint`, here and in the operators
+  * that pin a reused frame: the checkpointed blocks live only in the
+  * executors' block managers, with no copy on reliable storage and no
+  * lineage back to the source. Losing an executor that holds one of
+  * them fails the job; Spark cannot recompute the frame.
   */
 object Iterate {
 

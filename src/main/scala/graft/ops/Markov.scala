@@ -23,6 +23,21 @@ import org.apache.spark.sql.functions._
   */
 object Markov {
 
+  /** Observed transition counts `n_ij` from state `i` to the next state
+    * `j` of the same entity, pinned: every caller reads them several
+    * times.
+    */
+  private def transitions(
+      df: DataFrame, entityCol: String, orderCol: String,
+      stateCol: String): DataFrame = {
+    val w = Window.partitionBy(entityCol).orderBy(orderCol)
+    df.select(col(entityCol), col(orderCol), col(stateCol).as("j"))
+      .withColumn("i", lag("j", 1).over(w))
+      .where(col("i").isNotNull)
+      .groupBy("i", "j").agg(count(lit(1)).as("n_ij"))
+      .localCheckpoint(true)
+  }
+
   /** Conditional entropy of the transition structure: per state the
     * entropy of ITS next-step distribution, plus the chain-level
     * H(next|cur) = Σ pᵢ·Hᵢ against the marginal H(next) — the
@@ -41,13 +56,7 @@ object Markov {
   def conditionalEntropy(
       df: DataFrame, entityCol: String, orderCol: String,
       stateCol: String): DataFrame = {
-    val w = Window.partitionBy(entityCol).orderBy(orderCol)
-    val trans = df
-      .select(col(entityCol), col(orderCol), col(stateCol).as("j"))
-      .withColumn("i", lag("j", 1).over(w))
-      .where(col("i").isNotNull)
-      .groupBy("i", "j").agg(count(lit(1)).as("n_ij"))
-      .localCheckpoint(true)
+    val trans = transitions(df, entityCol, orderCol, stateCol)
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val rows = trans
       .withColumn("n_i", sum("n_ij").over(Window.partitionBy("i")))
@@ -83,13 +92,7 @@ object Markov {
   def stationary(
       df: DataFrame, entityCol: String, orderCol: String,
       stateCol: String, rounds: Int): DataFrame = {
-    val w = Window.partitionBy(entityCol).orderBy(orderCol)
-    val trans = df
-      .select(col(entityCol), col(orderCol), col(stateCol).as("j"))
-      .withColumn("i", lag("j", 1).over(w))
-      .where(col("i").isNotNull)
-      .groupBy("i", "j").agg(count(lit(1)).as("n_ij"))
-      .localCheckpoint(true)
+    val trans = transitions(df, entityCol, orderCol, stateCol)
     val outTot = trans.groupBy("i").agg(sum("n_ij").as("n_i"))
     val p = trans.join(outTot, Seq("i"))
     val states = trans.select(col("i").as("state"))

@@ -33,6 +33,33 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** The frames both variants iterate over: node `ids` (`id`), the
+    * symmetrized edge set `sym` (`src`, `dst`; persisted, so the caller
+    * unpersists it) and each endpoint's degree `deg` (`id`, `deg`).
+    *
+    * Edges with an endpoint OUTSIDE `nodes` would silently leak rank
+    * mass (their contributions join to nothing) — both endpoints are
+    * restricted up front so the mass invariant (Σpr ≈ 1) holds on any
+    * input, the same absent-endpoint trap Components had to close.
+    */
+  private def graph(
+      nodes: DataFrame, idCol: String,
+      edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val ids = nodes.select(col(idCol).cast("long").as("id")).distinct()
+    val sym = edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .union(edges
+        .select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
+      .distinct()
+      .join(ids.withColumnRenamed("id", "src"), "src")
+      .join(ids.withColumnRenamed("id", "dst"), "dst")
+      .persist()
+    val deg = sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+      .withColumnRenamed("src", "id")
+    (ids, sym, deg)
+  }
+
   /** Rank nodes of an UNDIRECTED graph (edges are symmetrized; pass a
     * directed edge list through unchanged if direction matters by
     * symmetrizing upstream — this op treats each input pair as one
@@ -50,21 +77,7 @@ object PageRank {
       damping: Double = 0.85, iters: Int = 5, scale: Int = 6): DataFrame = {
     require(damping > 0 && damping < 1, s"damping in (0,1): $damping")
     require(iters > 0, s"iters must be positive: $iters")
-    val ids = nodes.select(col(idCol).cast("long").as("id")).distinct()
-    // Edges with an endpoint OUTSIDE `nodes` would silently leak rank
-    // mass (their contributions join to nothing) — restrict both
-    // endpoints up front so the mass invariant (Σpr ≈ 1) holds on any
-    // input, the same absent-endpoint trap Components had to close.
-    val sym = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges
-        .select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
-      .distinct()
-      .join(ids.withColumnRenamed("id", "src"), "src")
-      .join(ids.withColumnRenamed("id", "dst"), "dst")
-      .persist()
-    val deg = sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .withColumnRenamed("src", "id")
+    val (ids, sym, deg) = graph(nodes, idCol, edges, srcCol, dstCol)
     val endpoints = deg.select("id")
     // Graph metadata (node/isolate counts), not data — two count()
     // actions up front, none inside the loop.
@@ -126,17 +139,7 @@ object PageRank {
       damping: Double = 0.85, iters: Int = 5, scale: Int = 6): DataFrame = {
     require(damping > 0 && damping < 1, s"damping in (0,1): $damping")
     require(iters > 0, s"iters must be positive: $iters")
-    val ids = nodes.select(col(idCol).cast("long").as("id")).distinct()
-    val sym = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges
-        .select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
-      .distinct()
-      .join(ids.withColumnRenamed("id", "src"), "src")
-      .join(ids.withColumnRenamed("id", "dst"), "dst")
-      .persist()
-    val deg = sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .withColumnRenamed("src", "id")
+    val (ids, sym, deg) = graph(nodes, idCol, edges, srcCol, dstCol)
     val endpoints = deg.select("id")
     val seedIds = seeds.select(col(seedIdCol).cast("long").as("id"))
       .distinct().join(ids, "id").localCheckpoint(true)

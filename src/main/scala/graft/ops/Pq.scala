@@ -106,6 +106,55 @@ object Pq {
     assign(subVecs(corpus, idCol, vecCol, m, subDim), codebook)
       .select(col(idCol), col("sub"), col("cell_id").as("code"))
 
+  /** ADC table: one integer-micro squared distance `_tm` per (query,
+    * sub, code) from the query sub-vectors `qsv` to every centroid.
+    */
+  private def adcTable(qsv: DataFrame, codebook: DataFrame): DataFrame =
+    qsv.join(broadcast(codebook), Seq("sub"))
+      .select(col("query_id"), col("sub"), col("cell_id").as("code"),
+        round(dist2(col("v"), col("centvec")) * 1e6).cast("long")
+          .as("_tm"))
+
+  /** Sum the per-sub ADC terms of each (query, candidate) pair and keep
+    * the `k` nearest per query (ties to the smaller neighbor id).
+    */
+  private def rankAdc(terms: DataFrame, idCol: String, k: Int): DataFrame = {
+    val wq = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_micro").asc, col("neighbor_id").asc)
+    terms.groupBy(col("query_id"), col(idCol).as("neighbor_id"))
+      .agg(sum("_tm").as("adc_micro"))
+      .withColumn("rank", row_number().over(wq))
+      .where(col("rank") <= k)
+  }
+
+  /** Exact L2 ground truth: each query's (`query_id`, `qv`) `k` nearest
+    * corpus vectors, micro-snapped with the same tie-break as
+    * [[rankAdc]], flagged `exact_hit` = 1.
+    */
+  private def exactTopK(
+      corpus: DataFrame, q: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    val we = Window.partitionBy(col("query_id"))
+      .orderBy(col("_em").asc, col("neighbor_id").asc)
+    corpus
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+      .crossJoin(broadcast(q))
+      .where(col("neighbor_id") =!= col("query_id"))
+      .withColumn("_em", round(dist2(col("cv"), col("qv")) * 1e6)
+        .cast("long"))
+      .withColumn("_er", row_number().over(we))
+      .where(col("_er") <= k)
+      .select(col("query_id"), col("neighbor_id"), lit(1).as("exact_hit"))
+  }
+
+  /** One-row overall recall@k in integer parts per million. */
+  private def recallPpm(joined: DataFrame, k: Int): DataFrame =
+    joined
+      .agg(sum("exact_hit").cast("long").as("_hits"),
+        countDistinct("query_id").as("_nq"))
+      .select(expr(s"(_hits * 1000000) DIV (_nq * ${k}L)")
+        .as("recall_ppm"))
+
   /** Train + encode + ADC top-k + recall against the exact-L2 top-k.
     *
     * @return per (query, rank ≤ k): `neighbor_id`, `adc_micro` (the
@@ -122,41 +171,16 @@ object Pq {
     val codes = encode(corpus, idCol, vecCol, codebook, m, subDim)
     val qsv = subVecs(queries, idCol, vecCol, m, subDim)
       .select(col(idCol).as("query_id"), col("sub"), col("v"))
-    // ADC table: one integer-micro entry per (query, sub, cell).
-    val qtab = qsv.join(broadcast(codebook), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("cell_id").as("code"),
-        round(dist2(col("v"), col("centvec")) * 1e6).cast("long")
-          .as("_tm"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro").asc, col("neighbor_id").asc)
-    val approx = codes.join(broadcast(qtab), Seq("sub", "code"))
-      .where(col(idCol) =!= col("query_id"))
-      .groupBy(col("query_id"), col(idCol).as("neighbor_id"))
-      .agg(sum("_tm").as("adc_micro"))
-      .withColumn("rank", row_number().over(wq))
-      .where(col("rank") <= k)
-    // exact L2 ground truth, micro-snapped with the same tie-break
+    val approx = rankAdc(codes
+      .join(broadcast(adcTable(qsv, codebook)), Seq("sub", "code"))
+      .where(col(idCol) =!= col("query_id")), idCol, k)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val we = Window.partitionBy(col("query_id"))
-      .orderBy(col("_em").asc, col("neighbor_id").asc)
-    val exact = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .crossJoin(broadcast(q))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("_em", round(dist2(col("cv"), col("qv")) * 1e6)
-        .cast("long"))
-      .withColumn("_er", row_number().over(we))
-      .where(col("_er") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("exact_hit"))
-    val joined = approx.join(exact, Seq("query_id", "neighbor_id"), "left")
+    val joined = approx
+      .join(exactTopK(corpus, q, idCol, vecCol, k),
+        Seq("query_id", "neighbor_id"), "left")
       .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))
       .localCheckpoint(true)
-    val recall = joined
-      .agg(sum("exact_hit").cast("long").as("_hits"),
-        countDistinct("query_id").as("_nq"))
-      .select(expr(s"(_hits * 1000000) DIV (_nq * ${k}L)")
-        .as("recall_ppm"))
-    joined.crossJoin(broadcast(recall))
+    joined.crossJoin(broadcast(recallPpm(joined, k)))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("adc_micro"), col("exact_hit"), col("recall_ppm"))
   }
@@ -200,45 +224,22 @@ object Pq {
     val qsv = subVecs(q.select(col("query_id").as(idCol), col("qv")
         .as(vecCol)), idCol, vecCol, m, subDim)
       .select(col(idCol).as("query_id"), col("sub"), col("v"))
-    val qtab = qsv.join(broadcast(pqCb), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("cell_id").as("code"),
-        round(dist2(col("v"), col("centvec")) * 1e6).cast("long")
-          .as("_tm"))
+    val qtab = adcTable(qsv, pqCb)
     val admitted = cells.join(broadcast(probes), Seq("cell"))
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol))
       .localCheckpoint(true)
     val nCand = admitted.groupBy("query_id")
       .agg(count(lit(1)).as("n_candidates"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro").asc, col("neighbor_id").asc)
-    val approx = admitted.join(codes, Seq(idCol))
-      .join(broadcast(qtab), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col(idCol).as("neighbor_id"))
-      .agg(sum("_tm").as("adc_micro"))
-      .withColumn("rank", row_number().over(wq))
-      .where(col("rank") <= k)
-    val we = Window.partitionBy(col("query_id"))
-      .orderBy(col("_em").asc, col("neighbor_id").asc)
-    val exact = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .crossJoin(broadcast(q))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("_em", round(dist2(col("cv"), col("qv")) * 1e6)
-        .cast("long"))
-      .withColumn("_er", row_number().over(we))
-      .where(col("_er") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("exact_hit"))
-    val joined = approx.join(exact, Seq("query_id", "neighbor_id"), "left")
+    val approx = rankAdc(admitted.join(codes, Seq(idCol))
+      .join(broadcast(qtab), Seq("query_id", "sub", "code")), idCol, k)
+    val joined = approx
+      .join(exactTopK(corpus, q, idCol, vecCol, k),
+        Seq("query_id", "neighbor_id"), "left")
       .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))
       .join(broadcast(nCand), Seq("query_id"))
       .localCheckpoint(true)
-    val recall = joined
-      .agg(sum("exact_hit").cast("long").as("_hits"),
-        countDistinct("query_id").as("_nq"))
-      .select(expr(s"(_hits * 1000000) DIV (_nq * ${k}L)")
-        .as("recall_ppm"))
-    joined.crossJoin(broadcast(recall))
+    joined.crossJoin(broadcast(recallPpm(joined, k)))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("adc_micro"), col("exact_hit"), col("n_candidates"),
         col("recall_ppm"))

@@ -32,15 +32,13 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  /** BM25 top-k (Robertson/Sparck Jones; the `ln(1 + (N-df+0.5)/(df+0.5))`
-    * non-negative idf variant Lucene uses). Returns
-    * (`idCol`, `rank`, `score`) sorted by rank.
+  /** Tokenize a (docs, textCol) corpus once into the query terms'
+    * postings (`idCol`, `dl`, `term`, `tf`; pruned before the shuffle)
+    * and the corpus stats (`n_docs`, `avgdl`).
     */
-  def bm25TopK(
+  private def queryPostings(
       docs: DataFrame, idCol: String, textCol: String,
-      queryTerms: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+      queryTerms: Seq[String]): (DataFrame, DataFrame) = {
     val toks = docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
       .withColumn("dl", size(col("tk")))
@@ -51,6 +49,19 @@ object Retrieval {
       .where(col("term").isin(queryTerms: _*))
       .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
+    (postings, stats)
+  }
+
+  /** BM25 top-k (Robertson/Sparck Jones; the `ln(1 + (N-df+0.5)/(df+0.5))`
+    * non-negative idf variant Lucene uses). Returns
+    * (`idCol`, `rank`, `score`) sorted by rank.
+    */
+  def bm25TopK(
+      docs: DataFrame, idCol: String, textCol: String,
+      queryTerms: Seq[String], k: Int = 10,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+    val (postings, stats) = queryPostings(docs, idCol, textCol, queryTerms)
     scoreFromPostings(postings, stats, idCol, k, k1, b)
   }
 
@@ -243,16 +254,7 @@ object Retrieval {
   private def fieldScores(
       docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k1: Double, b: Double): DataFrame = {
-    val toks = docs
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .withColumn("dl", size(col("tk")))
-    val stats = toks.agg(
-      count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val postings = toks
-      .select(col(idCol), col("dl"), explode(col("tk")).as("term"))
-      .where(col("term").isin(queryTerms: _*))
-      .groupBy(col(idCol), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    val (postings, stats) = queryPostings(docs, idCol, textCol, queryTerms)
     rawScores(postings, stats, idCol, k1, b)
   }
 

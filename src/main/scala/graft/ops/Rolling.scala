@@ -156,15 +156,7 @@ object Rolling {
   def rollingMedian(
       df: DataFrame, groupCol: String, dayCol: String,
       window: Int): DataFrame = {
-    val counted = df
-      .select(col(groupCol).as("g"), col(dayCol).cast("long").as("d"))
-      .where(col("g").isNotNull && col("d").isNotNull)
-      .groupBy("g", "d").agg(count(lit(1)).as("x"))
-    val grid = counted.groupBy("g")
-      .agg(min("d").as("_lo"), max("d").as("_hi"))
-      .select(col("g"), explode(sequence(col("_lo"), col("_hi"))).as("d"))
-    val daily = grid.join(counted, Seq("g", "d"), "left")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
+    val daily = Seasonal.dailyCounts(df, groupCol, dayCol)
     val contrib = daily.select(col("g"),
         explode(sequence(lit(0), lit(window - 1))).as("j"),
         (col("d") + col("j").cast("long")).as("d"), col("x").as("xp"))
@@ -191,15 +183,7 @@ object Rolling {
       df: DataFrame, groupCol: String, dayCol: String,
       alpha: Double, window: Int, kSigma: Int,
       minPrior: Int): DataFrame = {
-    val counted = df
-      .select(col(groupCol).as("g"), col(dayCol).cast("long").as("d"))
-      .where(col("g").isNotNull && col("d").isNotNull)
-      .groupBy("g", "d").agg(count(lit(1)).as("x"))
-    val grid = counted.groupBy("g")
-      .agg(min("d").as("_lo"), max("d").as("_hi"))
-      .select(col("g"), explode(sequence(col("_lo"), col("_hi"))).as("d"))
-    val daily = grid.join(counted, Seq("g", "d"), "left")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
+    val daily = Seasonal.dailyCounts(df, groupCol, dayCol)
     // Day d−j contributes to day d with weight α(1−α)^(j−1) — the
     // weights are PRE-COMPUTED Scala literals (shared with the
     // oracle via [[ewmaWeights]]), so no cross-engine pow() ever

@@ -54,6 +54,23 @@ object Seasonal {
         col("n_anomaly_days"))
   }
 
+  /** Daily event counts per group on a gap-filled calendar: `g`, `d`
+    * (the day as a long), `x` — one row per day from each group's
+    * first to its last event day, missing days counted as 0.
+    */
+  private[ops] def dailyCounts(
+      df: DataFrame, groupCol: String, dayCol: String): DataFrame = {
+    val counted = df
+      .select(col(groupCol).as("g"), col(dayCol).cast("long").as("d"))
+      .where(col("g").isNotNull && col("d").isNotNull)
+      .groupBy("g", "d").agg(count(lit(1)).as("x"))
+    counted.groupBy("g")
+      .agg(min("d").as("_lo"), max("d").as("_hi"))
+      .select(col("g"), explode(sequence(col("_lo"), col("_hi"))).as("d"))
+      .join(counted, Seq("g", "d"), "left")
+      .withColumn("x", coalesce(col("x"), lit(0L)))
+  }
+
   /** Sample autocorrelation function of each group's daily volume at
     * lags 1..`maxLag` — the "is there a weekly cycle / is yesterday
     * predictive" diagnostic that decides whether [[dowProfile]]'s
@@ -73,16 +90,7 @@ object Seasonal {
   def acf(
       df: DataFrame, groupCol: String, dayCol: String,
       maxLag: Int): DataFrame = {
-    val counted = df
-      .select(col(groupCol).as("g"), col(dayCol).cast("long").as("d"))
-      .where(col("g").isNotNull && col("d").isNotNull)
-      .groupBy("g", "d").agg(count(lit(1)).as("x"))
-    val grid = counted.groupBy("g")
-      .agg(min("d").as("_lo"), max("d").as("_hi"))
-      .select(col("g"),
-        explode(sequence(col("_lo"), col("_hi"))).as("d"))
-    val daily = grid.join(counted, Seq("g", "d"), "left")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
+    val daily = dailyCounts(df, groupCol, dayCol)
     val mom = daily.groupBy("g").agg(
       count(lit(1)).as("n_days"), sum("x").as("_sx"),
       sum(col("x") * col("x")).as("_sxx"))
@@ -235,15 +243,7 @@ object Seasonal {
     */
   def decompose(
       df: DataFrame, groupCol: String, dayCol: String): DataFrame = {
-    val counted = df
-      .select(col(groupCol).as("g"), col(dayCol).cast("long").as("d"))
-      .where(col("g").isNotNull && col("d").isNotNull)
-      .groupBy("g", "d").agg(count(lit(1)).as("x"))
-    val grid = counted.groupBy("g")
-      .agg(min("d").as("_lo"), max("d").as("_hi"))
-      .select(col("g"), explode(sequence(col("_lo"), col("_hi"))).as("d"))
-    val daily = grid.join(counted, Seq("g", "d"), "left")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
+    val daily = dailyCounts(df, groupCol, dayCol)
     val w7 = Window.partitionBy("g").orderBy("d").rowsBetween(-3L, 3L)
     val trended = daily
       .withColumn("_s7", sum("x").over(w7))

@@ -30,9 +30,27 @@ object Similarity {
     */
   def dot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
 
-  /** Cosine similarity of two float-array columns, computed in double. */
+  /** Cosine similarity of two float- or double-array columns, computed
+    * in double with `graft_dot`'s left-to-right sums (the oracle's
+    * `list_sum` order).
+    */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+
+  /** Exact-cosine tail shared by every top-k tier: score the
+    * (`query_id`, `qvec`, `neighbor_id`, `cvec`) candidate pairs, keep
+    * the `k` best per query (ties to the smaller neighbor id), and
+    * emit `query_id`, `neighbor_id`, `rank`, `cos` (rounded to 4).
+    */
+  private def rankByCosine(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    pairs
+      .withColumn("cos", cosine(col("qvec"), col("cvec")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
+  }
 
   /** Exact top-k neighbors for each query vector. `queries` should be
     * small (it is broadcast); `corpus` can be arbitrarily large.
@@ -42,15 +60,8 @@ object Similarity {
       k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
+    rankByCosine(c.crossJoin(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** The ±1 hyperplane component for (plane, dim): parity of the same
@@ -92,6 +103,16 @@ object Similarity {
         when(dot(vec, typedlit(signs)) >= 0, lit(1L << lp)).otherwise(lit(0L))
       }.reduce(_ + _))
 
+  /** Raw (unrounded) JL projection of a vector column — null for
+    * wrong-size vectors.
+    */
+  private def jlRaw(vec: Column, m: Int, dim: Int): Column = {
+    val scale = lit(math.sqrt(m.toDouble))
+    when(size(vec) === dim,
+      array(hyperplaneSigns(m, dim).map(signs =>
+        dot(vec, typedlit(signs.toSeq)) / scale): _*))
+  }
+
   /** Johnson–Lindenstrauss random projection onto `m` ±1 hyperplanes
     * from the shared sign universe, scaled by `1/sqrt(m)` (Achlioptas
     * 2003: ±1 entries satisfy the JL lemma) — the dimensionality
@@ -109,25 +130,6 @@ object Similarity {
     *         `norm_ratio` (rounded to 4; null for a zero/wrong-size
     *         vector)
     */
-  /** Raw (unrounded) JL projection of a vector column — null for
-    * wrong-size vectors.
-    */
-  private def jlRaw(vec: Column, m: Int, dim: Int): Column = {
-    val scale = lit(math.sqrt(m.toDouble))
-    when(size(vec) === dim,
-      array(hyperplaneSigns(m, dim).map(signs =>
-        dot(vec, typedlit(signs.toSeq)) / scale): _*))
-  }
-
-  /** Cosine over two DOUBLE-array columns (the projected space) —
-    * left-to-right sums, mirroring the oracle's `list_sum`. Rides the
-    * codegen'd `graft_dot` (r19: the kernel now accepts double arrays;
-    * the interpreted HOF fold it replaces summed in the same order, so
-    * values are bit-identical).
-    */
-  private def cosineDbl(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
   def jlProject(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int = 16, dim: Int = 64): DataFrame = {
@@ -168,18 +170,11 @@ object Similarity {
       col(vecCol).as("cvec"), jlRaw(col(vecCol), m, dim).as("cy"))
     val wp = Window.partitionBy(col("query_id"))
       .orderBy(col("pcos").desc, col("neighbor_id"))
-    val wx = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
+    rankByCosine(c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("pcos", cosineDbl(col("qy"), col("cy")))
+      .withColumn("pcos", cosine(col("qy"), col("cy")))
       .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= shortlist)
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(wx))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos"))
+      .filter(col("prank") <= shortlist), k)
   }
 
   /** Approximate top-k: candidates restricted to the query's LSH bucket,
@@ -196,15 +191,8 @@ object Similarity {
     val c = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
       .withColumn("bucket", hyperplaneBucket(col("cvec"), planes, dim))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
+    rankByCosine(c.join(broadcast(q), Seq("bucket"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Multi-table LSH top-k — the standard recall fix for single-table
@@ -246,20 +234,12 @@ object Similarity {
       .join(broadcast(tabled(queries, "query_id")), Seq("tbl", "bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = cand
+    rankByCosine(cand
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec")),
         "neighbor_id")
       .join(broadcast(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))),
-        "query_id")
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos"))
+        "query_id"), k)
   }
 
   /** IVF-flat approximate top-k: corpus vectors are assigned to their
@@ -293,15 +273,8 @@ object Similarity {
     val q = assignCells(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec")),
       "query_id", "qvec", nProbe)
-    val scored = c.join(broadcast(q), Seq("cell_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
+    rankByCosine(c.join(broadcast(q), Seq("cell_id"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** IVF + SQ8 search — the memory-bound trick that makes a 100 TB
@@ -405,16 +378,9 @@ object Similarity {
       .select(col("query_id"), col("qvec"), col("neighbor_id"))
     // exact re-rank: the ONLY step that touches shortlist float
     // vectors — the tiny shortlist broadcasts against the corpus scan
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    corpus
+    rankByCosine(corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-      .join(broadcast(short), Seq("neighbor_id"))
-      .withColumn("cos", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos"))
+      .join(broadcast(short), Seq("neighbor_id")), k)
   }
 
   /** Deterministic codebook training for [[ivfTopK]] — the index-build

@@ -533,6 +533,22 @@ object TextAnalysis {
       .select(col("rank"), col("pair"), col("cnt"))
   }
 
+  /** Non-empty lines of `text`, and how many of them open with a bullet
+    * or end in an ellipsis — the Gopher line-gate inputs, as longs.
+    */
+  private def lineCounts(text: Column): (Column, Column, Column) = {
+    val lines = filter(split(text, "\n"), l => l =!= "")
+    (size(lines).cast("long"),
+      size(filter(lines, l =>
+        l.startsWith("- ") || l.startsWith("* ") || l.startsWith("•")))
+        .cast("long"),
+      size(filter(lines, l =>
+        l.endsWith("...") || l.endsWith("…"))).cast("long"))
+  }
+
+  /** A passed gate as 1, a failed one as 0. */
+  private def passes(c: Column): Column = when(c, 1).otherwise(0)
+
   /** Gopher quality gates (Rae et al. 2021, Appendix A1) — the
     * rule-based document filter every web-scale corpus applies before
     * model-based scoring: word-count bounds, mean-word-length bounds,
@@ -571,23 +587,16 @@ object TextAnalysis {
     val nStop = size(array_intersect(
       array_distinct(transform(words, w => lower(w))),
       array(requiredStops.map(lit): _*))).cast("long")
-    val lines = filter(split(text, "\n"), l => l =!= "")
-    val nLines = size(lines).cast("long")
-    val nBullet = size(filter(lines, l =>
-      l.startsWith("- ") || l.startsWith("* ") || l.startsWith("•")))
-      .cast("long")
-    val nEllipsis = size(filter(lines, l =>
-      l.endsWith("...") || l.endsWith("…"))).cast("long")
-    def gate(c: Column): Column = when(c, 1).otherwise(0)
+    val (nLines, nBullet, nEllipsis) = lineCounts(text)
     val gates = Seq(
-      "g_word_count" -> gate(nWords.between(50L, 100000L)),
-      "g_mean_len" -> gate(nWords > 0 &&
+      "g_word_count" -> passes(nWords.between(50L, 100000L)),
+      "g_mean_len" -> passes(nWords > 0 &&
         lit(3L) * nWords <= nChars && nChars <= lit(10L) * nWords),
-      "g_symbol" -> gate(lit(10L) * nSym <= nWords),
-      "g_alpha" -> gate(lit(5L) * nAlpha >= lit(4L) * nWords),
-      "g_stopwords" -> gate(nStop >= 2L),
-      "g_bullets" -> gate(lit(10L) * nBullet <= lit(9L) * nLines),
-      "g_ellipsis" -> gate(lit(10L) * nEllipsis <= lit(3L) * nLines))
+      "g_symbol" -> passes(lit(10L) * nSym <= nWords),
+      "g_alpha" -> passes(lit(5L) * nAlpha >= lit(4L) * nWords),
+      "g_stopwords" -> passes(nStop >= 2L),
+      "g_bullets" -> passes(lit(10L) * nBullet <= lit(9L) * nLines),
+      "g_ellipsis" -> passes(lit(10L) * nEllipsis <= lit(3L) * nLines))
     df.select(
       col(idCol) +: nWords.as("n_words") +:
         gates.map { case (n, c) => c.as(n) } :+
@@ -653,23 +662,16 @@ object TextAnalysis {
         array(spaceWords.map(lit): _*))).cast("long")
     val nStop = markers.foldLeft(nStopTok)((acc, m) =>
       acc + when(text.contains(m), 1L).otherwise(0L))
-    val lines = filter(split(text, "\n"), l => l =!= "")
-    val nLines = size(lines).cast("long")
-    val nBullet = size(filter(lines, l =>
-      l.startsWith("- ") || l.startsWith("* ") || l.startsWith("•")))
-      .cast("long")
-    val nEllipsis = size(filter(lines, l =>
-      l.endsWith("...") || l.endsWith("…"))).cast("long")
-    def gate(c: Column): Column = when(c, 1).otherwise(0)
+    val (nLines, nBullet, nEllipsis) = lineCounts(text)
     Seq(
-      "g_word_count" -> gate(nWords.between(50L, 100000L)),
-      "g_mean_len" -> gate(nWords > 0 &&
+      "g_word_count" -> passes(nWords.between(50L, 100000L)),
+      "g_mean_len" -> passes(nWords > 0 &&
         lit(2L) * nWords <= nChars && nChars <= lit(10L) * nWords),
-      "g_symbol" -> gate(lit(10L) * nSym <= nWords),
-      "g_alpha" -> gate(lit(5L) * nAlpha >= lit(4L) * nWords),
-      "g_stopwords" -> gate(nStop >= 2L),
-      "g_bullets" -> gate(lit(10L) * nBullet <= lit(9L) * nLines),
-      "g_ellipsis" -> gate(lit(10L) * nEllipsis <= lit(3L) * nLines))
+      "g_symbol" -> passes(lit(10L) * nSym <= nWords),
+      "g_alpha" -> passes(lit(5L) * nAlpha >= lit(4L) * nWords),
+      "g_stopwords" -> passes(nStop >= 2L),
+      "g_bullets" -> passes(lit(10L) * nBullet <= lit(9L) * nLines),
+      "g_ellipsis" -> passes(lit(10L) * nEllipsis <= lit(3L) * nLines))
   }
 
   /** Top-k characteristic terms per document by TF-IDF — the standard

@@ -370,7 +370,11 @@ private[queries] object QueriesCore {
             .otherwise(concat(col("p_brand"), lit(" [60%]; "), col("p_type"), lit(" [40%]"))))
         .transform(Ownership.split("Owner", "p_retailprice", Ownership.EqualShareDefault))
         .groupBy(col("Company").as("company"))
-        .agg(round(sum("Capacity_allocated"), 2).as("alloc"), count(lit(1)).as("n"))
+        // Exact decimal sum, rounded once: a double sum can land on
+        // either side of a 2-decimal tie (500.005 x 3), and the two
+        // engines then round it differently.
+        .agg(round(sum(col("Capacity_allocated").cast("decimal(20,6)")), 2)
+          .cast("double").as("alloc"), count(lit(1)).as("n"))
         .orderBy("company"),
       Some("""WITH o AS (
              |  SELECT p_partkey, p_retailprice,
@@ -385,7 +389,8 @@ private[queries] object QueriesCore {
              |  CAST(NULLIF(regexp_extract(ow, '(\d+)%', 1), '') AS DOUBLE) / 100 AS share
              |  FROM e)
              |SELECT company,
-             |  round(sum(p_retailprice * coalesce(share, 1.0 / n_owners)), 2) AS alloc,
+             |  CAST(round(sum(CAST(p_retailprice * coalesce(share, 1.0 / n_owners)
+             |    AS DECIMAL(20,6))), 2) AS DOUBLE) AS alloc,
              |  count(*) AS n
              |FROM sh GROUP BY company ORDER BY company""".stripMargin)),
 
@@ -526,24 +531,10 @@ private[queries] object QueriesCore {
           emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)
           .orderBy("query_id", "rank")
       },
-      Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
+      Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
              |           FROM embeddings WHERE vec_id < 5),
              |c AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
-             |scored AS (
-             |  SELECT query_id, neighbor_id,
-             |    list_sum(list_transform(qvec, (x, i) ->
-             |      CAST(x AS DOUBLE) * CAST(cvec[i] AS DOUBLE))) /
-             |    (sqrt(list_sum(list_transform(qvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-             |     sqrt(list_sum(list_transform(cvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-             |  FROM c, q WHERE neighbor_id <> query_id),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id,
-             |    row_number() OVER (PARTITION BY query_id
-             |                       ORDER BY cos DESC, neighbor_id) AS "rank", cos
-             |  FROM scored)
-             |SELECT query_id, neighbor_id, "rank", round(cos, 4) AS cos
-             |FROM ranked WHERE "rank" <= 3
-             |ORDER BY query_id, "rank"""".stripMargin)),
+             |${cosineTop3Sql("c, q WHERE neighbor_id <> query_id")}""".stripMargin)),
 
     // 60-bit SimHash signatures (Dedup.simhash)
     QueryDef("q30_simhash",
@@ -771,22 +762,7 @@ private[queries] object QueriesCore {
              |    company, year, coalesce(sum(value), 0.0) AS capacity
              |  FROM val GROUP BY loc_id, plant, country, region, lat, lon,
              |    technology, company, year)
-             |SELECT roll.loc_id AS asset_id, roll.plant AS asset_name,
-             |    CAST(NULL AS VARCHAR) AS company_id, roll.company AS company_name,
-             |    CASE WHEN roll.country = 'Kosovo' THEN 'XK' ELSE cd.iso2 END AS country_iso2,
-             |    roll.country AS country_name, roll.region,
-             |    coalesce(CAST(roll.lat AS VARCHAR), 'NA') || ', ' ||
-             |      coalesce(CAST(roll.lon AS VARCHAR), 'NA') AS coordinates,
-             |    CAST(NULL AS DOUBLE) AS workforce_size,
-             |    CAST(NULL AS VARCHAR) AS workforce_source,
-             |    'Power' AS sector, roll.technology, roll.capacity,
-             |    'MW' AS capacity_unit, roll.year AS production_year,
-             |    CAST(NULL AS DOUBLE) AS plant_age_years,
-             |    CAST(NULL AS DOUBLE) AS plant_age_rank,
-             |    CAST(NULL AS DOUBLE) AS capacity_factor,
-             |    CAST(NULL AS DOUBLE) AS emission_factor
-             |FROM roll LEFT JOIN """.stripMargin + CountryDim.duckValuesSql +
-           """ ON roll.country = cd.country_name
+             |""".stripMargin + gemFinalizeSql + """
              |ORDER BY asset_id, company_name NULLS FIRST, production_year,
              |  country_name, technology""".stripMargin)),
 
@@ -795,10 +771,19 @@ private[queries] object QueriesCore {
     QueryDef("q36_totals",
       (s, dir) => {
         val n = col("n_nationkey")
-        def finalCols(first: Seq[org.apache.spark.sql.Column]) = first ++ Seq(
+        def finalCols(first: Seq[org.apache.spark.sql.Column], technology: String,
+            capacity: org.apache.spark.sql.Column) = first ++ Seq(
           lit(null).cast("double").as("workforce_size"),
           lit(null).cast("string").as("workforce_source"),
-          lit("Power").as("sector"))
+          lit("Power").as("sector"),
+          lit(technology).as("technology"),
+          capacity.as("capacity"),
+          lit("MW").as("capacity_unit"),
+          lit(2030).as("production_year"),
+          lit(null).cast("double").as("plant_age_years"),
+          lit(null).cast("double").as("plant_age_rank"),
+          lit(null).cast("double").as("capacity_factor"),
+          lit(null).cast("double").as("emission_factor"))
         val trackerA = t(s, dir, "nation").select(finalCols(Seq(
           concat(lit("A"), n).as("asset_id"),
           concat(lit("Asset "), n).as("asset_name"),
@@ -807,15 +792,7 @@ private[queries] object QueriesCore {
           elt(pmod(n, lit(4)) + 1, lit("DE"), lit("FR"), lit("CN"), lit("JP")).as("country_iso2"),
           elt(pmod(n, lit(4)) + 1, lit("Germany"), lit("France"), lit("China"), lit("Japan")).as("country_name"),
           concat(lit("Region "), col("n_regionkey")).as("region"),
-          lit("50.0, 8.0").as("coordinates"))) ++ Seq(
-          lit("CoalCap").as("technology"),
-          (n * 10.0).as("capacity"),
-          lit("MW").as("capacity_unit"),
-          lit(2030).as("production_year"),
-          lit(null).cast("double").as("plant_age_years"),
-          lit(null).cast("double").as("plant_age_rank"),
-          lit(null).cast("double").as("capacity_factor"),
-          lit(null).cast("double").as("emission_factor")): _*)
+          lit("50.0, 8.0").as("coordinates")), "CoalCap", (n * 10.0)): _*)
         val r = col("r_regionkey")
         val trackerB = t(s, dir, "region").select(finalCols(Seq(
           concat(lit("B"), r).as("asset_id"),
@@ -825,15 +802,7 @@ private[queries] object QueriesCore {
           lit("DE").as("country_iso2"),
           lit("Germany").as("country_name"),
           concat(lit("Region "), r).as("region"),
-          lit("51.0, 9.0").as("coordinates"))) ++ Seq(
-          lit("RenewablesCap").as("technology"),
-          (r * 100.0).as("capacity"),
-          lit("MW").as("capacity_unit"),
-          lit(2030).as("production_year"),
-          lit(null).cast("double").as("plant_age_years"),
-          lit(null).cast("double").as("plant_age_rank"),
-          lit(null).cast("double").as("capacity_factor"),
-          lit(null).cast("double").as("emission_factor")): _*)
+          lit("51.0, 9.0").as("coordinates")), "RenewablesCap", (r * 100.0)): _*)
         val steel = t(s, dir, "region").select(finalCols(Seq(
           concat(lit("S"), r).as("asset_id"),
           concat(lit("Steel "), r).as("asset_name"),
@@ -842,15 +811,7 @@ private[queries] object QueriesCore {
           lit("US").as("country_iso2"),
           lit("United States").as("country_name"),
           concat(lit("Region "), r).as("region"),
-          lit("40.0, -75.0").as("coordinates"))) ++ Seq(
-          lit("SteelCap").as("technology"),
-          (r * 7.0).as("capacity"),
-          lit("MW").as("capacity_unit"),
-          lit(2030).as("production_year"),
-          lit(null).cast("double").as("plant_age_years"),
-          lit(null).cast("double").as("plant_age_rank"),
-          lit(null).cast("double").as("capacity_factor"),
-          lit(null).cast("double").as("emission_factor")): _*)
+          lit("40.0, -75.0").as("coordinates")), "SteelCap", (r * 7.0)): _*)
         val factors = t(s, dir, "nation").select(
           elt(pmod(n, lit(2)) + 1, lit("CoalCap"), lit("GasCap")).as("technology"),
           elt(pmod(n, lit(3)) + 1, lit("DE"), lit("FR"), lit("CN")).as("country_iso2"),
@@ -1216,21 +1177,8 @@ private[queries] object QueriesCore {
              |q AS (SELECT vec_id AS query_id, embedding AS qvec, bucket
              |      FROM bucketed WHERE vec_id < 10),
              |c AS (SELECT vec_id AS neighbor_id, embedding AS cvec, bucket FROM bucketed),
-             |scored AS (
-             |  SELECT query_id, neighbor_id,
-             |    list_sum(list_transform(qvec, (x, i) ->
-             |      CAST(x AS DOUBLE) * CAST(cvec[i] AS DOUBLE))) /
-             |    (sqrt(list_sum(list_transform(qvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-             |     sqrt(list_sum(list_transform(cvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-             |  FROM c JOIN q USING (bucket) WHERE neighbor_id <> query_id),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id,
-             |    row_number() OVER (PARTITION BY query_id
-             |                       ORDER BY cos DESC, neighbor_id) AS "rank", cos
-             |  FROM scored)
-             |SELECT query_id, neighbor_id, "rank", round(cos, 4) AS cos
-             |FROM ranked WHERE "rank" <= 3
-             |ORDER BY query_id, "rank"""".stripMargin)),
+             |${cosineTop3Sql(
+                 "c JOIN q USING (bucket) WHERE neighbor_id <> query_id")}""".stripMargin)),
 
     // IVF-flat approximate top-k (Similarity.ivfTopK): corpus assigned
     // to nearest-centroid cells (8 deterministic centroids = the first
@@ -1245,7 +1193,7 @@ private[queries] object QueriesCore {
           "vec_id", "embedding", k = 3, nProbe = 2)
           .orderBy("query_id", "rank")
       },
-      Some("""WITH cents AS (
+      Some(s"""WITH cents AS (
              |  SELECT vec_id AS cell_id, embedding AS centvec
              |  FROM embeddings WHERE vec_id < 8),
              |cscore AS (
@@ -1264,22 +1212,8 @@ private[queries] object QueriesCore {
              |query_cells AS (
              |  SELECT vec_id AS query_id, embedding AS qvec, cell_id
              |  FROM ranked_cells WHERE crn <= 2 AND vec_id BETWEEN 100 AND 104),
-             |scored AS (
-             |  SELECT query_id, neighbor_id,
-             |    list_sum(list_transform(qvec, (x, i) ->
-             |      CAST(x AS DOUBLE) * CAST(cvec[i] AS DOUBLE))) /
-             |    (sqrt(list_sum(list_transform(qvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-             |     sqrt(list_sum(list_transform(cvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-             |  FROM corpus_cells JOIN query_cells USING (cell_id)
-             |  WHERE neighbor_id <> query_id),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id,
-             |    row_number() OVER (PARTITION BY query_id
-             |                       ORDER BY cos DESC, neighbor_id) AS "rank", cos
-             |  FROM scored)
-             |SELECT query_id, neighbor_id, "rank", round(cos, 4) AS cos
-             |FROM ranked WHERE "rank" <= 3
-             |ORDER BY query_id, "rank"""".stripMargin)),
+             |${cosineTop3Sql("corpus_cells JOIN query_cells USING (cell_id)" +
+                 "\n  WHERE neighbor_id <> query_id")}""".stripMargin)),
 
     // Skew-safe two-phase salted aggregation (Skew.saltedSum) — result
     // ≡ the plain rollup; the plan sprays hot keys over 16 reducers.
@@ -1411,22 +1345,7 @@ private[queries] object QueriesCore {
              |    'RenewablesCap' AS technology, company, year,
              |    coalesce(sum(value), 0.0) AS capacity
              |  FROM val GROUP BY loc_id, plant, country, region, lat, lon, company, year)
-             |SELECT roll.loc_id AS asset_id, roll.plant AS asset_name,
-             |    CAST(NULL AS VARCHAR) AS company_id, roll.company AS company_name,
-             |    CASE WHEN roll.country = 'Kosovo' THEN 'XK' ELSE cd.iso2 END AS country_iso2,
-             |    roll.country AS country_name, roll.region,
-             |    coalesce(CAST(roll.lat AS VARCHAR), 'NA') || ', ' ||
-             |      coalesce(CAST(roll.lon AS VARCHAR), 'NA') AS coordinates,
-             |    CAST(NULL AS DOUBLE) AS workforce_size,
-             |    CAST(NULL AS VARCHAR) AS workforce_source,
-             |    'Power' AS sector, roll.technology, roll.capacity,
-             |    'MW' AS capacity_unit, roll.year AS production_year,
-             |    CAST(NULL AS DOUBLE) AS plant_age_years,
-             |    CAST(NULL AS DOUBLE) AS plant_age_rank,
-             |    CAST(NULL AS DOUBLE) AS capacity_factor,
-             |    CAST(NULL AS DOUBLE) AS emission_factor
-             |FROM roll LEFT JOIN """.stripMargin + CountryDim.duckValuesSql +
-           """ ON roll.country = cd.country_name
+             |""".stripMargin + gemFinalizeSql + """
              |ORDER BY asset_id, company_name NULLS FIRST, production_year,
              |  country_name""".stripMargin)),
 

@@ -53,32 +53,10 @@ private[queries] object QueriesExtra {
         Itemsets.rules(basket, "l_orderkey", "p_brand", minSupport = 50)
           .orderBy("antecedent", "consequent")
       },
-      Some("""WITH b AS (
+      Some(s"""WITH b AS (
              |  SELECT DISTINCT l_orderkey AS basket, p_brand AS item
              |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-             |nb AS (SELECT count(DISTINCT basket) AS n FROM b),
-             |l1 AS (SELECT item, count(*) AS n_item FROM b
-             |       GROUP BY 1 HAVING count(*) >= 50),
-             |fb AS (SELECT b.basket, b.item FROM b JOIN l1 USING (item)),
-             |p AS (SELECT x.item AS item_a, y.item AS item_b,
-             |        count(*) AS n_both
-             |      FROM fb x JOIN fb y
-             |        ON x.basket = y.basket AND x.item < y.item
-             |      GROUP BY 1, 2 HAVING count(*) >= 50),
-             |d AS (SELECT item_a AS antecedent, item_b AS consequent,
-             |        n_both FROM p
-             |      UNION ALL
-             |      SELECT item_b, item_a, n_both FROM p)
-             |SELECT antecedent, consequent, n_both,
-             |  la.n_item AS n_ante, lc.n_item AS n_cons,
-             |  round(CAST(n_both AS DOUBLE) / nb.n, 6) AS support,
-             |  round(CAST(n_both AS DOUBLE) / la.n_item, 6) AS confidence,
-             |  round(CAST(n_both AS DOUBLE) * nb.n /
-             |    (CAST(la.n_item AS DOUBLE) * lc.n_item), 6) AS lift
-             |FROM d
-             |JOIN l1 la ON d.antecedent = la.item
-             |JOIN l1 lc ON d.consequent = lc.item, nb
-             |ORDER BY 1, 2""".stripMargin)),
+             |${assocRulesSql(minSupport = 50)}""".stripMargin)),
 
     // Robust per-language outlier gate (ops/Outliers.madSummary):
     // median / MAD with the 1.4826 sigma-equivalence factor, k=3 —
@@ -172,33 +150,11 @@ private[queries] object QueriesExtra {
     // once, so the two agree exactly.
     QueryDef("q165_triangle_stats",
       (s, dir) => {
-        val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-        val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-        val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        val supp = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-        val edges = cust
-          .join(ord, col("c_custkey") === col("o_custkey"))
-          .join(li, col("o_orderkey") === col("l_orderkey"))
-          .join(supp, col("l_suppkey") === col("s_suppkey"))
-          .groupBy("c_nationkey", "s_nationkey")
-          .agg(count(lit(1)).as("n"))
-          .where(col("n") >= 100)
+        val edges = tradeEdges(s, dir)
         GraphMetrics.triangleStats(edges, "c_nationkey", "s_nationkey")
           .orderBy("node")
       },
-      Some("""WITH tr AS (
-             |  SELECT c_nationkey AS x, s_nationkey AS y, count(*) AS n
-             |  FROM customer
-             |  JOIN orders ON c_custkey = o_custkey
-             |  JOIN lineitem ON o_orderkey = l_orderkey
-             |  JOIN supplier ON l_suppkey = s_suppkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 100),
-             |e AS (SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-             |      FROM tr WHERE x <> y),
-             |deg AS (SELECT node, count(*) AS degree FROM (
-             |          SELECT a AS node FROM e
-             |          UNION ALL SELECT b FROM e)
-             |        GROUP BY 1),
+      Some(s"""$tradeGraphCtes
              |tri AS (SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
              |        FROM e e1
              |        JOIN e e2 ON e1.b = e2.a
@@ -1354,26 +1310,11 @@ private[queries] object QueriesExtra {
           lo = 0.0, hi = 1024.0, nbins = 256, eps = 1e-4)
           .orderBy("lang")
       },
-      Some("""WITH aa AS (
+      Some(s"""WITH aa AS (
              |  SELECT lang, CAST(least(greatest(
              |      floor(CAST(n_chars AS DOUBLE) / 4.0), 0), 255)
              |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-             |bb AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars + 100 AS DOUBLE) / 4.0), 0), 255)
-             |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 <> 0 AND n_chars IS NOT NULL),
-             |langs AS (SELECT DISTINCT lang FROM documents),
-             |grid AS (SELECT lang, s AS b FROM langs
-             |         CROSS JOIN (SELECT unnest(range(256)) AS s)),
-             |ka AS (SELECT lang, b, count(*) AS c FROM aa GROUP BY 1, 2),
-             |kb AS (SELECT lang, b, count(*) AS c FROM bb GROUP BY 1, 2),
-             |j AS (SELECT g.lang, g.b, coalesce(ka.c, 0) AS ca,
-             |        coalesce(kb.c, 0) AS cb
-             |      FROM grid g
-             |      LEFT JOIN ka ON g.lang = ka.lang AND g.b = ka.b
-             |      LEFT JOIN kb ON g.lang = kb.lang AND g.b = kb.b),
+             |$nCharsBinCtes
              |cum AS (SELECT lang, b, ca, cb,
              |          sum(ca) OVER w AS n_a, sum(cb) OVER w AS n_b
              |        FROM j WINDOW w AS (PARTITION BY lang)),
@@ -1541,20 +1482,9 @@ private[queries] object QueriesExtra {
     // valid_to.
     QueryDef("q196_scd2_lookup",
       (s, dir) => {
-        val cust = t(s, dir, "customer")
-          .select("c_custkey", "c_nationkey", "c_mktsegment")
-        val bump = when(col("c_custkey") % 7 === 0,
-          col("c_nationkey") + 1).otherwise(col("c_nationkey"))
-        val v1 = cust.withColumn("ver", lit(1))
-        val v2 = cust.filter(col("c_custkey") % 11 =!= 0)
-          .withColumn("c_nationkey", bump)
-          .withColumn("ver", lit(2))
-        val v3 = cust
-          .withColumn("c_nationkey", bump)
-          .withColumn("c_mktsegment", when(col("c_custkey") % 5 === 0,
-            lit("MOVED")).otherwise(col("c_mktsegment")))
-          .withColumn("ver", lit(3))
-        val hist = Scd2.history(v1.unionByName(v2).unionByName(v3),
+        val (v1, v2, v3) = customerVersions(s, dir)
+        val hist = Scd2.history(
+          v1.unionByName(v2).unionByName(v3.withColumn("ver", lit(3))),
           "c_custkey", "ver", Seq("c_nationkey", "c_mktsegment"))
         val facts = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"),
@@ -1567,33 +1497,7 @@ private[queries] object QueriesExtra {
           .agg(count(lit(1)).as("n_orders"))
           .orderBy("ver", "seg")
       },
-      Some(s"""WITH v1 AS (
-             |  SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver
-             |  FROM customer),
-             |v2 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    c_mktsegment, 2 AS ver
-             |  FROM customer WHERE c_custkey % 11 <> 0),
-             |v3 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
-             |      ELSE c_mktsegment END AS c_mktsegment,
-             |    3 AS ver FROM customer),
-             |vlog AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
-             |         UNION ALL SELECT * FROM v3),
-             |f AS (SELECT *, ${SnapshotDiff.duckFingerprint(
-                      Seq("c_nationkey", "c_mktsegment"))} AS fp
-             |      FROM vlog),
-             |g AS (SELECT *, CASE WHEN lag(fp) OVER w IS NULL
-             |        OR lag(fp) OVER w <> fp THEN 1 ELSE 0 END AS nr
-             |      FROM f WINDOW w AS (PARTITION BY c_custkey ORDER BY ver)),
-             |r AS (SELECT *, sum(nr) OVER (
-             |        PARTITION BY c_custkey ORDER BY ver) AS run
-             |      FROM g),
+      Some(s"""$customerVersionRunCtes
              |runs AS (SELECT c_custkey, run, min(ver) AS valid_from,
              |         min(c_mktsegment) AS seg
              |         FROM r GROUP BY 1, 2),
@@ -1959,17 +1863,7 @@ private[queries] object QueriesExtra {
             sum(when(col("pt").isNotNull, 1L).otherwise(0L)).as("n_full"))
           .orderBy("user_id")
       },
-      Some("""WITH b0 AS (
-             |  SELECT user_id, event_id, event_type, epoch_us(ts) AS t
-             |  FROM events),
-             |l AS (SELECT *, lag(t) OVER (PARTITION BY user_id
-             |    ORDER BY t, event_id) AS pt FROM b0),
-             |s AS (SELECT *, sum(CASE WHEN pt IS NULL
-             |      OR t - pt > 1800000000 THEN 1 ELSE 0 END)
-             |    OVER (PARTITION BY user_id ORDER BY t, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS sess
-             |  FROM l),
+      Some(s"""$eventSessionCtes
              |v AS (SELECT user_id, sess,
              |    min(CASE WHEN event_type = 'view' THEN t END) AS vt
              |  FROM s GROUP BY 1, 2),
@@ -2000,32 +1894,10 @@ private[queries] object QueriesExtra {
     // coefficient.
     QueryDef("q205_assortativity",
       (s, dir) => {
-        val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-        val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-        val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        val supp = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-        val edges = cust
-          .join(ord, col("c_custkey") === col("o_custkey"))
-          .join(li, col("o_orderkey") === col("l_orderkey"))
-          .join(supp, col("l_suppkey") === col("s_suppkey"))
-          .groupBy("c_nationkey", "s_nationkey")
-          .agg(count(lit(1)).as("n"))
-          .where(col("n") >= 100)
+        val edges = tradeEdges(s, dir)
         GraphMetrics.assortativity(edges, "c_nationkey", "s_nationkey")
       },
-      Some("""WITH tr AS (
-             |  SELECT c_nationkey AS x, s_nationkey AS y, count(*) AS n
-             |  FROM customer
-             |  JOIN orders ON c_custkey = o_custkey
-             |  JOIN lineitem ON o_orderkey = l_orderkey
-             |  JOIN supplier ON l_suppkey = s_suppkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 100),
-             |e AS (SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-             |      FROM tr WHERE x <> y),
-             |deg AS (SELECT node, count(*) AS degree FROM (
-             |          SELECT a AS node FROM e
-             |          UNION ALL SELECT b FROM e)
-             |        GROUP BY 1),
+      Some(s"""$tradeGraphCtes
              |ends AS (
              |  SELECT da.degree AS x, db.degree AS y
              |  FROM e JOIN deg da ON e.a = da.node
@@ -2275,43 +2147,11 @@ private[queries] object QueriesExtra {
         Itemsets.rules(sess, "basket", "event_type", minSupport = 5)
           .orderBy("antecedent", "consequent")
       },
-      Some("""WITH b0 AS (
-             |  SELECT user_id, event_id, event_type, epoch_us(ts) AS t
-             |  FROM events),
-             |l AS (SELECT *, lag(t) OVER (PARTITION BY user_id
-             |    ORDER BY t, event_id) AS pt FROM b0),
-             |s AS (SELECT *, sum(CASE WHEN pt IS NULL
-             |      OR t - pt > 1800000000 THEN 1 ELSE 0 END)
-             |    OVER (PARTITION BY user_id ORDER BY t, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS sess
-             |  FROM l),
+      Some(s"""$eventSessionCtes
              |b AS (SELECT DISTINCT CAST(user_id AS VARCHAR) || '#' ||
              |    CAST(sess AS VARCHAR) AS basket, event_type AS item
              |  FROM s),
-             |nb AS (SELECT count(DISTINCT basket) AS n FROM b),
-             |l1 AS (SELECT item, count(*) AS n_item FROM b
-             |       GROUP BY 1 HAVING count(*) >= 5),
-             |fb AS (SELECT b.basket, b.item FROM b JOIN l1 USING (item)),
-             |p AS (SELECT x.item AS item_a, y.item AS item_b,
-             |        count(*) AS n_both
-             |      FROM fb x JOIN fb y
-             |        ON x.basket = y.basket AND x.item < y.item
-             |      GROUP BY 1, 2 HAVING count(*) >= 5),
-             |d AS (SELECT item_a AS antecedent, item_b AS consequent,
-             |        n_both FROM p
-             |      UNION ALL
-             |      SELECT item_b, item_a, n_both FROM p)
-             |SELECT antecedent, consequent, n_both,
-             |  la.n_item AS n_ante, lc.n_item AS n_cons,
-             |  round(CAST(n_both AS DOUBLE) / nb.n, 6) AS support,
-             |  round(CAST(n_both AS DOUBLE) / la.n_item, 6) AS confidence,
-             |  round(CAST(n_both AS DOUBLE) * nb.n /
-             |    (CAST(la.n_item AS DOUBLE) * lc.n_item), 6) AS lift
-             |FROM d
-             |JOIN l1 la ON d.antecedent = la.item
-             |JOIN l1 lc ON d.consequent = lc.item, nb
-             |ORDER BY 1, 2""".stripMargin)),
+             |${assocRulesSql(minSupport = 5)}""".stripMargin)),
 
     // Ranking-function surface parity: percent_rank / cume_dist /
     // ntile(4) over a unique ordering (price, partkey) — the exact
@@ -2450,18 +2290,7 @@ private[queries] object QueriesExtra {
     // incremental ≡ backfill (the q159 IVM contract, at SCD2 grain).
     QueryDef("q216_scd2_apply",
       (s, dir) => {
-        val cust = t(s, dir, "customer")
-          .select("c_custkey", "c_nationkey", "c_mktsegment")
-        val bump = when(col("c_custkey") % 7 === 0,
-          col("c_nationkey") + 1).otherwise(col("c_nationkey"))
-        val v1 = cust.withColumn("ver", lit(1))
-        val v2 = cust.filter(col("c_custkey") % 11 =!= 0)
-          .withColumn("c_nationkey", bump)
-          .withColumn("ver", lit(2))
-        val v3 = cust
-          .withColumn("c_nationkey", bump)
-          .withColumn("c_mktsegment", when(col("c_custkey") % 5 === 0,
-            lit("MOVED")).otherwise(col("c_mktsegment")))
+        val (v1, v2, v3) = customerVersions(s, dir)
         val hist12 = Scd2.history(v1.unionByName(v2),
           "c_custkey", "ver", Seq("c_nationkey", "c_mktsegment"))
         Scd2.applyVersion(hist12, v3, "c_custkey", ver = 3L,
@@ -2471,44 +2300,7 @@ private[queries] object QueriesExtra {
             countDistinct("c_custkey").as("n_keys"))
           .orderBy(col("valid_from"), col("valid_to").asc_nulls_first)
       },
-      Some(s"""WITH v1 AS (
-             |  SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver
-             |  FROM customer),
-             |v2 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    c_mktsegment, 2 AS ver
-             |  FROM customer WHERE c_custkey % 11 <> 0),
-             |v3 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
-             |      ELSE c_mktsegment END AS c_mktsegment,
-             |    3 AS ver FROM customer),
-             |vlog AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
-             |         UNION ALL SELECT * FROM v3),
-             |f AS (SELECT *, ${SnapshotDiff.duckFingerprint(
-                      Seq("c_nationkey", "c_mktsegment"))} AS fp
-             |      FROM vlog),
-             |g AS (SELECT *, CASE WHEN lag(fp) OVER w IS NULL
-             |        OR lag(fp) OVER w <> fp THEN 1 ELSE 0 END AS nr
-             |      FROM f WINDOW w AS (PARTITION BY c_custkey ORDER BY ver)),
-             |r AS (SELECT *, sum(nr) OVER (
-             |        PARTITION BY c_custkey ORDER BY ver) AS run
-             |      FROM g),
-             |runs AS (SELECT c_custkey, run, min(ver) AS valid_from
-             |         FROM r GROUP BY 1, 2),
-             |iv AS (SELECT c_custkey, valid_from,
-             |         lead(valid_from) OVER (
-             |           PARTITION BY c_custkey ORDER BY valid_from) - 1
-             |           AS valid_to
-             |       FROM runs)
-             |SELECT valid_from, valid_to, valid_to IS NULL AS is_current,
-             |  count(*) AS n, count(DISTINCT c_custkey) AS n_keys
-             |FROM iv GROUP BY 1, 2, 3
-             |ORDER BY 1, 2 NULLS FIRST""".stripMargin)),
+      Some(scd2HistorySql)),
 
     // Ranking drift (Jaccard@10 of top-token lists): where q129
     // compares token SHARES release-to-release, this compares the
@@ -2868,26 +2660,11 @@ private[queries] object QueriesExtra {
         ks.join(psi, Seq("lang")).join(rd, Seq("lang"))
           .orderBy("lang")
       },
-      Some("""WITH aa AS (
+      Some(s"""WITH aa AS (
              |  SELECT lang, CAST(least(greatest(
              |      floor(CAST(n_chars AS DOUBLE) / 4.0), 0), 255)
              |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-             |bb AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars + 100 AS DOUBLE) / 4.0), 0), 255)
-             |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 <> 0 AND n_chars IS NOT NULL),
-             |langs AS (SELECT DISTINCT lang FROM documents),
-             |grid AS (SELECT lang, s AS b FROM langs
-             |         CROSS JOIN (SELECT unnest(range(256)) AS s)),
-             |ka AS (SELECT lang, b, count(*) AS c FROM aa GROUP BY 1, 2),
-             |kb AS (SELECT lang, b, count(*) AS c FROM bb GROUP BY 1, 2),
-             |j AS (SELECT g.lang, g.b, coalesce(ka.c, 0) AS ca,
-             |        coalesce(kb.c, 0) AS cb
-             |      FROM grid g
-             |      LEFT JOIN ka ON g.lang = ka.lang AND g.b = ka.b
-             |      LEFT JOIN kb ON g.lang = kb.lang AND g.b = kb.b),
+             |$nCharsBinCtes
              |cum AS (SELECT lang, b, ca, cb,
              |          sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
              |          sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b

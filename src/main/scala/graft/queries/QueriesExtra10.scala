@@ -275,8 +275,7 @@ private[graft] object QueriesExtra10 {
         Sampling.shuffleShards(mixed, "doc_id", shardSize = 2L)
           .orderBy("rank")
       },
-      Some {
-        import graft.functions.Hashing
+      Some(
         s"""WITH d AS (SELECT doc_id, source,
            |    doc_id % ${cjkFixture.size} AS variant
            |  FROM documents),
@@ -285,28 +284,5 @@ private[graft] object QueriesExtra10 {
            |  SELECT d.doc_id, d.source
            |  FROM d JOIN w ON d.doc_id = w.wid
            |  WHERE d.variant IN (0, 1, 8)),
-           |mixn AS (SELECT source, count(*) AS n FROM kept GROUP BY source),
-           |mixs AS (SELECT source, n,
-           |    CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS s6 FROM mixn),
-           |mixt AS (SELECT sum(s6) AS tot6 FROM mixs),
-           |mixr AS (SELECT source, least(1000000, CAST(
-           |    CAST(s6 AS HUGEINT) * 2 * 1000000 //
-           |      (CAST(tot6 AS HUGEINT) * n) AS BIGINT)) AS rate_ppm
-           |  FROM mixs CROSS JOIN mixt),
-           |mixed AS (
-           |  SELECT k.doc_id, k.source, r.rate_ppm
-           |  FROM kept k JOIN mixr r USING (source)
-           |  WHERE ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")}
-           |    % 1000000 < r.rate_ppm),
-           |hashed AS (
-           |  SELECT source, doc_id, rate_ppm,
-           |    ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")} AS h
-           |  FROM mixed)
-           |SELECT source, doc_id, rate_ppm,
-           |  row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1
-           |    AS "rank",
-           |  (row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1)
-           |    // 2 AS shard
-           |FROM hashed ORDER BY "rank"""".stripMargin
-      })
+           |${mixShardSql(targetRows = 2, shardSize = 2)}""".stripMargin))
 }

@@ -146,17 +146,7 @@ private[queries] object QueriesExtra2a {
         Seasonal.acf(ev, "event_type", "day", maxLag = 7)
           .orderBy("g", "lag")
       },
-      Some("""WITH counted AS (
-             |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
-             |    count(*) AS x
-             |  FROM events GROUP BY 1, 2),
-             |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
-             |  FROM counted GROUP BY 1),
-             |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
-             |  FROM lims),
-             |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
-             |  FROM grid LEFT JOIN counted
-             |    ON grid.g = counted.g AND grid.d = counted.d),
+      Some(s"""$eventsDailyCtes
              |mom AS (SELECT g, count(*) AS n_days, sum(x) AS sx,
              |    sum(x * x) AS sxx
              |  FROM daily GROUP BY 1),
@@ -692,17 +682,7 @@ private[queries] object QueriesExtra2a {
       },
       Some {
         val ws = Rolling.ewmaWeights(0.3, 14).mkString("[", ", ", "]")
-        s"""WITH counted AS (
-             |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
-             |    count(*) AS x
-             |  FROM events GROUP BY 1, 2),
-             |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
-             |  FROM counted GROUP BY 1),
-             |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
-             |  FROM lims),
-             |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
-             |  FROM grid LEFT JOIN counted
-             |    ON grid.g = counted.g AND grid.d = counted.d),
+        s"""$eventsDailyCtes
              |contrib AS (SELECT g, d + j AS d, x AS xp,
              |    list_extract($ws, CAST(j AS INT)) AS w
              |  FROM daily,
@@ -752,17 +732,7 @@ private[queries] object QueriesExtra2a {
         Seasonal.decompose(ev, "event_type", "day")
           .orderBy("g", "d")
       },
-      Some("""WITH counted AS (
-             |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
-             |    count(*) AS x
-             |  FROM events GROUP BY 1, 2),
-             |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
-             |  FROM counted GROUP BY 1),
-             |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
-             |  FROM lims),
-             |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
-             |  FROM grid LEFT JOIN counted
-             |    ON grid.g = counted.g AND grid.d = counted.d),
+      Some(s"""$eventsDailyCtes
              |tw AS (SELECT g, d, x, sum(x) OVER w AS s7,
              |    count(*) OVER w AS n7
              |  FROM daily WINDOW w AS (PARTITION BY g ORDER BY d
@@ -1565,17 +1535,7 @@ private[queries] object QueriesExtra2a {
           "left_semi")
         Drift.jsTokenShift(docs, kept, "text")
       },
-      Some("""WITH tka AS (SELECT unnest(list_filter(
-             |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
-             |  FROM documents),
-             |ca AS (SELECT tok, count(*) AS c_a FROM tka GROUP BY 1),
-             |keep AS (SELECT min(doc_id) AS doc_id FROM documents
-             |  GROUP BY md5(text)),
-             |tkb AS (SELECT unnest(list_filter(
-             |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
-             |  FROM documents
-             |  WHERE doc_id IN (SELECT doc_id FROM keep)),
-             |cb AS (SELECT tok, count(*) AS c_b FROM tkb GROUP BY 1),
+      Some(s"""WITH $dedupTokenCountCtes
              |na AS (SELECT count(*) AS docs_a FROM documents),
              |nb AS (SELECT count(*) AS docs_b FROM keep),
              |tta AS (SELECT sum(c_a) AS tokens_a FROM ca),
@@ -1584,18 +1544,7 @@ private[queries] object QueriesExtra2a {
              |    coalesce(c_b, 0) AS c_b
              |  FROM ca FULL JOIN cb USING (tok)),
              |terms AS (SELECT c_a, c_b,
-             |    (CASE WHEN c_a > 0 THEN CAST(round(
-             |      CAST(c_a AS DOUBLE) / tokens_a / 2.0 *
-             |      ln((CAST(c_a AS DOUBLE) / tokens_a) /
-             |        ((CAST(c_a AS DOUBLE) / tokens_a +
-             |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
-             |      1000000000.0) AS BIGINT) ELSE 0 END
-             |   + CASE WHEN c_b > 0 THEN CAST(round(
-             |      CAST(c_b AS DOUBLE) / tokens_b / 2.0 *
-             |      ln((CAST(c_b AS DOUBLE) / tokens_b) /
-             |        ((CAST(c_a AS DOUBLE) / tokens_a +
-             |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
-             |      1000000000.0) AS BIGINT) ELSE 0 END) AS t,
+             |$jsTermSql,
              |    docs_a, docs_b, tokens_a, tokens_b
              |  FROM j CROSS JOIN na CROSS JOIN nb
              |  CROSS JOIN tta CROSS JOIN ttb)

@@ -504,17 +504,7 @@ private[queries] object QueriesExtra2b {
         Rolling.rollingMedian(ev, "event_type", "day", window = 7)
           .orderBy("g", "d")
       },
-      Some("""WITH counted AS (
-             |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
-             |    count(*) AS x
-             |  FROM events GROUP BY 1, 2),
-             |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
-             |  FROM counted GROUP BY 1),
-             |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
-             |  FROM lims),
-             |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
-             |  FROM grid LEFT JOIN counted
-             |    ON grid.g = counted.g AND grid.d = counted.d),
+      Some(s"""$eventsDailyCtes
              |contrib AS (SELECT g, d + j AS d, x AS xp
              |  FROM daily,
              |    (SELECT unnest(generate_series(0, 6)) AS j) js),
@@ -1293,35 +1283,14 @@ private[queries] object QueriesExtra2b {
              |    CAST(((count(*) - count(DISTINCT md5(text))) *
              |      1000000) // count(*) <= 100000 AS INT) AS pass
              |  FROM documents),
-             |tka AS (SELECT unnest(list_filter(
-             |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
-             |  FROM documents),
-             |ca AS (SELECT tok, count(*) AS c_a FROM tka GROUP BY 1),
-             |keep AS (SELECT min(doc_id) AS doc_id FROM documents
-             |  GROUP BY md5(text)),
-             |tkb AS (SELECT unnest(list_filter(
-             |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
-             |  FROM documents
-             |  WHERE doc_id IN (SELECT doc_id FROM keep)),
-             |cb AS (SELECT tok, count(*) AS c_b FROM tkb GROUP BY 1),
+             |$dedupTokenCountCtes
              |tta AS (SELECT sum(c_a) AS tokens_a FROM ca),
              |ttb AS (SELECT sum(c_b) AS tokens_b FROM cb),
              |jj AS (SELECT coalesce(c_a, 0) AS c_a,
              |    coalesce(c_b, 0) AS c_b
              |  FROM ca FULL JOIN cb USING (tok)),
              |terms AS (SELECT
-             |    (CASE WHEN c_a > 0 THEN CAST(round(
-             |      CAST(c_a AS DOUBLE) / tokens_a / 2.0 *
-             |      ln((CAST(c_a AS DOUBLE) / tokens_a) /
-             |        ((CAST(c_a AS DOUBLE) / tokens_a +
-             |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
-             |      1000000000.0) AS BIGINT) ELSE 0 END
-             |   + CASE WHEN c_b > 0 THEN CAST(round(
-             |      CAST(c_b AS DOUBLE) / tokens_b / 2.0 *
-             |      ln((CAST(c_b AS DOUBLE) / tokens_b) /
-             |        ((CAST(c_a AS DOUBLE) / tokens_a +
-             |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
-             |      1000000000.0) AS BIGINT) ELSE 0 END) AS t
+             |$jsTermSql
              |  FROM jj CROSS JOIN tta CROSS JOIN ttb),
              |r2 AS (SELECT '2_dedup_js_nats' AS "check",
              |    round(CAST(sum(t) AS DOUBLE) / 1000000000.0, 6)
@@ -1478,17 +1447,7 @@ private[queries] object QueriesExtra2b {
               .cast("int").as("flag"))
           .orderBy("g", "d")
       },
-      Some("""WITH counted AS (
-             |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
-             |    count(*) AS x
-             |  FROM events GROUP BY 1, 2),
-             |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
-             |  FROM counted GROUP BY 1),
-             |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
-             |  FROM lims),
-             |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
-             |  FROM grid LEFT JOIN counted
-             |    ON grid.g = counted.g AND grid.d = counted.d),
+      Some(s"""$eventsDailyCtes
              |tw AS (SELECT g, d, x, sum(x) OVER w AS s7,
              |    count(*) OVER w AS n7
              |  FROM daily WINDOW w AS (PARTITION BY g ORDER BY d

@@ -203,32 +203,7 @@ private[queries] object QueriesExtra4 {
           lo = 0.0, hi = 1024.0, nbins = 256)
           .orderBy("lang")
       },
-      Some("""WITH aa AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars AS DOUBLE) / 4.0), 0), 255) AS BIGINT)
-             |      AS b
-             |  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-             |bb AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars + 100 AS DOUBLE) / 4.0), 0), 255)
-             |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 <> 0 AND n_chars IS NOT NULL),
-             |langs AS (SELECT DISTINCT lang FROM documents),
-             |grid AS (SELECT lang, s AS b FROM langs
-             |         CROSS JOIN (SELECT unnest(range(256)) AS s)),
-             |ka AS (SELECT lang, b, count(*) AS c FROM aa GROUP BY 1, 2),
-             |kb AS (SELECT lang, b, count(*) AS c FROM bb GROUP BY 1, 2),
-             |j AS (SELECT g.lang, g.b, coalesce(ka.c, 0) AS ca,
-             |        coalesce(kb.c, 0) AS cb
-             |      FROM grid g
-             |      LEFT JOIN ka ON g.lang = ka.lang AND g.b = ka.b
-             |      LEFT JOIN kb ON g.lang = kb.lang AND g.b = kb.b),
-             |cum AS (SELECT lang, b,
-             |          sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
-             |          sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
-             |        FROM j
-             |        WINDOW w AS (PARTITION BY lang ORDER BY b),
-             |               wa AS (PARTITION BY lang))
+      Some(s"""$nCharsCdfCtes
              |SELECT lang, CAST(n_a AS BIGINT) AS n_a,
              |  CAST(n_b AS BIGINT) AS n_b,
              |  round(sum(abs(CAST(cum_a AS DOUBLE) / CAST(n_a AS DOUBLE)

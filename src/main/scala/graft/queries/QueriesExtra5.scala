@@ -55,34 +55,8 @@ private[queries] object QueriesExtra5 {
           .orderBy("source")
       },
       Some {
-        val h = Hashing.duckPortableHash("token")
-        val rho = "CASE WHEN h // 64 = 0 THEN 55" +
-          " ELSE 55 - length(bin(h // 64)) END"
-        val alpha = "(0.7213 / (1.0 + 1.079 / 64.0))"
-        val two55 = "(CAST(1 AS BIGINT) << 55)"
-        s"""WITH tok AS (
-           |  SELECT source, unnest(list_filter(
-           |    string_split_regex(text, ' +'), t -> t <> '')) AS token
-           |  FROM documents),
-           |hh AS (SELECT source, token, $h AS h FROM tok),
-           |rr AS (SELECT source, h % 64 AS b, max($rho) AS m
-           |  FROM hh GROUP BY 1, 2),
-           |sg AS (SELECT source,
-           |    CAST(count(*) AS BIGINT) AS registers_used,
-           |    64 - CAST(count(*) AS BIGINT) AS zeros,
-           |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-           |      AS BIGINT) +
-           |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS sum_scaled
-           |  FROM rr GROUP BY 1),
-           |est AS (SELECT *,
-           |    $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
-           |      CAST(sum_scaled AS DOUBLE) AS raw
-           |  FROM sg),
-           |est2 AS (SELECT *,
-           |    CASE WHEN raw <= 2.5 * 64.0 AND zeros > 0
-           |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
-           |      ELSE raw END AS e
-           |  FROM est),
+        import hllSql._
+        s"""$hllCtes
            |ex AS (SELECT source, CAST(count(*) AS BIGINT) AS n_keys,
            |    CAST(count(DISTINCT token) AS BIGINT)
            |      AS n_distinct_exact
@@ -94,19 +68,7 @@ private[queries] object QueriesExtra5 {
            |      OR grr.m IS NULL OR mrr.m <> grr.m THEN 1 ELSE 0
            |      END), 0) AS BIGINT) AS merge_register_mismatches
            |  FROM mrr FULL JOIN grr USING (b)),
-           |msum AS (SELECT 64 - CAST(count(*) AS BIGINT) AS zeros,
-           |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-           |      AS BIGINT) +
-           |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS ss
-           |  FROM mrr),
-           |mest AS (SELECT round(CASE WHEN raw <= 2.5 * 64.0
-           |      AND zeros > 0
-           |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
-           |      ELSE raw END, 2) AS merged_est
-           |  FROM (SELECT zeros,
-           |      $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
-           |        CAST(ss AS DOUBLE) AS raw
-           |    FROM msum))
+           |$mergedEstCtes
            |SELECT ex.source, n_keys, n_distinct_exact, registers_used,
            |  zeros, sum_scaled, round(raw, 2) AS hll_raw,
            |  round(e, 2) AS hll_est,
@@ -804,48 +766,10 @@ private[queries] object QueriesExtra5 {
           .orderBy("source")
       },
       Some {
-        val h = Hashing.duckPortableHash("token")
-        val rho = "CASE WHEN h // 64 = 0 THEN 55" +
-          " ELSE 55 - length(bin(h // 64)) END"
-        val alpha = "(0.7213 / (1.0 + 1.079 / 64.0))"
-        val two55 = "(CAST(1 AS BIGINT) << 55)"
-        s"""WITH tok AS (
-           |  SELECT source, unnest(list_filter(
-           |    string_split_regex(text, ' +'), t -> t <> '')) AS token
-           |  FROM documents),
-           |hh AS (SELECT source, token, $h AS h FROM tok),
-           |rr AS (SELECT source, h % 64 AS b, max($rho) AS m
-           |  FROM hh GROUP BY 1, 2),
-           |sg AS (SELECT source,
-           |    CAST(count(*) AS BIGINT) AS registers_used,
-           |    64 - CAST(count(*) AS BIGINT) AS zeros,
-           |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-           |      AS BIGINT) +
-           |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS sum_scaled
-           |  FROM rr GROUP BY 1),
-           |est AS (SELECT *,
-           |    $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
-           |      CAST(sum_scaled AS DOUBLE) AS raw
-           |  FROM sg),
-           |est2 AS (SELECT *,
-           |    CASE WHEN raw <= 2.5 * 64.0 AND zeros > 0
-           |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
-           |      ELSE raw END AS e
-           |  FROM est),
+        import hllSql._
+        s"""$hllCtes
            |mrr AS (SELECT b, max(m) AS m FROM rr GROUP BY 1),
-           |msum AS (SELECT 64 - CAST(count(*) AS BIGINT) AS zeros,
-           |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-           |      AS BIGINT) +
-           |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS ss
-           |  FROM mrr),
-           |mest AS (SELECT round(CASE WHEN raw <= 2.5 * 64.0
-           |      AND zeros > 0
-           |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
-           |      ELSE raw END, 2) AS merged_est
-           |  FROM (SELECT zeros,
-           |      $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
-           |        CAST(ss AS DOUBLE) AS raw
-           |    FROM msum))
+           |$mergedEstCtes
            |SELECT source, registers_used, zeros, sum_scaled,
            |  round(e, 2) AS hll_est, merged_est
            |FROM est2, mest
@@ -913,23 +837,7 @@ private[queries] object QueriesExtra5 {
     // ever re-pairing the corpus against itself.
     QueryDef("q361_cluster_merge",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .filter(col("doc_id") < 1000).select("doc_id", "text")
-        val old = docs.filter(col("doc_id") < 500)
-        val batch = docs.filter(col("doc_id") >= 500)
-          .localCheckpoint(true)
-        // One band/token build per corpus half (maintenancePairSets,
-        // r20): the standalone minhashNearDups + incrementalNearDups
-        // composition re-ran the signature and tokenize folds once
-        // per call; the three pair frames are row-identical.
-        val (oldPairs, internal, cross) = Dedup.maintenancePairSets(
-          old, batch, "doc_id", "text",
-          k = 64, bands = 8, threshold = 0.8)
-        Components.writeClusterIndex(s, old, "doc_id", oldPairs,
-          "id_a", "id_b", "graft_cluster_map_m", buckets = 8)
-        Components.mergeClusterIndex(s, "graft_cluster_map_m",
-          batch, "doc_id", internal, "id_a", "id_b",
-          cross, "batch_id", "index_id", buckets = 8)
+        buildAndMergeClusterMap(s, dir, "graft_cluster_map_m")
         Components
           .clustersFromIndex(Layout.table(s, "graft_cluster_map_m"))
           .orderBy("doc_id")
@@ -953,20 +861,7 @@ private[queries] object QueriesExtra5 {
     // resolve-then-rewrite, which commutes with the probe.
     QueryDef("q362_cluster_compaction",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .filter(col("doc_id") < 1000).select("doc_id", "text")
-        val old = docs.filter(col("doc_id") < 500)
-        val batch = docs.filter(col("doc_id") >= 500)
-          .localCheckpoint(true)
-        // Shared band/token build, as in q361 (maintenancePairSets).
-        val (oldPairs, internal, cross) = Dedup.maintenancePairSets(
-          old, batch, "doc_id", "text",
-          k = 64, bands = 8, threshold = 0.8)
-        Components.writeClusterIndex(s, old, "doc_id", oldPairs,
-          "id_a", "id_b", "graft_cluster_map_c", buckets = 8)
-        Components.mergeClusterIndex(s, "graft_cluster_map_c",
-          batch, "doc_id", internal, "id_a", "id_b",
-          cross, "batch_id", "index_id", buckets = 8)
+        buildAndMergeClusterMap(s, dir, "graft_cluster_map_c")
         Components.compactClusterIndex(s, "graft_cluster_map_c",
           buckets = 8)
         val idx = Layout.table(s, "graft_cluster_map_c")
@@ -1012,25 +907,7 @@ private[queries] object QueriesExtra5 {
           ps = Seq(0.25, 0.5, 0.9, 0.99))
           .orderBy("lang", "p")
       },
-      Some("""WITH v AS (
-             |  SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-             |  WHERE n_chars IS NOT NULL),
-             |b AS (SELECT lang, CAST(least(greatest(floor(v / 4.0), 0), 255)
-             |        AS BIGINT) AS b FROM v),
-             |c AS (SELECT lang, b, count(*) AS cnt FROM b GROUP BY lang, b),
-             |cc AS (SELECT lang, b, cnt,
-             |         sum(cnt) OVER (PARTITION BY lang ORDER BY b) AS cum,
-             |         sum(cnt) OVER (PARTITION BY lang) AS total
-             |       FROM c),
-             |p AS (SELECT CAST(unnest([0.25, 0.5, 0.9, 0.99]) AS DOUBLE) AS p)
-             |SELECT lang, p, CAST(total AS BIGINT) AS n,
-             |  round(4.0 * (CAST(b AS DOUBLE)
-             |    + (p * CAST(total AS DOUBLE) - CAST(cum - cnt AS DOUBLE))
-             |      / CAST(cnt AS DOUBLE)), 4) + 0.0 AS est
-             |FROM cc, p
-             |WHERE CAST(cum AS DOUBLE) >= p * CAST(total AS DOUBLE)
-             |  AND CAST(cum - cnt AS DOUBLE) < p * CAST(total AS DOUBLE)
-             |ORDER BY lang, p""".stripMargin)),
+      Some(nCharsHistPercentilesSql)),
 
     // Corpus ↔ index synchronization audit (Reconcile.indexSync) —
     // the operational health check incremental maintenance makes
@@ -1248,11 +1125,7 @@ private[queries] object QueriesExtra5 {
           .orderBy("source")
       },
       Some {
-        val h = Hashing.duckPortableHash("token")
-        val rho = "CASE WHEN h // 64 = 0 THEN 55" +
-          " ELSE 55 - length(bin(h // 64)) END"
-        val alpha = "(0.7213 / (1.0 + 1.079 / 64.0))"
-        val two55 = "(CAST(1 AS BIGINT) << 55)"
+        import hllSql._
         "WITH RECURSIVE " + minhashVerifiedCtes + ",\n" +
         clusterChainCtes + ",\n" +
         s"""sl AS (SELECT * FROM documents WHERE doc_id < 1000),

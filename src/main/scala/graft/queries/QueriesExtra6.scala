@@ -502,21 +502,7 @@ private[queries] object QueriesExtra6 {
            |$bl,
            |d AS (SELECT u.id, u.canon, u.domain, doc.source, doc.text
            |      FROM urls u JOIN documents doc ON doc.doc_id = u.id),
-           |s1 AS (
-           |  SELECT * FROM (
-           |    SELECT *, CASE WHEN canon IS NULL THEN 1
-           |      ELSE row_number() OVER (PARTITION BY canon
-           |        ORDER BY id) END AS rk
-           |    FROM d) WHERE rk = 1),
-           |s2 AS (
-           |  SELECT * FROM (
-           |    SELECT *, CASE WHEN domain IS NULL THEN 1
-           |      ELSE row_number() OVER (PARTITION BY domain
-           |        ORDER BY md5(CAST(id AS VARCHAR)), id) END AS rk2
-           |    FROM s1) WHERE rk2 <= 20),
-           |flagged AS (SELECT DISTINCT doc_id FROM hits),
-           |s3 AS (SELECT * FROM s2
-           |       WHERE id NOT IN (SELECT doc_id FROM flagged))
+           |${webCurateCtes("d")}
            |SELECT doc.source,
            |  CAST(count(*) AS BIGINT) AS n_raw,
            |  CAST(coalesce(s1c.n, 0) AS BIGINT) AS n_url_unique,
@@ -544,28 +530,9 @@ private[queries] object QueriesExtra6 {
     // it predicts both from the fixture join, so writer and reader
     // must BOTH be right to go green.
     QueryDef("q389_warc_roundtrip",
-      (s, dir) => {
-        val tmp = sys.props("java.io.tmpdir") + "/graft_warc_roundtrip"
-        val docs = t(s, dir, "documents")
-          .select(col("text"),
-            fixtureUrl(col("doc_id").cast("long")).as("url"))
-        graft.sources.Warc.write(docs, tmp, "url", "text")
-        graft.sources.Warc.read(s, tmp)
-          .select(coalesce(WebCorpus.domain(col("url")),
-            lit("(invalid)")).as("domain"), col("n_bytes"))
-          .groupBy("domain")
-          .agg(count(lit(1)).as("n_records"),
-            sum("n_bytes").as("payload_bytes"))
-          .orderBy("domain")
-      },
-      Some(
-        s"""WITH $urlCtes
-           |SELECT coalesce(domain, '(invalid)') AS domain,
-           |  CAST(count(*) AS BIGINT) AS n_records,
-           |  CAST(sum(length(doc.text)) AS BIGINT) AS payload_bytes
-           |FROM urls u JOIN documents doc ON doc.doc_id = u.id
-           |GROUP BY 1
-           |ORDER BY domain""".stripMargin))
+      (s, dir) => warcRoundtrip(s, dir, "graft_warc_roundtrip")(
+        graft.sources.Warc.write(_, _, "url", "text")),
+      Some(warcRoundtripOracle))
 
   private def q390 =
     // robots.txt compliance audit (WebCorpus.robotsAudit over the
@@ -691,21 +658,7 @@ private[queries] object QueriesExtra6 {
            |  LEFT JOIN (SELECT id, is_allow FROM cand WHERE rn = 1) v
            |    ON v.id = u.id
            |  WHERE u.canon IS NOT NULL AND coalesce(v.is_allow, 1) = 1),
-           |s1 AS (
-           |  SELECT * FROM (
-           |    SELECT *, CASE WHEN canon IS NULL THEN 1
-           |      ELSE row_number() OVER (PARTITION BY canon
-           |        ORDER BY id) END AS rk
-           |    FROM s0) WHERE rk = 1),
-           |s2 AS (
-           |  SELECT * FROM (
-           |    SELECT *, CASE WHEN domain IS NULL THEN 1
-           |      ELSE row_number() OVER (PARTITION BY domain
-           |        ORDER BY md5(CAST(id AS VARCHAR)), id) END AS rk2
-           |    FROM s1) WHERE rk2 <= 20),
-           |flagged AS (SELECT DISTINCT doc_id FROM hits),
-           |s3 AS (SELECT * FROM s2
-           |       WHERE id NOT IN (SELECT doc_id FROM flagged))
+           |${webCurateCtes("s0")}
            |SELECT doc.source,
            |  CAST(count(*) AS BIGINT) AS n_raw,
            |  CAST(coalesce(s0c.n, 0) AS BIGINT) AS n_compliant,
@@ -804,28 +757,9 @@ private[queries] object QueriesExtra6 {
     // inflating reader must be right for the domain-grain counts and
     // payload byte sums to land.
     QueryDef("q393_warc_gzip_roundtrip",
-      (s, dir) => {
-        val tmp = sys.props("java.io.tmpdir") + "/graft_warc_gz_roundtrip"
-        val docs = t(s, dir, "documents")
-          .select(col("text"),
-            fixtureUrl(col("doc_id").cast("long")).as("url"))
-        graft.sources.Warc.writeGzip(docs, tmp, "url", "text")
-        graft.sources.Warc.read(s, tmp)
-          .select(coalesce(WebCorpus.domain(col("url")),
-            lit("(invalid)")).as("domain"), col("n_bytes"))
-          .groupBy("domain")
-          .agg(count(lit(1)).as("n_records"),
-            sum("n_bytes").as("payload_bytes"))
-          .orderBy("domain")
-      },
-      Some(
-        s"""WITH $urlCtes
-           |SELECT coalesce(domain, '(invalid)') AS domain,
-           |  CAST(count(*) AS BIGINT) AS n_records,
-           |  CAST(sum(length(doc.text)) AS BIGINT) AS payload_bytes
-           |FROM urls u JOIN documents doc ON doc.doc_id = u.id
-           |GROUP BY 1
-           |ORDER BY domain""".stripMargin))
+      (s, dir) => warcRoundtrip(s, dir, "graft_warc_gz_roundtrip")(
+        graft.sources.Warc.writeGzip(_, _, "url", "text")),
+      Some(warcRoundtripOracle))
 
   /** The q394 PSL fixture hosts and their hand-derived registrable
     * domains — one pair per doc_id residue, mirrored literally in the
@@ -1223,6 +1157,35 @@ private[queries] object QueriesExtra6 {
            |LEFT JOIN (SELECT id, is_allow FROM cand WHERE rn = 1) v
            |  ON v.id = u.id
            |ORDER BY doc_id""".stripMargin))
+
+  /** Writes the documents' texts under their fixture URLs as WARC to
+    * `java.io.tmpdir`/`name` with `write`, reads them back, and counts
+    * records and payload bytes per registrable domain.
+    */
+  private def warcRoundtrip(s: SparkSession, dir: String, name: String)(
+      write: (DataFrame, String) => Unit): DataFrame = {
+    val tmp = sys.props("java.io.tmpdir") + "/" + name
+    write(t(s, dir, "documents")
+      .select(col("text"),
+        fixtureUrl(col("doc_id").cast("long")).as("url")), tmp)
+    graft.sources.Warc.read(s, tmp)
+      .select(coalesce(WebCorpus.domain(col("url")),
+        lit("(invalid)")).as("domain"), col("n_bytes"))
+      .groupBy("domain")
+      .agg(count(lit(1)).as("n_records"),
+        sum("n_bytes").as("payload_bytes"))
+      .orderBy("domain")
+  }
+
+  /** Oracle of [[warcRoundtrip]]: the payload is the document text. */
+  private def warcRoundtripOracle: String =
+    s"""WITH $urlCtes
+       |SELECT coalesce(domain, '(invalid)') AS domain,
+       |  CAST(count(*) AS BIGINT) AS n_records,
+       |  CAST(sum(length(doc.text)) AS BIGINT) AS payload_bytes
+       |FROM urls u JOIN documents doc ON doc.doc_id = u.id
+       |GROUP BY 1
+       |ORDER BY domain""".stripMargin
 
   /** The q382–q384 fixture URL: independent variant axes driven by
     * doc_id residues. Every component below is mirrored literally in

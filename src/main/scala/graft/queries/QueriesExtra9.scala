@@ -38,6 +38,61 @@ private[queries] object QueriesExtra9 {
       "kraft i början av nästa år och gälla alla medborgare i landet."),
     "und" -> "tiny text")
 
+  /** Documents whose text is the [[curateFixture]] sentence of their
+    * variant, doc_id % 8.
+    */
+  private def curateDocs(s: SparkSession, dir: String): DataFrame = {
+    val m = curateFixture.size
+    val idx = (pmod(col("doc_id"), lit(m)) + 1).cast("int")
+    val sent = elt(idx +: curateFixture.map(p => lit(p._2)): _*)
+    t(s, dir, "documents")
+      .select(col("doc_id"), col("source"), sent.as("text"))
+  }
+
+  /** Oracle of `CorpusPipeline.curate` over [[curateDocs]]: min-id
+    * winner per variant, then the pinned language verdicts decide the
+    * kept winners (`v.lang <kept>`) and the quality drops
+    * (`v.lang <dropped>`); near-dup never fires on this fixture.
+    */
+  private def curateOracle(kept: String, dropped: String): String = {
+    val values = curateFixture.zipWithIndex
+      .map { case ((lang, sent), i) =>
+        s"($i, '$lang', '${sent.replace("'", "''")}')" }
+      .mkString(",\n  ")
+    s"""WITH v AS (SELECT * FROM (VALUES
+       |  $values) AS v(variant, lang, text)),
+       |d AS (SELECT doc_id, source,
+       |    doc_id % ${curateFixture.size} AS variant
+       |  FROM documents),
+       |w AS (SELECT variant, min(doc_id) AS wid FROM d GROUP BY 1),
+       |wd AS (SELECT d.source, d.variant
+       |  FROM d JOIN w ON d.doc_id = w.wid),
+       |kept AS (
+       |  SELECT wd.source, count(*) AS docs_kept,
+       |    sum(len(list_filter(string_split_regex(v.text, ' +'),
+       |      t -> t <> ''))) AS toks
+       |  FROM wd JOIN v USING (variant)
+       |  WHERE v.lang $kept GROUP BY 1),
+       |qual AS (
+       |  SELECT wd.source, count(*) AS nq
+       |  FROM wd JOIN v USING (variant)
+       |  WHERE v.lang $dropped GROUP BY 1),
+       |n AS (SELECT source, count(*) AS n FROM d GROUP BY 1),
+       |nw AS (SELECT source, count(*) AS nwin FROM wd GROUP BY 1)
+       |SELECT n.source,
+       |  CAST(coalesce(kept.docs_kept, 0) AS BIGINT) AS docs_kept,
+       |  CAST(coalesce(kept.toks, 0) AS BIGINT) AS tokens_kept,
+       |  CAST(n.n - coalesce(nw.nwin, 0) AS BIGINT)
+       |    AS dropped_exact_dup,
+       |  CAST(coalesce(qual.nq, 0) AS BIGINT) AS dropped_quality,
+       |  CAST(0 AS BIGINT) AS dropped_near_dup
+       |FROM n
+       |LEFT JOIN nw USING (source)
+       |LEFT JOIN kept USING (source)
+       |LEFT JOIN qual USING (source)
+       |ORDER BY source""".stripMargin
+  }
+
   private def q420 =
     // Trained language gate in the curation flagship (round 18 —
     // VERDICT r17 task 1): curate at DEFAULTS (trainedLangId = true)
@@ -53,52 +108,10 @@ private[queries] object QueriesExtra9 {
     // VALUES — the trigram model never runs in it.
     QueryDef("q420_curate_trained",
       (s, dir) => {
-        val m = curateFixture.size
-        val idx = (pmod(col("doc_id"), lit(m)) + 1).cast("int")
-        val sent = elt(idx +: curateFixture.map(p => lit(p._2)): _*)
-        CorpusPipeline.curate(
-            t(s, dir, "documents")
-              .select(col("doc_id"), col("source"), sent.as("text")))
+        CorpusPipeline.curate(curateDocs(s, dir))
           .orderBy("source")
       },
-      Some {
-        val values = curateFixture.zipWithIndex
-          .map { case ((lang, sent), i) =>
-            s"($i, '$lang', '${sent.replace("'", "''")}')" }
-          .mkString(",\n  ")
-        s"""WITH v AS (SELECT * FROM (VALUES
-           |  $values) AS v(variant, lang, text)),
-           |d AS (SELECT doc_id, source,
-           |    doc_id % ${curateFixture.size} AS variant
-           |  FROM documents),
-           |w AS (SELECT variant, min(doc_id) AS wid FROM d GROUP BY 1),
-           |wd AS (SELECT d.source, d.variant
-           |  FROM d JOIN w ON d.doc_id = w.wid),
-           |kept AS (
-           |  SELECT wd.source, count(*) AS docs_kept,
-           |    sum(len(list_filter(string_split_regex(v.text, ' +'),
-           |      t -> t <> ''))) AS toks
-           |  FROM wd JOIN v USING (variant)
-           |  WHERE v.lang = 'en' GROUP BY 1),
-           |qual AS (
-           |  SELECT wd.source, count(*) AS nq
-           |  FROM wd JOIN v USING (variant)
-           |  WHERE v.lang <> 'en' GROUP BY 1),
-           |n AS (SELECT source, count(*) AS n FROM d GROUP BY 1),
-           |nw AS (SELECT source, count(*) AS nwin FROM wd GROUP BY 1)
-           |SELECT n.source,
-           |  CAST(coalesce(kept.docs_kept, 0) AS BIGINT) AS docs_kept,
-           |  CAST(coalesce(kept.toks, 0) AS BIGINT) AS tokens_kept,
-           |  CAST(n.n - coalesce(nw.nwin, 0) AS BIGINT)
-           |    AS dropped_exact_dup,
-           |  CAST(coalesce(qual.nq, 0) AS BIGINT) AS dropped_quality,
-           |  CAST(0 AS BIGINT) AS dropped_near_dup
-           |FROM n
-           |LEFT JOIN nw USING (source)
-           |LEFT JOIN kept USING (source)
-           |LEFT JOIN qual USING (source)
-           |ORDER BY source""".stripMargin
-      })
+      Some(curateOracle(kept = "= 'en'", dropped = "<> 'en'")))
 
   private def q421 =
     // text/plain ingest path (round 18, VERDICT r17 task 7): fromWarc
@@ -286,51 +299,9 @@ private[queries] object QueriesExtra9 {
     // a pinned literal.
     QueryDef("q424_curate_multilingual",
       (s, dir) => {
-        val m = curateFixture.size
-        val idx = (pmod(col("doc_id"), lit(m)) + 1).cast("int")
-        val sent = elt(idx +: curateFixture.map(p => lit(p._2)): _*)
-        CorpusPipeline.curate(
-            t(s, dir, "documents")
-              .select(col("doc_id"), col("source"), sent.as("text")),
-            langs = Set("en", "de"))
+        CorpusPipeline.curate(curateDocs(s, dir), langs = Set("en", "de"))
           .orderBy("source")
       },
-      Some {
-        val values = curateFixture.zipWithIndex
-          .map { case ((lang, sent), i) =>
-            s"($i, '$lang', '${sent.replace("'", "''")}')" }
-          .mkString(",\n  ")
-        s"""WITH v AS (SELECT * FROM (VALUES
-           |  $values) AS v(variant, lang, text)),
-           |d AS (SELECT doc_id, source,
-           |    doc_id % ${curateFixture.size} AS variant
-           |  FROM documents),
-           |w AS (SELECT variant, min(doc_id) AS wid FROM d GROUP BY 1),
-           |wd AS (SELECT d.source, d.variant
-           |  FROM d JOIN w ON d.doc_id = w.wid),
-           |kept AS (
-           |  SELECT wd.source, count(*) AS docs_kept,
-           |    sum(len(list_filter(string_split_regex(v.text, ' +'),
-           |      t -> t <> ''))) AS toks
-           |  FROM wd JOIN v USING (variant)
-           |  WHERE v.lang IN ('en', 'de') GROUP BY 1),
-           |qual AS (
-           |  SELECT wd.source, count(*) AS nq
-           |  FROM wd JOIN v USING (variant)
-           |  WHERE v.lang NOT IN ('en', 'de') GROUP BY 1),
-           |n AS (SELECT source, count(*) AS n FROM d GROUP BY 1),
-           |nw AS (SELECT source, count(*) AS nwin FROM wd GROUP BY 1)
-           |SELECT n.source,
-           |  CAST(coalesce(kept.docs_kept, 0) AS BIGINT) AS docs_kept,
-           |  CAST(coalesce(kept.toks, 0) AS BIGINT) AS tokens_kept,
-           |  CAST(n.n - coalesce(nw.nwin, 0) AS BIGINT)
-           |    AS dropped_exact_dup,
-           |  CAST(coalesce(qual.nq, 0) AS BIGINT) AS dropped_quality,
-           |  CAST(0 AS BIGINT) AS dropped_near_dup
-           |FROM n
-           |LEFT JOIN nw USING (source)
-           |LEFT JOIN kept USING (source)
-           |LEFT JOIN qual USING (source)
-           |ORDER BY source""".stripMargin
-      })
+      Some(curateOracle(kept = "IN ('en', 'de')",
+        dropped = "NOT IN ('en', 'de')")))
 }

@@ -397,29 +397,7 @@ private[queries] object QueriesMore {
       },
       Some("WITH RECURSIVE " + curationFateCtes + ",\n" +
         s"""kept AS (SELECT doc_id, source FROM fate WHERE fate = 'kept'),
-           |mixn AS (SELECT source, count(*) AS n FROM kept GROUP BY source),
-           |mixs AS (SELECT source, n,
-           |    CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS s6 FROM mixn),
-           |mixt AS (SELECT sum(s6) AS tot6 FROM mixs),
-           |mixr AS (SELECT source, least(1000000, CAST(
-           |    CAST(s6 AS HUGEINT) * 50 * 1000000 //
-           |      (CAST(tot6 AS HUGEINT) * n) AS BIGINT)) AS rate_ppm
-           |  FROM mixs CROSS JOIN mixt),
-           |mixed AS (
-           |  SELECT k.doc_id, k.source, r.rate_ppm
-           |  FROM kept k JOIN mixr r USING (source)
-           |  WHERE ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")}
-           |    % 1000000 < r.rate_ppm),
-           |hashed AS (
-           |  SELECT source, doc_id, rate_ppm,
-           |    ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")} AS h
-           |  FROM mixed)
-           |SELECT source, doc_id, rate_ppm,
-           |  row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1
-           |    AS "rank",
-           |  (row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1)
-           |    // 32 AS shard
-           |FROM hashed ORDER BY "rank"""".stripMargin)),
+           |${mixShardSql(targetRows = 50, shardSize = 32)}""".stripMargin)),
 
     // BPE first-merge pair counts (TextAnalysis.bpePairCounts,
     // Sennrich ACL'16): top adjacent character pairs within tokens —
@@ -2141,25 +2119,7 @@ private[queries] object QueriesMore {
           lo = 0.0, hi = 1024.0, nbins = 256,
           ps = Seq(0.25, 0.5, 0.9, 0.99))
         .orderBy("lang", "p"),
-      Some("""WITH v AS (
-             |  SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-             |  WHERE n_chars IS NOT NULL),
-             |b AS (SELECT lang, CAST(least(greatest(floor(v / 4.0), 0), 255)
-             |        AS BIGINT) AS b FROM v),
-             |c AS (SELECT lang, b, count(*) AS cnt FROM b GROUP BY lang, b),
-             |cc AS (SELECT lang, b, cnt,
-             |         sum(cnt) OVER (PARTITION BY lang ORDER BY b) AS cum,
-             |         sum(cnt) OVER (PARTITION BY lang) AS total
-             |       FROM c),
-             |p AS (SELECT CAST(unnest([0.25, 0.5, 0.9, 0.99]) AS DOUBLE) AS p)
-             |SELECT lang, p, CAST(total AS BIGINT) AS n,
-             |  round(4.0 * (CAST(b AS DOUBLE)
-             |    + (p * CAST(total AS DOUBLE) - CAST(cum - cnt AS DOUBLE))
-             |      / CAST(cnt AS DOUBLE)), 4) + 0.0 AS est
-             |FROM cc, p
-             |WHERE CAST(cum AS DOUBLE) >= p * CAST(total AS DOUBLE)
-             |  AND CAST(cum - cnt AS DOUBLE) < p * CAST(total AS DOUBLE)
-             |ORDER BY lang, p""".stripMargin)),
+      Some(nCharsHistPercentilesSql)),
 
     // S-tier: ORC sink + source round-trip (sources/Orc) — the second
     // columnar lake format, native to Spark. The aggregate runs over
@@ -2289,16 +2249,7 @@ private[queries] object QueriesMore {
           lo = 0.0, hi = 1024.0, nbins = 256, bins = 4)
         .groupBy("lang", "bin").agg(count(lit(1)).as("n"))
         .orderBy("lang", "bin"),
-      Some("""WITH v AS (
-             |  SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-             |  WHERE n_chars IS NOT NULL),
-             |b AS (SELECT lang, CAST(least(greatest(floor(v / 4.0), 0), 255)
-             |        AS BIGINT) AS b FROM v),
-             |c AS (SELECT lang, b, count(*) AS cnt FROM b GROUP BY lang, b),
-             |cc AS (SELECT lang, b, cnt,
-             |         sum(cnt) OVER (PARTITION BY lang ORDER BY b) AS cum,
-             |         sum(cnt) OVER (PARTITION BY lang) AS total
-             |       FROM c),
+      Some(s"""$nCharsHistCtes
              |p AS (SELECT CAST(unnest([0.25, 0.5, 0.75]) AS DOUBLE) AS p),
              |est AS (
              |  SELECT lang, p, 4.0 * (CAST(b AS DOUBLE)
@@ -2373,63 +2324,15 @@ private[queries] object QueriesMore {
     // semantics, pinned in Scd2Spec).
     QueryDef("q157_scd2_history",
       (s, dir) => {
-        val cust = t(s, dir, "customer")
-          .select("c_custkey", "c_nationkey", "c_mktsegment")
-        val bump = when(col("c_custkey") % 7 === 0,
-          col("c_nationkey") + 1).otherwise(col("c_nationkey"))
-        val v1 = cust.withColumn("ver", lit(1))
-        val v2 = cust.filter(col("c_custkey") % 11 =!= 0)
-          .withColumn("c_nationkey", bump)
-          .withColumn("ver", lit(2))
-        val v3 = cust
-          .withColumn("c_nationkey", bump)
-          .withColumn("c_mktsegment", when(col("c_custkey") % 5 === 0,
-            lit("MOVED")).otherwise(col("c_mktsegment")))
-          .withColumn("ver", lit(3))
-        Scd2.history(v1.unionByName(v2).unionByName(v3),
+        val (v1, v2, v3) = customerVersions(s, dir)
+        Scd2.history(
+          v1.unionByName(v2).unionByName(v3.withColumn("ver", lit(3))),
           "c_custkey", "ver", Seq("c_nationkey", "c_mktsegment"))
           .groupBy("valid_from", "valid_to", "is_current")
           .agg(count(lit(1)).as("n"), countDistinct("c_custkey").as("n_keys"))
           .orderBy(col("valid_from"), col("valid_to").asc_nulls_first)
       },
-      Some(s"""WITH v1 AS (
-             |  SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver
-             |  FROM customer),
-             |v2 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    c_mktsegment, 2 AS ver
-             |  FROM customer WHERE c_custkey % 11 <> 0),
-             |v3 AS (
-             |  SELECT c_custkey,
-             |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
-             |      ELSE c_nationkey END AS c_nationkey,
-             |    CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
-             |      ELSE c_mktsegment END AS c_mktsegment,
-             |    3 AS ver FROM customer),
-             |vlog AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
-             |         UNION ALL SELECT * FROM v3),
-             |f AS (SELECT *, ${SnapshotDiff.duckFingerprint(
-                      Seq("c_nationkey", "c_mktsegment"))} AS fp
-             |      FROM vlog),
-             |g AS (SELECT *, CASE WHEN lag(fp) OVER w IS NULL
-             |        OR lag(fp) OVER w <> fp THEN 1 ELSE 0 END AS nr
-             |      FROM f WINDOW w AS (PARTITION BY c_custkey ORDER BY ver)),
-             |r AS (SELECT *, sum(nr) OVER (
-             |        PARTITION BY c_custkey ORDER BY ver) AS run
-             |      FROM g),
-             |runs AS (SELECT c_custkey, run, min(ver) AS valid_from
-             |         FROM r GROUP BY 1, 2),
-             |iv AS (SELECT c_custkey, valid_from,
-             |         lead(valid_from) OVER (
-             |           PARTITION BY c_custkey ORDER BY valid_from) - 1
-             |           AS valid_to
-             |       FROM runs)
-             |SELECT valid_from, valid_to, valid_to IS NULL AS is_current,
-             |  count(*) AS n, count(DISTINCT c_custkey) AS n_keys
-             |FROM iv GROUP BY 1, 2, 3
-             |ORDER BY 1, 2 NULLS FIRST""".stripMargin)),
+      Some(scd2HistorySql)),
 
     // Order-independent bucketed table checksums (ops/TableChecksum
     // .compare — the Merkle-style anti-entropy primitive): a tampered
@@ -2525,32 +2428,7 @@ private[queries] object QueriesMore {
           lo = 0.0, hi = 1024.0, nbins = 256)
           .orderBy("lang")
       },
-      Some("""WITH aa AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars AS DOUBLE) / 4.0), 0), 255) AS BIGINT)
-             |      AS b
-             |  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-             |bb AS (
-             |  SELECT lang, CAST(least(greatest(
-             |      floor(CAST(n_chars + 100 AS DOUBLE) / 4.0), 0), 255)
-             |      AS BIGINT) AS b
-             |  FROM documents WHERE doc_id % 2 <> 0 AND n_chars IS NOT NULL),
-             |langs AS (SELECT DISTINCT lang FROM documents),
-             |grid AS (SELECT lang, s AS b FROM langs
-             |         CROSS JOIN (SELECT unnest(range(256)) AS s)),
-             |ka AS (SELECT lang, b, count(*) AS c FROM aa GROUP BY 1, 2),
-             |kb AS (SELECT lang, b, count(*) AS c FROM bb GROUP BY 1, 2),
-             |j AS (SELECT g.lang, g.b, coalesce(ka.c, 0) AS ca,
-             |        coalesce(kb.c, 0) AS cb
-             |      FROM grid g
-             |      LEFT JOIN ka ON g.lang = ka.lang AND g.b = ka.b
-             |      LEFT JOIN kb ON g.lang = kb.lang AND g.b = kb.b),
-             |cum AS (SELECT lang, b,
-             |          sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
-             |          sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
-             |        FROM j
-             |        WINDOW w AS (PARTITION BY lang ORDER BY b),
-             |               wa AS (PARTITION BY lang))
+      Some(s"""$nCharsCdfCtes
              |SELECT lang, CAST(n_a AS BIGINT) AS n_a,
              |  CAST(n_b AS BIGINT) AS n_b,
              |  round(max(abs(CAST(cum_a AS DOUBLE) / CAST(n_a AS DOUBLE)

@@ -1167,4 +1167,461 @@ private[queries] object Shared {
     }
     (seed +: rounds).mkString(",\n")
   }
+
+  /** Oracle twin of `Seasonal.dailyCounts` over events per event_type:
+    * the `counted`, `lims`, `grid` and `daily` CTEs (with WITH, ending
+    * in a comma).
+    */
+  val eventsDailyCtes: String =
+    """WITH counted AS (
+      |  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS d,
+      |    count(*) AS x
+      |  FROM events GROUP BY 1, 2),
+      |lims AS (SELECT g, min(d) AS lo, max(d) AS hi
+      |  FROM counted GROUP BY 1),
+      |grid AS (SELECT g, unnest(generate_series(lo, hi)) AS d
+      |  FROM lims),
+      |daily AS (SELECT grid.g, grid.d, coalesce(x, 0) AS x
+      |  FROM grid LEFT JOIN counted
+      |    ON grid.g = counted.g AND grid.d = counted.d),""".stripMargin
+
+  /** Oracle side of the n_chars drift queries (256 width-4 bins): the
+    * FROM that closes the caller's even-id `aa` SELECT, the shifted
+    * odd-id sample `bb`, the dense (lang, bin) `grid`, per-side counts
+    * `ka`/`kb` and their join `j` (`ca`, `cb`), ending in a comma.
+    */
+  val nCharsBinCtes: String =
+    """  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
+      |bb AS (
+      |  SELECT lang, CAST(least(greatest(
+      |      floor(CAST(n_chars + 100 AS DOUBLE) / 4.0), 0), 255)
+      |      AS BIGINT) AS b
+      |  FROM documents WHERE doc_id % 2 <> 0 AND n_chars IS NOT NULL),
+      |langs AS (SELECT DISTINCT lang FROM documents),
+      |grid AS (SELECT lang, s AS b FROM langs
+      |         CROSS JOIN (SELECT unnest(range(256)) AS s)),
+      |ka AS (SELECT lang, b, count(*) AS c FROM aa GROUP BY 1, 2),
+      |kb AS (SELECT lang, b, count(*) AS c FROM bb GROUP BY 1, 2),
+      |j AS (SELECT g.lang, g.b, coalesce(ka.c, 0) AS ca,
+      |        coalesce(kb.c, 0) AS cb
+      |      FROM grid g
+      |      LEFT JOIN ka ON g.lang = ka.lang AND g.b = ka.b
+      |      LEFT JOIN kb ON g.lang = kb.lang AND g.b = kb.b),""".stripMargin
+
+  /** The two n_chars samples' per-bin CDFs over [[nCharsBinCtes]]:
+    * `cum` (`cum_a`, `cum_b`, totals `n_a`, `n_b`), with WITH and no
+    * trailing comma.
+    */
+  def nCharsCdfCtes: String =
+    s"""WITH aa AS (
+       |  SELECT lang, CAST(least(greatest(
+       |      floor(CAST(n_chars AS DOUBLE) / 4.0), 0), 255) AS BIGINT)
+       |      AS b
+       |$nCharsBinCtes
+       |cum AS (SELECT lang, b,
+       |          sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
+       |          sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
+       |        FROM j
+       |        WINDOW w AS (PARTITION BY lang ORDER BY b),
+       |               wa AS (PARTITION BY lang))""".stripMargin
+
+  /** Three versions of customer (`c_custkey`, `c_nationkey`,
+    * `c_mktsegment`) for the SCD2 queries: v1 as loaded (`ver` 1); v2
+    * with every 11th key deleted and every 7th key's nation bumped
+    * (`ver` 2); v3 with the same bump and every 5th segment 'MOVED'
+    * (no `ver` column: callers stamp or apply it).
+    */
+  def customerVersions(
+      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val cust = t(s, dir, "customer")
+      .select("c_custkey", "c_nationkey", "c_mktsegment")
+    val bump = when(col("c_custkey") % 7 === 0,
+      col("c_nationkey") + 1).otherwise(col("c_nationkey"))
+    (cust.withColumn("ver", lit(1)),
+      cust.filter(col("c_custkey") % 11 =!= 0)
+        .withColumn("c_nationkey", bump)
+        .withColumn("ver", lit(2)),
+      cust
+        .withColumn("c_nationkey", bump)
+        .withColumn("c_mktsegment", when(col("c_custkey") % 5 === 0,
+          lit("MOVED")).otherwise(col("c_mktsegment"))))
+  }
+
+  /** Oracle twin of [[customerVersions]] and the run numbering
+    * `Scd2.history` applies to it: the version log `vlog`, its
+    * fingerprints `f`, the new-run flags `g` and the run ids `r` (with
+    * WITH, ending in a comma).
+    */
+  def customerVersionRunCtes: String =
+    s"""WITH v1 AS (
+       |  SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver
+       |  FROM customer),
+       |v2 AS (
+       |  SELECT c_custkey,
+       |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
+       |      ELSE c_nationkey END AS c_nationkey,
+       |    c_mktsegment, 2 AS ver
+       |  FROM customer WHERE c_custkey % 11 <> 0),
+       |v3 AS (
+       |  SELECT c_custkey,
+       |    CASE WHEN c_custkey % 7 = 0 THEN c_nationkey + 1
+       |      ELSE c_nationkey END AS c_nationkey,
+       |    CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
+       |      ELSE c_mktsegment END AS c_mktsegment,
+       |    3 AS ver FROM customer),
+       |vlog AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
+       |         UNION ALL SELECT * FROM v3),
+       |f AS (SELECT *, ${SnapshotDiff.duckFingerprint(
+                Seq("c_nationkey", "c_mktsegment"))} AS fp
+       |      FROM vlog),
+       |g AS (SELECT *, CASE WHEN lag(fp) OVER w IS NULL
+       |        OR lag(fp) OVER w <> fp THEN 1 ELSE 0 END AS nr
+       |      FROM f WINDOW w AS (PARTITION BY c_custkey ORDER BY ver)),
+       |r AS (SELECT *, sum(nr) OVER (
+       |        PARTITION BY c_custkey ORDER BY ver) AS run
+       |      FROM g),""".stripMargin
+
+  /** Oracle twin of the n_chars `graft_hist` sketch (256 width-4 bins over
+    * [0, 1024) per lang): per-bin counts `cc` with running `cum` and
+    * `total` (with WITH, ending in a comma).
+    */
+  val nCharsHistCtes: String =
+    """WITH v AS (
+      |  SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
+      |  WHERE n_chars IS NOT NULL),
+      |b AS (SELECT lang, CAST(least(greatest(floor(v / 4.0), 0), 255)
+      |        AS BIGINT) AS b FROM v),
+      |c AS (SELECT lang, b, count(*) AS cnt FROM b GROUP BY lang, b),
+      |cc AS (SELECT lang, b, cnt,
+      |         sum(cnt) OVER (PARTITION BY lang ORDER BY b) AS cum,
+      |         sum(cnt) OVER (PARTITION BY lang) AS total
+      |       FROM c),""".stripMargin
+
+  /** Oracle for the n_chars histogram percentiles at p = 0.25, 0.5,
+    * 0.9 and 0.99, whether the sketch is built in one pass or folded
+    * from a stored index.
+    */
+  def nCharsHistPercentilesSql: String =
+    s"""$nCharsHistCtes
+       |p AS (SELECT CAST(unnest([0.25, 0.5, 0.9, 0.99]) AS DOUBLE) AS p)
+       |SELECT lang, p, CAST(total AS BIGINT) AS n,
+       |  round(4.0 * (CAST(b AS DOUBLE)
+       |    + (p * CAST(total AS DOUBLE) - CAST(cum - cnt AS DOUBLE))
+       |      / CAST(cnt AS DOUBLE)), 4) + 0.0 AS est
+       |FROM cc, p
+       |WHERE CAST(cum AS DOUBLE) >= p * CAST(total AS DOUBLE)
+       |  AND CAST(cum - cnt AS DOUBLE) < p * CAST(total AS DOUBLE)
+       |ORDER BY lang, p""".stripMargin
+
+  /** Oracle twin of `GemPipeline.finalizeSchema` over a `roll` CTE: the
+    * 19 output columns with the ISO-2 dim joined as `cd`, up to (not
+    * including) the ORDER BY.
+    */
+  def gemFinalizeSql: String =
+    """SELECT roll.loc_id AS asset_id, roll.plant AS asset_name,
+      |    CAST(NULL AS VARCHAR) AS company_id, roll.company AS company_name,
+      |    CASE WHEN roll.country = 'Kosovo' THEN 'XK' ELSE cd.iso2 END AS country_iso2,
+      |    roll.country AS country_name, roll.region,
+      |    coalesce(CAST(roll.lat AS VARCHAR), 'NA') || ', ' ||
+      |      coalesce(CAST(roll.lon AS VARCHAR), 'NA') AS coordinates,
+      |    CAST(NULL AS DOUBLE) AS workforce_size,
+      |    CAST(NULL AS VARCHAR) AS workforce_source,
+      |    'Power' AS sector, roll.technology, roll.capacity,
+      |    'MW' AS capacity_unit, roll.year AS production_year,
+      |    CAST(NULL AS DOUBLE) AS plant_age_years,
+      |    CAST(NULL AS DOUBLE) AS plant_age_rank,
+      |    CAST(NULL AS DOUBLE) AS capacity_factor,
+      |    CAST(NULL AS DOUBLE) AS emission_factor
+      |FROM roll LEFT JOIN """.stripMargin + CountryDim.duckValuesSql +
+      " ON roll.country = cd.country_name"
+
+  /** DuckDB pieces of the p = 6 HyperLogLog sketch over a `token`
+    * column (`CardinalityEstimate`): the portable hash `h`, the
+    * register rank `rho`, the bias constant `alpha` and 2^55 `two55`.
+    */
+  object hllSql {
+    val h: String = Hashing.duckPortableHash("token")
+    val rho: String = "CASE WHEN h // 64 = 0 THEN 55" +
+      " ELSE 55 - length(bin(h // 64)) END"
+    val alpha: String = "(0.7213 / (1.0 + 1.079 / 64.0))"
+    val two55: String = "(CAST(1 AS BIGINT) << 55)"
+
+    /** The sketch per source over the space-split tokens of documents:
+      * `tok`, hashes `hh`, registers `rr`, scaled sums `sg`, raw and
+      * corrected estimates `est`/`est2` (with WITH, ending in a comma).
+      */
+    def hllCtes: String =
+      s"""WITH tok AS (
+         |  SELECT source, unnest(list_filter(
+         |    string_split_regex(text, ' +'), t -> t <> '')) AS token
+         |  FROM documents),
+         |hh AS (SELECT source, token, $h AS h FROM tok),
+         |rr AS (SELECT source, h % 64 AS b, max($rho) AS m
+         |  FROM hh GROUP BY 1, 2),
+         |sg AS (SELECT source,
+         |    CAST(count(*) AS BIGINT) AS registers_used,
+         |    64 - CAST(count(*) AS BIGINT) AS zeros,
+         |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
+         |      AS BIGINT) +
+         |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS sum_scaled
+         |  FROM rr GROUP BY 1),
+         |est AS (SELECT *,
+         |    $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
+         |      CAST(sum_scaled AS DOUBLE) AS raw
+         |  FROM sg),
+         |est2 AS (SELECT *,
+         |    CASE WHEN raw <= 2.5 * 64.0 AND zeros > 0
+         |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
+         |      ELSE raw END AS e
+         |  FROM est),""".stripMargin
+
+    /** The estimate `merged_est` of the registers merged across
+      * sources, from a per-bucket max register CTE `mrr` (b, m): the
+      * union sketch's scaled sum `msum` and its corrected estimate
+      * `mest` (no trailing comma).
+      */
+    def mergedEstCtes: String =
+      s"""msum AS (SELECT 64 - CAST(count(*) AS BIGINT) AS zeros,
+         |    CAST(sum(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
+         |      AS BIGINT) +
+         |      (64 - CAST(count(*) AS BIGINT)) * $two55 AS ss
+         |  FROM mrr),
+         |mest AS (SELECT round(CASE WHEN raw <= 2.5 * 64.0
+         |      AND zeros > 0
+         |      THEN 64.0 * ln(64.0 / CAST(zeros AS DOUBLE))
+         |      ELSE raw END, 2) AS merged_est
+         |  FROM (SELECT zeros,
+         |      $alpha * 64.0 * 64.0 * CAST($two55 AS DOUBLE) /
+         |        CAST(ss AS DOUBLE) AS raw
+         |    FROM msum))""".stripMargin
+  }
+
+  /** The nation trade graph of the graph-metric queries: one
+    * (`c_nationkey`, `s_nationkey`, `n`) edge per customer-nation →
+    * supplier-nation pair with at least 100 line items.
+    */
+  def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
+    val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
+    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+    val supp = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust
+      .join(ord, col("c_custkey") === col("o_custkey"))
+      .join(li, col("o_orderkey") === col("l_orderkey"))
+      .join(supp, col("l_suppkey") === col("s_suppkey"))
+      .groupBy("c_nationkey", "s_nationkey")
+      .agg(count(lit(1)).as("n"))
+      .where(col("n") >= 100)
+  }
+
+  /** Oracle twin of [[tradeEdges]] as the canonical undirected edge set
+    * `e` (`a` < `b`) and its node degrees `deg` (with WITH, ending in a
+    * comma).
+    */
+  val tradeGraphCtes: String =
+    """WITH tr AS (
+      |  SELECT c_nationkey AS x, s_nationkey AS y, count(*) AS n
+      |  FROM customer
+      |  JOIN orders ON c_custkey = o_custkey
+      |  JOIN lineitem ON o_orderkey = l_orderkey
+      |  JOIN supplier ON l_suppkey = s_suppkey
+      |  GROUP BY 1, 2 HAVING count(*) >= 100),
+      |e AS (SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
+      |      FROM tr WHERE x <> y),
+      |deg AS (SELECT node, count(*) AS degree FROM (
+      |          SELECT a AS node FROM e
+      |          UNION ALL SELECT b FROM e)
+      |        GROUP BY 1),""".stripMargin
+
+  /** q361/q362's maintained cluster map in `table`: built over the
+    * doc_id < 500 half of the first 1000 documents, then merged with
+    * the other half as one ingest batch.
+    */
+  def buildAndMergeClusterMap(
+      s: SparkSession, dir: String, table: String): Unit = {
+    val docs = t(s, dir, "documents")
+      .filter(col("doc_id") < 1000).select("doc_id", "text")
+    val old = docs.filter(col("doc_id") < 500)
+    val batch = docs.filter(col("doc_id") >= 500)
+      .localCheckpoint(true)
+    // One band/token build per corpus half: the three pair frames
+    // share one signature fold and one tokenize fold.
+    val (oldPairs, internal, cross) = Dedup.maintenancePairSets(
+      old, batch, "doc_id", "text",
+      k = 64, bands = 8, threshold = 0.8)
+    Components.writeClusterIndex(s, old, "doc_id", oldPairs,
+      "id_a", "id_b", table, buckets = 8)
+    Components.mergeClusterIndex(s, table,
+      batch, "doc_id", internal, "id_a", "id_b",
+      cross, "batch_id", "index_id", buckets = 8)
+  }
+
+  /** Oracle twin of `Similarity`'s exact-cosine top-k tail at k = 3:
+    * scores the (`query_id`, `qvec`) × (`neighbor_id`, `cvec`)
+    * candidates of `from`, ranks them per query (ties to the smaller
+    * id) and ends in the final ordered SELECT.
+    */
+  def cosineTop3Sql(from: String): String =
+    s"""scored AS (
+       |  SELECT query_id, neighbor_id,
+       |    ${duckCos("qvec", "cvec")} AS cos
+       |  FROM $from),
+       |ranked AS (
+       |  SELECT query_id, neighbor_id,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY cos DESC, neighbor_id) AS "rank", cos
+       |  FROM scored)
+       |SELECT query_id, neighbor_id, "rank", round(cos, 4) AS cos
+       |FROM ranked WHERE "rank" <= 3
+       |ORDER BY query_id, "rank"""".stripMargin
+
+  /** Oracle twin of `Sampling.temperatureMix` (sqrt-n source rates
+    * toward `targetRows`) then `Sampling.shuffleShards` (hash order,
+    * `shardSize` docs per shard) over a `kept` (doc_id, source) CTE;
+    * ends in the final ordered SELECT.
+    */
+  def mixShardSql(targetRows: Int, shardSize: Int): String =
+    s"""mixn AS (SELECT source, count(*) AS n FROM kept GROUP BY source),
+       |mixs AS (SELECT source, n,
+       |    CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS s6 FROM mixn),
+       |mixt AS (SELECT sum(s6) AS tot6 FROM mixs),
+       |mixr AS (SELECT source, least(1000000, CAST(
+       |    CAST(s6 AS HUGEINT) * $targetRows * 1000000 //
+       |      (CAST(tot6 AS HUGEINT) * n) AS BIGINT)) AS rate_ppm
+       |  FROM mixs CROSS JOIN mixt),
+       |mixed AS (
+       |  SELECT k.doc_id, k.source, r.rate_ppm
+       |  FROM kept k JOIN mixr r USING (source)
+       |  WHERE ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")}
+       |    % 1000000 < r.rate_ppm),
+       |hashed AS (
+       |  SELECT source, doc_id, rate_ppm,
+       |    ${Hashing.duckPortableHash("CAST(doc_id AS VARCHAR)")} AS h
+       |  FROM mixed)
+       |SELECT source, doc_id, rate_ppm,
+       |  row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1
+       |    AS "rank",
+       |  (row_number() OVER (ORDER BY h, CAST(doc_id AS VARCHAR)) - 1)
+       |    // $shardSize AS shard
+       |FROM hashed ORDER BY "rank"""".stripMargin
+
+  /** Oracle twin of `Itemsets.rules` over a `b` (basket, item) CTE:
+    * frequent items and pairs at `minSupport`, both rule directions,
+    * support/confidence/lift; ends in the final ordered SELECT.
+    */
+  def assocRulesSql(minSupport: Int): String =
+    s"""nb AS (SELECT count(DISTINCT basket) AS n FROM b),
+       |l1 AS (SELECT item, count(*) AS n_item FROM b
+       |       GROUP BY 1 HAVING count(*) >= $minSupport),
+       |fb AS (SELECT b.basket, b.item FROM b JOIN l1 USING (item)),
+       |p AS (SELECT x.item AS item_a, y.item AS item_b,
+       |        count(*) AS n_both
+       |      FROM fb x JOIN fb y
+       |        ON x.basket = y.basket AND x.item < y.item
+       |      GROUP BY 1, 2 HAVING count(*) >= $minSupport),
+       |d AS (SELECT item_a AS antecedent, item_b AS consequent,
+       |        n_both FROM p
+       |      UNION ALL
+       |      SELECT item_b, item_a, n_both FROM p)
+       |SELECT antecedent, consequent, n_both,
+       |  la.n_item AS n_ante, lc.n_item AS n_cons,
+       |  round(CAST(n_both AS DOUBLE) / nb.n, 6) AS support,
+       |  round(CAST(n_both AS DOUBLE) / la.n_item, 6) AS confidence,
+       |  round(CAST(n_both AS DOUBLE) * nb.n /
+       |    (CAST(la.n_item AS DOUBLE) * lc.n_item), 6) AS lift
+       |FROM d
+       |JOIN l1 la ON d.antecedent = la.item
+       |JOIN l1 lc ON d.consequent = lc.item, nb
+       |ORDER BY 1, 2""".stripMargin
+
+  /** Oracle of the SCD2 history over [[customerVersions]]: validity
+    * runs per key, counted per (valid_from, valid_to, is_current).
+    */
+  def scd2HistorySql: String =
+    s"""$customerVersionRunCtes
+       |runs AS (SELECT c_custkey, run, min(ver) AS valid_from
+       |         FROM r GROUP BY 1, 2),
+       |iv AS (SELECT c_custkey, valid_from,
+       |         lead(valid_from) OVER (
+       |           PARTITION BY c_custkey ORDER BY valid_from) - 1
+       |           AS valid_to
+       |       FROM runs)
+       |SELECT valid_from, valid_to, valid_to IS NULL AS is_current,
+       |  count(*) AS n, count(DISTINCT c_custkey) AS n_keys
+       |FROM iv GROUP BY 1, 2, 3
+       |ORDER BY 1, 2 NULLS FIRST""".stripMargin
+
+  /** Whitespace-token counts before (`ca`, over every document) and
+    * after exact dedup (`cb`, over the min-id `keep` set), as CTEs
+    * `tka`..`cb` ending in a comma.
+    */
+  val dedupTokenCountCtes: String =
+    """tka AS (SELECT unnest(list_filter(
+      |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
+      |  FROM documents),
+      |ca AS (SELECT tok, count(*) AS c_a FROM tka GROUP BY 1),
+      |keep AS (SELECT min(doc_id) AS doc_id FROM documents
+      |  GROUP BY md5(text)),
+      |tkb AS (SELECT unnest(list_filter(
+      |    string_split_regex(text, ' +'), t -> t <> '')) AS tok
+      |  FROM documents
+      |  WHERE doc_id IN (SELECT doc_id FROM keep)),
+      |cb AS (SELECT tok, count(*) AS c_b FROM tkb GROUP BY 1),""".stripMargin
+
+  /** One token's term of the Jensen-Shannon divergence between the
+    * `c_a`/`tokens_a` and `c_b`/`tokens_b` distributions, in integer
+    * nano-nats, as the select item `t`.
+    */
+  val jsTermSql: String =
+    """    (CASE WHEN c_a > 0 THEN CAST(round(
+      |      CAST(c_a AS DOUBLE) / tokens_a / 2.0 *
+      |      ln((CAST(c_a AS DOUBLE) / tokens_a) /
+      |        ((CAST(c_a AS DOUBLE) / tokens_a +
+      |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
+      |      1000000000.0) AS BIGINT) ELSE 0 END
+      |   + CASE WHEN c_b > 0 THEN CAST(round(
+      |      CAST(c_b AS DOUBLE) / tokens_b / 2.0 *
+      |      ln((CAST(c_b AS DOUBLE) / tokens_b) /
+      |        ((CAST(c_a AS DOUBLE) / tokens_a +
+      |          CAST(c_b AS DOUBLE) / tokens_b) / 2.0)) *
+      |      1000000000.0) AS BIGINT) ELSE 0 END) AS t""".stripMargin
+
+  /** Oracle twin of the web-curation steps over the documents CTE
+    * `src` (`id`, `canon`, `domain`) and a `hits` (doc_id) CTE: `s1`
+    * one doc per canonical URL, `s2` at most 20 per domain, `s3` none
+    * flagged by `hits` (no trailing comma).
+    */
+  def webCurateCtes(src: String): String =
+    s"""s1 AS (
+       |  SELECT * FROM (
+       |    SELECT *, CASE WHEN canon IS NULL THEN 1
+       |      ELSE row_number() OVER (PARTITION BY canon
+       |        ORDER BY id) END AS rk
+       |    FROM $src) WHERE rk = 1),
+       |s2 AS (
+       |  SELECT * FROM (
+       |    SELECT *, CASE WHEN domain IS NULL THEN 1
+       |      ELSE row_number() OVER (PARTITION BY domain
+       |        ORDER BY md5(CAST(id AS VARCHAR)), id) END AS rk2
+       |    FROM s1) WHERE rk2 <= 20),
+       |flagged AS (SELECT DISTINCT doc_id FROM hits),
+       |s3 AS (SELECT * FROM s2
+       |       WHERE id NOT IN (SELECT doc_id FROM flagged))""".stripMargin
+
+  /** Oracle twin of `Sessionize.gapSessions` over events per user with a
+    * 30-minute gap: `b0`, lagged `l` and session ids `s` (`sess`), with
+    * WITH, ending in a comma.
+    */
+  val eventSessionCtes: String =
+    """WITH b0 AS (
+      |  SELECT user_id, event_id, event_type, epoch_us(ts) AS t
+      |  FROM events),
+      |l AS (SELECT *, lag(t) OVER (PARTITION BY user_id
+      |    ORDER BY t, event_id) AS pt FROM b0),
+      |s AS (SELECT *, sum(CASE WHEN pt IS NULL
+      |      OR t - pt > 1800000000 THEN 1 ELSE 0 END)
+      |    OVER (PARTITION BY user_id ORDER BY t, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS sess
+      |  FROM l),""".stripMargin
 }

@@ -237,20 +237,8 @@ object EventStream {
     */
   def correlate(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, within: String,
-      watermark: String = "2 hours"): DataFrame = {
-    // Explicit aliases: when both sides derive from the SAME source
-    // frame (self-attribution), bare `l(key) === r(key)` resolves to
-    // one attribute and Spark warns about a trivially-true predicate;
-    // qualified names always mean "left's key = right's key".
-    val l = (if (left.isStreaming) left.withWatermark(leftTs, watermark)
-             else left).alias("cl")
-    val r = (if (right.isStreaming) right.withWatermark(rightTs, watermark)
-             else right).alias("cr")
-    l.join(r, col(s"cl.$key") === col(s"cr.$key") &&
-      col(rightTs) >= col(leftTs) &&
-      col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"))
-      .drop(col(s"cr.$key"))
-  }
+      watermark: String = "2 hours"): DataFrame =
+    intervalJoin(left, right, key, leftTs, rightTs, within, watermark, "inner")
 
   /** LEFT-OUTER stream-stream correlation — [[correlate]]'s join with
     * the "what never got an answer" rows kept: a left event with no
@@ -267,7 +255,20 @@ object EventStream {
     */
   def correlateOuter(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, within: String,
-      watermark: String = "2 hours"): DataFrame = {
+      watermark: String = "2 hours"): DataFrame =
+    intervalJoin(left, right, key, leftTs, rightTs, within, watermark,
+      "leftOuter")
+
+  /** The watermarked interval join behind [[correlate]] and
+    * [[correlateOuter]].
+    */
+  private def intervalJoin(left: DataFrame, right: DataFrame, key: String,
+      leftTs: String, rightTs: String, within: String, watermark: String,
+      joinType: String): DataFrame = {
+    // Explicit aliases: when both sides derive from the SAME source
+    // frame (self-attribution), bare `l(key) === r(key)` resolves to
+    // one attribute and Spark warns about a trivially-true predicate;
+    // qualified names always mean "left's key = right's key".
     val l = (if (left.isStreaming) left.withWatermark(leftTs, watermark)
              else left).alias("cl")
     val r = (if (right.isStreaming) right.withWatermark(rightTs, watermark)
@@ -275,8 +276,41 @@ object EventStream {
     l.join(r, col(s"cl.$key") === col(s"cr.$key") &&
       col(rightTs) >= col(leftTs) &&
       col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"),
-      "leftOuter")
+      joinType)
       .drop(col(s"cr.$key"))
+  }
+
+  /** The skeleton every foreachBatch maintainer below shares. Per
+    * micro-batch it drops the cached file listing of each `refreshed`
+    * table, pins the batch once, and hands (session, pinned batch,
+    * batch id) to `body`. The tables grew LAST batch, and session
+    * relation caches do not see appends made by other clones, so the
+    * refresh makes this batch probe the appended state.
+    */
+  private def maintain(source: DataFrame, checkpoint: String,
+      refreshed: String*)(body: (SparkSession, DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val sp = batch.sparkSession
+        refreshed.foreach(Layout.refresh(sp, _))
+        body(sp, batch.localCheckpoint(true), batchId)
+      }
+      .start()
+
+  /** Grows the persisted near-dup index by one pinned batch `b`: its
+    * MinHash bands keep the `band_hash` bucket layout, its token sets
+    * append flat.
+    */
+  private def appendNearDupIndex(b: DataFrame, bandsTable: String,
+      toksTable: String, k: Int, bands: Int, batchId: Long): Unit = {
+    import graft.ops.Dedup
+    Layout.idempotentAppendBucketed(
+      Dedup.lshBands(b, "doc_id", "text", k, bands),
+      bandsTable, "band_hash", batchId = batchId)
+    Layout.idempotentAppendTable(
+      Dedup.tokenIndex(b, "doc_id", "text"), toksTable, batchId)
   }
 
   /** File-source streaming entry: treat a directory of event parquet as
@@ -316,32 +350,17 @@ object EventStream {
       k: Int = 16, bands: Int = 4, threshold: Double = 0.7)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.Dedup
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        // The index tables grew LAST batch: drop any cached file
-        // listing so this batch probes the appended state (session
-        // relation caches do not see appends made by other clones).
-        Layout.refresh(sp, bandsTable)
-        Layout.refresh(sp, toksTable)
-        val b = batch.localCheckpoint(true)
-        Layout.idempotentAppendTable(
-          Dedup.incrementalNearDupsFromIndex(b, "doc_id", "text",
-              Layout.table(sp, bandsTable), Layout.table(sp, toksTable),
-              k, bands, threshold)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        // Index growth: the batch joins the standing corpus for every
-        // LATER batch. Bands keep the bucket layout; toks append flat.
-        Layout.idempotentAppendBucketed(
-          Dedup.lshBands(b, "doc_id", "text", k, bands),
-          bandsTable, "band_hash", batchId = batchId)
-        Layout.idempotentAppendTable(
-          Dedup.tokenIndex(b, "doc_id", "text"), toksTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, bandsTable, toksTable) { (sp, b, batchId) =>
+      Layout.idempotentAppendTable(
+        Dedup.incrementalNearDupsFromIndex(b, "doc_id", "text",
+            Layout.table(sp, bandsTable), Layout.table(sp, toksTable),
+            k, bands, threshold)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+      // Index growth: the batch joins the standing corpus for every
+      // LATER batch.
+      appendNearDupIndex(b, bandsTable, toksTable, k, bands, batchId)
+    }
   }
 
   /** Operational EMBEDDING ingest — the vector twin of
@@ -363,31 +382,23 @@ object EventStream {
       shortlist: Int = 20, minCos: Double = 0.0, buckets: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.Similarity
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, idxTable)
-        Layout.refresh(sp, vecsTable)
-        val b = batch.localCheckpoint(true)
-        val cents = Layout.table(sp, centsTable)
-        Layout.idempotentAppendTable(
-          Similarity.ivfSq8TopKFromIndex(
-              Layout.table(sp, vecsTable), b, cents,
-              Layout.table(sp, idxTable),
-              idCol, vecCol, k, nProbe, shortlist)
-            .where(col("cos") >= minCos)
-            .select(col("query_id").as("batch_id"),
-              col("neighbor_id").as("index_id"), col("rank"), col("cos"))
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        Layout.idempotentAppendBucketed(
-          Similarity.buildIvfSq8Index(b, cents, idCol, vecCol),
-          idxTable, "cell_id", buckets, batchId = batchId)
-        Layout.idempotentAppendTable(b, vecsTable, batchId)
-        ()
-      }
-      .start()
+    maintain(vecs, checkpoint, idxTable, vecsTable) { (sp, b, batchId) =>
+      val cents = Layout.table(sp, centsTable)
+      Layout.idempotentAppendTable(
+        Similarity.ivfSq8TopKFromIndex(
+            Layout.table(sp, vecsTable), b, cents,
+            Layout.table(sp, idxTable),
+            idCol, vecCol, k, nProbe, shortlist)
+          .where(col("cos") >= minCos)
+          .select(col("query_id").as("batch_id"),
+            col("neighbor_id").as("index_id"), col("rank"), col("cos"))
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+      Layout.idempotentAppendBucketed(
+        Similarity.buildIvfSq8Index(b, cents, idCol, vecCol),
+        idxTable, "cell_id", buckets, batchId = batchId)
+      Layout.idempotentAppendTable(b, vecsTable, batchId)
+    }
   }
 
   /** Operational LEXICAL-index ingest — the BM25 member of the
@@ -412,32 +423,24 @@ object EventStream {
       k: Int = 10, buckets: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.Retrieval
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, postingsTable)
-        Layout.refresh(sp, statsTable)
-        val b = batch.localCheckpoint(true)
-        Layout.idempotentAppendBucketed(
-          Retrieval.bm25Postings(b, "doc_id", "text"),
-          postingsTable, "term", buckets, batchId = batchId)
-        Layout.idempotentAppendTable(
-          Retrieval.bm25StatsPartial(b, "doc_id", "text")
-            .withColumn("ingest_batch", lit(batchId)),
-          statsTable, batchId)
-        Layout.refresh(sp, postingsTable)
-        Layout.refresh(sp, statsTable)
-        Layout.idempotentAppendTable(
-          Retrieval.bm25TopKFromIndex(
-              Layout.table(sp, postingsTable),
-              Retrieval.bm25MergeStats(Layout.table(sp, statsTable)),
-              "doc_id", queryTerms, k)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, postingsTable, statsTable) { (sp, b, batchId) =>
+      Layout.idempotentAppendBucketed(
+        Retrieval.bm25Postings(b, "doc_id", "text"),
+        postingsTable, "term", buckets, batchId = batchId)
+      Layout.idempotentAppendTable(
+        Retrieval.bm25StatsPartial(b, "doc_id", "text")
+          .withColumn("ingest_batch", lit(batchId)),
+        statsTable, batchId)
+      Layout.refresh(sp, postingsTable)
+      Layout.refresh(sp, statsTable)
+      Layout.idempotentAppendTable(
+        Retrieval.bm25TopKFromIndex(
+            Layout.table(sp, postingsTable),
+            Retrieval.bm25MergeStats(Layout.table(sp, statsTable)),
+            "doc_id", queryTerms, k)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** Operational ANCHOR-FIELD ingest (round 18 — VERDICT r17 task 8):
@@ -494,76 +497,68 @@ object EventStream {
       maxTexts: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.{Retrieval, WebCorpus}
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Seq(bodyPostingsTable, bodyStatsTable, edgesTable, docsTable,
-          anchorPostingsTable, docGenTable)
-          .foreach(Layout.refresh(sp, _))
-        val b = batch.localCheckpoint(true)
-        // 1. body side
-        Layout.idempotentAppendBucketed(
-          Retrieval.bm25Postings(b, "doc_id", "text"),
-          bodyPostingsTable, "term", buckets, batchId = batchId)
-        Layout.idempotentAppendTable(
-          Retrieval.bm25StatsPartial(b, "doc_id", "text")
-            .withColumn("ingest_batch", lit(batchId)),
-          bodyStatsTable, batchId)
-        // 2. anchor history
-        val bEdges = WebCorpus.anchorEdgeCounts(b, "url", "html")
-          .localCheckpoint(true)
-        val bDocs = b.select(col("doc_id"),
-            WebCorpus.canonUrl(col("url")).as("dst_url"))
-          .where(col("dst_url").isNotNull)
-          .localCheckpoint(true)
-        Layout.idempotentAppendBucketed(bEdges, edgesTable,
-          "dst_url", buckets, batchId = batchId)
-        Layout.idempotentAppendBucketed(bDocs, docsTable,
-          "dst_url", buckets, batchId = batchId)
-        Layout.refresh(sp, edgesTable)
-        Layout.refresh(sp, docsTable)
-        // 3. rebuild touched pages' field → new postings generation
-        val touched = bEdges.select("dst_url")
-          .union(bDocs.select("dst_url")).distinct()
-        val folded = Layout.table(sp, edgesTable)
-          .join(broadcast(touched), "dst_url")
-          .groupBy("dst_url", "anchor_text")
-          .agg(sum("n_links").as("n_links"))
-        val field = WebCorpus.anchorFieldFromEdges(folded, maxTexts)
-        val affected = Layout.table(sp, docsTable)
-          .join(broadcast(touched), "dst_url")
-          .join(field, "dst_url")
-          .select("doc_id", "anchor_text")
-          .localCheckpoint(true)
-        Layout.idempotentAppendBucketed(
-          Retrieval.bm25Postings(affected, "doc_id", "anchor_text")
-            .withColumn("gen", lit(batchId)),
-          anchorPostingsTable, "term", buckets, batchId = batchId)
-        Layout.idempotentAppendBucketed(
-          affected.select(col("doc_id"),
-            size(graft.ops.TextAnalysis.tokens(col("anchor_text")))
-              .as("dl"))
-            .withColumn("gen", lit(batchId)),
-          docGenTable, "doc_id", buckets, batchId = batchId)
-        Layout.refresh(sp, anchorPostingsTable)
-        Layout.refresh(sp, docGenTable)
-        // 4. serve from the stored index
-        Layout.idempotentAppendTable(
-          Retrieval.bm25TopKWithAnchorsFromIndex(
-              Layout.table(sp, bodyPostingsTable),
-              Retrieval.bm25MergeStats(Layout.table(sp, bodyStatsTable)),
-              Retrieval.anchorPostingsCurrent(
-                Layout.table(sp, anchorPostingsTable),
-                Layout.table(sp, docGenTable)),
-              Retrieval.anchorStatsCurrent(
-                Layout.table(sp, docGenTable)),
-              "doc_id", queryTerms, k, anchorWeight = anchorWeight)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, bodyPostingsTable, bodyStatsTable, edgesTable,
+        docsTable, anchorPostingsTable, docGenTable) { (sp, b, batchId) =>
+      // 1. body side
+      Layout.idempotentAppendBucketed(
+        Retrieval.bm25Postings(b, "doc_id", "text"),
+        bodyPostingsTable, "term", buckets, batchId = batchId)
+      Layout.idempotentAppendTable(
+        Retrieval.bm25StatsPartial(b, "doc_id", "text")
+          .withColumn("ingest_batch", lit(batchId)),
+        bodyStatsTable, batchId)
+      // 2. anchor history
+      val bEdges = WebCorpus.anchorEdgeCounts(b, "url", "html")
+        .localCheckpoint(true)
+      val bDocs = b.select(col("doc_id"),
+          WebCorpus.canonUrl(col("url")).as("dst_url"))
+        .where(col("dst_url").isNotNull)
+        .localCheckpoint(true)
+      Layout.idempotentAppendBucketed(bEdges, edgesTable,
+        "dst_url", buckets, batchId = batchId)
+      Layout.idempotentAppendBucketed(bDocs, docsTable,
+        "dst_url", buckets, batchId = batchId)
+      Layout.refresh(sp, edgesTable)
+      Layout.refresh(sp, docsTable)
+      // 3. rebuild touched pages' field → new postings generation
+      val touched = bEdges.select("dst_url")
+        .union(bDocs.select("dst_url")).distinct()
+      val folded = Layout.table(sp, edgesTable)
+        .join(broadcast(touched), "dst_url")
+        .groupBy("dst_url", "anchor_text")
+        .agg(sum("n_links").as("n_links"))
+      val field = WebCorpus.anchorFieldFromEdges(folded, maxTexts)
+      val affected = Layout.table(sp, docsTable)
+        .join(broadcast(touched), "dst_url")
+        .join(field, "dst_url")
+        .select("doc_id", "anchor_text")
+        .localCheckpoint(true)
+      Layout.idempotentAppendBucketed(
+        Retrieval.bm25Postings(affected, "doc_id", "anchor_text")
+          .withColumn("gen", lit(batchId)),
+        anchorPostingsTable, "term", buckets, batchId = batchId)
+      Layout.idempotentAppendBucketed(
+        affected.select(col("doc_id"),
+          size(graft.ops.TextAnalysis.tokens(col("anchor_text")))
+            .as("dl"))
+          .withColumn("gen", lit(batchId)),
+        docGenTable, "doc_id", buckets, batchId = batchId)
+      Layout.refresh(sp, anchorPostingsTable)
+      Layout.refresh(sp, docGenTable)
+      // 4. serve from the stored index
+      Layout.idempotentAppendTable(
+        Retrieval.bm25TopKWithAnchorsFromIndex(
+            Layout.table(sp, bodyPostingsTable),
+            Retrieval.bm25MergeStats(Layout.table(sp, bodyStatsTable)),
+            Retrieval.anchorPostingsCurrent(
+              Layout.table(sp, anchorPostingsTable),
+              Layout.table(sp, docGenTable)),
+            Retrieval.anchorStatsCurrent(
+              Layout.table(sp, docGenTable)),
+            "doc_id", queryTerms, k, anchorWeight = anchorWeight)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** Operational CLUSTER-map ingest — incremental dedup clusters that
@@ -592,31 +587,18 @@ object EventStream {
       buckets: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.{Components, Dedup}
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, bandsTable)
-        Layout.refresh(sp, toksTable)
-        Layout.refresh(sp, clusterTable)
-        val b = batch.localCheckpoint(true)
-        val cross = Dedup.incrementalNearDupsFromIndex(b, "doc_id",
-          "text", Layout.table(sp, bandsTable),
-          Layout.table(sp, toksTable), k, bands, threshold)
-        val internal = Dedup.minhashNearDups(b, "doc_id", "text",
-          k, bands, threshold)
-        Components.mergeClusterIndex(sp, clusterTable,
-          b, "doc_id", internal, "id_a", "id_b",
-          cross, "batch_id", "index_id", buckets,
-          batchId = Some(batchId))
-        Layout.idempotentAppendBucketed(
-          Dedup.lshBands(b, "doc_id", "text", k, bands),
-          bandsTable, "band_hash", batchId = batchId)
-        Layout.idempotentAppendTable(
-          Dedup.tokenIndex(b, "doc_id", "text"), toksTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, bandsTable, toksTable, clusterTable) { (sp, b, batchId) =>
+      val cross = Dedup.incrementalNearDupsFromIndex(b, "doc_id",
+        "text", Layout.table(sp, bandsTable),
+        Layout.table(sp, toksTable), k, bands, threshold)
+      val internal = Dedup.minhashNearDups(b, "doc_id", "text",
+        k, bands, threshold)
+      Components.mergeClusterIndex(sp, clusterTable,
+        b, "doc_id", internal, "id_a", "id_b",
+        cross, "batch_id", "index_id", buckets,
+        batchId = Some(batchId))
+      appendNearDupIndex(b, bandsTable, toksTable, k, bands, batchId)
+    }
   }
 
   /** Operational IMAGE ingest — the dHash member of the streaming-
@@ -646,27 +628,21 @@ object EventStream {
       buckets: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.ImageHash
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, bandsTable)
-        // Hash once, reuse for probe AND append (the decode is the
-        // expensive step; a localCheckpoint pins it).
-        val hashes = ImageHash
-          .dhash(sp, batch.localCheckpoint(true), idCol, bytesCol)
-          .localCheckpoint(true)
-        Layout.idempotentAppendTable(
-          ImageHash.incrementalPairsFromIndex(hashes,
-              Layout.table(sp, bandsTable), idCol, maxHamming)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        Layout.idempotentAppendBucketed(
-          ImageHash.bandIndexRows(hashes, idCol),
-          bandsTable, "band_key", buckets, batchId = batchId)
-        ()
-      }
-      .start()
+    maintain(media, checkpoint, bandsTable) { (sp, b, batchId) =>
+      // Hash once, reuse for probe AND append (the decode is the
+      // expensive step; a localCheckpoint pins it).
+      val hashes = ImageHash
+        .dhash(sp, b, idCol, bytesCol)
+        .localCheckpoint(true)
+      Layout.idempotentAppendTable(
+        ImageHash.incrementalPairsFromIndex(hashes,
+            Layout.table(sp, bandsTable), idCol, maxHamming)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+      Layout.idempotentAppendBucketed(
+        ImageHash.bandIndexRows(hashes, idCol),
+        bandsTable, "band_key", buckets, batchId = batchId)
+    }
   }
 
   /** Operational QUANTILE-index ingest — the histogram member of the
@@ -711,31 +687,25 @@ object EventStream {
       s"otBins must divide nbins: $nbins, $otBins")
     val fold = (nbins / otBins).toLong
     val w = (hi - lo) / nbins
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, histTable)
-        val bHist = batch.localCheckpoint(true)
-          .where(col(valueCol).isNotNull)
-          .select(col(groupCol).as("_g"),
-            (least(greatest(floor(
-              (col(valueCol).cast("double") - lit(lo)) / lit(w)),
-              lit(0)), lit(nbins - 1)).cast("long") / lit(fold))
-              .cast("long").as("_b"))
-          .groupBy("_g", "_b").agg(count(lit(1)).as("_cnt"))
-        val ref = Layout.table(sp, histTable)
-          .select((col("b") / lit(fold)).cast("long").as("_b"),
-            col("cnt").as("_cnt"))
-          .groupBy("_b").agg(sum("_cnt").as("_cnt"))
-        Layout.idempotentAppendTable(
-          graft.ops.Drift.sinkhornFromHists(bHist, ref, otBins, eps, iters)
-            .withColumnRenamed("_g", groupCol)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, histTable) { (sp, b, batchId) =>
+      val bHist = b
+        .where(col(valueCol).isNotNull)
+        .select(col(groupCol).as("_g"),
+          (least(greatest(floor(
+            (col(valueCol).cast("double") - lit(lo)) / lit(w)),
+            lit(0)), lit(nbins - 1)).cast("long") / lit(fold))
+            .cast("long").as("_b"))
+        .groupBy("_g", "_b").agg(count(lit(1)).as("_cnt"))
+      val ref = Layout.table(sp, histTable)
+        .select((col("b") / lit(fold)).cast("long").as("_b"),
+          col("cnt").as("_cnt"))
+        .groupBy("_b").agg(sum("_cnt").as("_cnt"))
+      Layout.idempotentAppendTable(
+        graft.ops.Drift.sinkhornFromHists(bHist, ref, otBins, eps, iters)
+          .withColumnRenamed("_g", groupCol)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** Streaming media-governance ledger — [[graft.ops.Multimodal
@@ -751,26 +721,20 @@ object EventStream {
       docs: DataFrame, outTable: String, checkpoint: String,
       idCol: String, textCol: String, sourceCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.localCheckpoint(true)
-        graft.sources.Layout.idempotentAppendTable(
-          graft.ops.Multimodal.exifScan(sp, b, idCol, textCol).toDF()
-            .withColumnRenamed("id", idCol)
-            .join(b.select(idCol, sourceCol), idCol)
-            .groupBy(sourceCol)
-            .agg(count(lit(1)).as("n_images"),
-              sum(when(col("hasGps"), 1L).otherwise(0L)).as("n_gps"),
-              sum(when(col("gpsAfterStrip"), 1L).otherwise(0L))
-                .as("n_gps_after_scrub"),
-              sum(col("nBytes") - col("strippedBytes")).as("bytes_saved"))
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint) { (sp, b, batchId) =>
+      graft.sources.Layout.idempotentAppendTable(
+        graft.ops.Multimodal.exifScan(sp, b, idCol, textCol).toDF()
+          .withColumnRenamed("id", idCol)
+          .join(b.select(idCol, sourceCol), idCol)
+          .groupBy(sourceCol)
+          .agg(count(lit(1)).as("n_images"),
+            sum(when(col("hasGps"), 1L).otherwise(0L)).as("n_gps"),
+            sum(when(col("gpsAfterStrip"), 1L).otherwise(0L))
+              .as("n_gps_after_scrub"),
+            sum(col("nBytes") - col("strippedBytes")).as("bytes_saved"))
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** Streaming blocklist ledger — the Aho–Corasick hygiene gate
@@ -787,21 +751,16 @@ object EventStream {
       checkpoint: String, idCol: String, textCol: String,
       sourceCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true)
-        graft.sources.Layout.idempotentAppendTable(
-          graft.ops.Blocklist.scan(b, idCol, textCol, patterns)
-            .join(b.select(idCol, sourceCol), idCol)
-            .groupBy(sourceCol, "pattern")
-            .agg(count(lit(1)).as("n_docs"),
-              sum(col("n_hits")).as("n_hits"))
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint) { (_, b, batchId) =>
+      graft.sources.Layout.idempotentAppendTable(
+        graft.ops.Blocklist.scan(b, idCol, textCol, patterns)
+          .join(b.select(idCol, sourceCol), idCol)
+          .groupBy(sourceCol, "pattern")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("n_hits")).as("n_hits"))
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** Streaming WARC→text extraction ledger — the HTML tier's live
@@ -817,26 +776,21 @@ object EventStream {
       urlCol: String, payloadCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.WebCorpus
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true)
-        graft.sources.Layout.idempotentAppendTable(
-          b.select(
-              coalesce(WebCorpus.domain(col(urlCol)), lit("(invalid)"))
-                .as("domain"),
-              length(col(payloadCol)).cast("long").as("__h"),
-              length(WebCorpus.htmlText(col(payloadCol))).cast("long")
-                .as("__t"))
-            .groupBy("domain")
-            .agg(count(lit(1)).as("n_records"),
-              sum("__h").as("html_chars"),
-              sum("__t").as("text_chars"))
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(records, checkpoint) { (_, b, batchId) =>
+      graft.sources.Layout.idempotentAppendTable(
+        b.select(
+            coalesce(WebCorpus.domain(col(urlCol)), lit("(invalid)"))
+              .as("domain"),
+            length(col(payloadCol)).cast("long").as("__h"),
+            length(WebCorpus.htmlText(col(payloadCol))).cast("long")
+              .as("__t"))
+          .groupBy("domain")
+          .agg(count(lit(1)).as("n_records"),
+            sum("__h").as("html_chars"),
+            sum("__t").as("text_chars"))
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   /** HTTP-aware twin of [[extractionLedger]] (round 16): the records
@@ -852,41 +806,36 @@ object EventStream {
       urlCol: String, payloadBytesCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.WebCorpus
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true)
-        // Head-only gate (round 17): status/MIME need no body decode,
-        // so the body inflates only inside the gated `when` below —
-        // once per gate-passing record, the single-parse discipline.
-        val e = WebCorpus.httpHead(col(payloadBytesCol))
-        val gate = col("__s") >= 200 && col("__s") <= 299 &&
-          (col("__ct") === "text/html" ||
-            col("__ct") === "application/xhtml+xml")
-        graft.sources.Layout.idempotentAppendTable(
-          b.select(
-              coalesce(WebCorpus.domain(col(urlCol)), lit("(invalid)"))
-                .as("domain"),
-              e.getField("status").as("__s"),
-              e.getField("content_type").as("__ct"),
-              col(payloadBytesCol))
-            .select(col("domain"),
-              col("__s").isNotNull.cast("long").as("__http"),
-              coalesce(gate.cast("long"), lit(0L)).as("__g"),
-              when(gate, length(WebCorpus.htmlText(
-                  WebCorpus.httpText(col(payloadBytesCol))))
-                .cast("long"))
-                .otherwise(lit(0L)).as("__tc"))
-            .groupBy("domain")
-            .agg(count(lit(1)).as("n_records"),
-              sum("__http").as("n_http"),
-              sum("__g").as("n_gated"),
-              sum("__tc").as("text_chars"))
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(records, checkpoint) { (_, b, batchId) =>
+      // Head-only gate (round 17): status/MIME need no body decode,
+      // so the body inflates only inside the gated `when` below —
+      // once per gate-passing record, the single-parse discipline.
+      val e = WebCorpus.httpHead(col(payloadBytesCol))
+      val gate = col("__s") >= 200 && col("__s") <= 299 &&
+        (col("__ct") === "text/html" ||
+          col("__ct") === "application/xhtml+xml")
+      graft.sources.Layout.idempotentAppendTable(
+        b.select(
+            coalesce(WebCorpus.domain(col(urlCol)), lit("(invalid)"))
+              .as("domain"),
+            e.getField("status").as("__s"),
+            e.getField("content_type").as("__ct"),
+            col(payloadBytesCol))
+          .select(col("domain"),
+            col("__s").isNotNull.cast("long").as("__http"),
+            coalesce(gate.cast("long"), lit(0L)).as("__g"),
+            when(gate, length(WebCorpus.htmlText(
+                WebCorpus.httpText(col(payloadBytesCol))))
+              .cast("long"))
+              .otherwise(lit(0L)).as("__tc"))
+          .groupBy("domain")
+          .agg(count(lit(1)).as("n_records"),
+            sum("__http").as("n_http"),
+            sum("__g").as("n_gated"),
+            sum("__tc").as("text_chars"))
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 
   def incrementalHistIngest(
@@ -896,25 +845,18 @@ object EventStream {
       buckets: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.ops.Stats
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        Layout.refresh(sp, histTable)
-        val b = batch.localCheckpoint(true)
-        Layout.idempotentAppendBucketed(
-          Stats.histPartials(
-            b.withColumn("_shard", lit(batchId)),
-            groupCol, "_shard", valueCol, lo, hi, nbins),
-          histTable, groupCol, buckets, batchId = batchId)
-        Layout.refresh(sp, histTable)
-        Layout.idempotentAppendTable(
-          Stats.histPercentilesFromIndex(
-              Layout.table(sp, histTable), groupCol, lo, hi, nbins, ps)
-            .withColumn("ingest_batch", lit(batchId)),
-          outTable, batchId)
-        ()
-      }
-      .start()
+    maintain(docs, checkpoint, histTable) { (sp, b, batchId) =>
+      Layout.idempotentAppendBucketed(
+        Stats.histPartials(
+          b.withColumn("_shard", lit(batchId)),
+          groupCol, "_shard", valueCol, lo, hi, nbins),
+        histTable, groupCol, buckets, batchId = batchId)
+      Layout.refresh(sp, histTable)
+      Layout.idempotentAppendTable(
+        Stats.histPercentilesFromIndex(
+            Layout.table(sp, histTable), groupCol, lo, hi, nbins, ps)
+          .withColumn("ingest_batch", lit(batchId)),
+        outTable, batchId)
+    }
   }
 }

@@ -43,4 +43,16 @@ class OwnershipSpec extends SparkSpec {
     assert(out.filter(col("unit") === "u4").count() == 1)
     assert(out.filter(col("unit") === "u4").select("Company").collect().head.isNullAt(0))
   }
+
+  test("q22 sums allocations exactly: three 500.005 shares round to 1500.02") {
+    val dir = java.nio.file.Files.createTempDirectory("q22-tie").toString
+    Seq((1L, 3, 1000.01, "Brand#1", "STEEL"), (2L, 3, 1000.01, "Brand#1", "STEEL"),
+        (3L, 3, 1000.01, "Brand#1", "STEEL"))
+      .toDF("p_partkey", "p_size", "p_retailprice", "p_brand", "p_type")
+      .coalesce(1).write.parquet(s"$dir/part.parquet")
+    val out = SparkEntry.queries("q22_ownership_split")(spark, dir)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // double sum: 1500.0149999... -> 1500.01; exact HALF_UP: 1500.02
+    assert(out == Map("Brand#1" -> 1500.02, "STEEL" -> 1500.02))
+  }
 }
