@@ -432,11 +432,6 @@ object RobotsKit {
       agents: Set[String], rules: Array[(String, Boolean)],
       delay: Option[Double])
 
-  /** User-agent groups in file order. Consecutive user-agent lines
-    * accumulate one group; a user-agent line AFTER rules starts a
-    * fresh group; rules before any user-agent line belong to no group
-    * (ignored).
-    */
   /** Leading UTF-8 BOM tolerance (RFC 9309 §2.3): real robots.txt
     * files carry one surprisingly often, and `trim` does NOT strip
     * U+FEFF — an untolerated BOM silently loses the FIRST
@@ -445,6 +440,11 @@ object RobotsKit {
   private def stripBom(s: String): String =
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
 
+  /** User-agent groups in file order. Consecutive user-agent lines
+    * accumulate one group; a user-agent line AFTER rules starts a
+    * fresh group; rules before any user-agent line belong to no group
+    * (ignored).
+    */
   private[functions] def groups(rawTxt: String): Array[Group] = {
     val txt = stripBom(rawTxt)
     val out = scala.collection.mutable.ArrayBuffer.empty[Group]

@@ -49,24 +49,6 @@ object Anonymity {
           .as("risk_ppm")): _*)
   }
 
-  /** l-diversity audit (Machanavajjhala et al. 2007): k-anonymity is
-    * not enough when everyone in a large QI class shares the SAME
-    * sensitive value — the attacker learns it without distinguishing
-    * anyone. A class is l-diverse when it contains ≥ l distinct
-    * well-represented sensitive values; this reports distinct-count
-    * l-diversity per class plus the corpus summary, listing the topN
-    * LEAST diverse classes (the disclosure surface).
-    *
-    * One (QI, sensitive)-grain count, reduced to QI grain with an
-    * exact distinct count — no second data pass; the rank window runs
-    * on the topN survivors of an explicit TakeOrderedAndProject, the
-    * same discipline as [[kAnonymity]].
-    *
-    * @return topN rows: `risk_rank`, QI cols, `class_size`,
-    *         `n_sensitive` (distinct sensitive values in the class),
-    *         `n_classes`, `n_below_l`, `records_below_l`, `min_l`
-    *         (the dataset's true l)
-    */
   /** t-closeness audit (Li, Li & Venkatasubramanian, ICDE 2007): the
     * step after [[lDiversity]] — a class can hold l distinct
     * sensitive values and STILL leak when its distribution is skewed
@@ -129,6 +111,24 @@ object Anonymity {
         col("n_above_t") :+ col("max_emd")): _*)
   }
 
+  /** l-diversity audit (Machanavajjhala et al. 2007): k-anonymity is
+    * not enough when everyone in a large QI class shares the SAME
+    * sensitive value — the attacker learns it without distinguishing
+    * anyone. A class is l-diverse when it contains ≥ l distinct
+    * well-represented sensitive values; this reports distinct-count
+    * l-diversity per class plus the corpus summary, listing the topN
+    * LEAST diverse classes (the disclosure surface).
+    *
+    * One (QI, sensitive)-grain count, reduced to QI grain with an
+    * exact distinct count — no second data pass; the rank window runs
+    * on the topN survivors of an explicit TakeOrderedAndProject, the
+    * same discipline as [[kAnonymity]].
+    *
+    * @return topN rows: `risk_rank`, QI cols, `class_size`,
+    *         `n_sensitive` (distinct sensitive values in the class),
+    *         `n_classes`, `n_below_l`, `records_below_l`, `min_l`
+    *         (the dataset's true l)
+    */
   def lDiversity(
       df: DataFrame, qiCols: Seq[String], sensitiveCol: String,
       l: Long, topN: Int): DataFrame = {

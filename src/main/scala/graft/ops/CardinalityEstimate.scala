@@ -28,11 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object CardinalityEstimate {
 
-  /** One-row report: exact distinct counts (left / right /
-    * intersection) next to the KMV estimates (union / Jaccard /
-    * intersection). Null keys are excluded on both tiers (a null key
-    * never joins).
-    */
   /** Chapman capture–recapture population estimate (the bias-corrected
     * Lincoln–Petersen): run two INDEPENDENT deterministic hash
     * "captures" of the id space and estimate the total from their
@@ -69,6 +64,11 @@ object CardinalityEstimate {
         .cast("long").as("err_ppm"))
   }
 
+  /** One-row report: exact distinct counts (left / right /
+    * intersection) next to the KMV estimates (union / Jaccard /
+    * intersection). Null keys are excluded on both tiers (a null key
+    * never joins).
+    */
   def kmvJoinEstimate(
       left: DataFrame, leftKey: String,
       right: DataFrame, rightKey: String, k: Int): DataFrame = {
@@ -114,39 +114,6 @@ object CardinalityEstimate {
         (round(jacc * unionEst, 1) + lit(0.0)).as("inter_est"))
   }
 
-  /** HyperLogLog distinct-count sketch (Flajolet et al. 2007) with the
-    * SHARD-MERGE law proven in-query — the property KMV (q78) shares
-    * but HLL delivers in O(m) fixed registers per shard: register j
-    * holds max(ρ) over keys hashing to bucket j, and the union of two
-    * shards is the element-wise register MAX, so a 1000-executor scan
-    * ships m longs per partition and merges associatively. This op
-    * builds per-group register tables, merges them, and checks the
-    * merged table equals the one built over the ungrouped scan —
-    * `merge_register_mismatches` MUST be 0.
-    *
-    * Engine-portable arithmetic (the KMV discipline,
-    * `functions/KmvSketch.scala:20` explains why Spark's built-in
-    * `approx_count_distinct` registers can't be oracle-checked):
-    * h = [[Hashing.portableHash]] ∈ [0, 2⁶⁰); bucket = h mod m;
-    * ρ = (61−p) − bitlen(h div m) (the 1-based first-one position in
-    * the (60−p)-bit window, bitlen via `bin()`, identical in both
-    * engines); the harmonic-mean denominator Σ 2^−M is kept EXACT as
-    * the integer Σ 2^((61−p)−M) plus 2^(61−p) per empty register —
-    * order-free, so sum order can't drift a double. The only floats
-    * are the final α·m²/Σ division and the small-range linear-counting
-    * branch (m·ln(m/zeros) when raw ≤ 2.5m and zeros > 0), both single
-    * expressions over exact integers.
-    *
-    * @param p register-index bits; m = 2^p registers (64 at the test
-    *          scale; production would use 12–14)
-    * @return per group: `n_keys`, `n_distinct_exact`,
-    *         `registers_used`, `zeros`, `sum_scaled` (the exact
-    *         integer denominator), `hll_raw` (round 2), `hll_est`
-    *         (round 2, correction applied), `err_ppm` (signed, vs
-    *         exact); repeated on every row: `merged_est` (round 2,
-    *         from the max-merged per-group registers),
-    *         `merge_register_mismatches` (vs the ungrouped build)
-    */
   /** The per-(group, bucket) HLL register table — the mergeable,
     * persistable form ([[hllFromRegisters]] consumes it; q358 stores
     * it as an index and answers distinct queries without re-reading
@@ -226,6 +193,39 @@ object CardinalityEstimate {
       .drop("_su")
   }
 
+  /** HyperLogLog distinct-count sketch (Flajolet et al. 2007) with the
+    * SHARD-MERGE law proven in-query — the property KMV (q78) shares
+    * but HLL delivers in O(m) fixed registers per shard: register j
+    * holds max(ρ) over keys hashing to bucket j, and the union of two
+    * shards is the element-wise register MAX, so a 1000-executor scan
+    * ships m longs per partition and merges associatively. This op
+    * builds per-group register tables, merges them, and checks the
+    * merged table equals the one built over the ungrouped scan —
+    * `merge_register_mismatches` MUST be 0.
+    *
+    * Engine-portable arithmetic (the KMV discipline,
+    * `functions/KmvSketch.scala:20` explains why Spark's built-in
+    * `approx_count_distinct` registers can't be oracle-checked):
+    * h = [[Hashing.portableHash]] ∈ [0, 2⁶⁰); bucket = h mod m;
+    * ρ = (61−p) − bitlen(h div m) (the 1-based first-one position in
+    * the (60−p)-bit window, bitlen via `bin()`, identical in both
+    * engines); the harmonic-mean denominator Σ 2^−M is kept EXACT as
+    * the integer Σ 2^((61−p)−M) plus 2^(61−p) per empty register —
+    * order-free, so sum order can't drift a double. The only floats
+    * are the final α·m²/Σ division and the small-range linear-counting
+    * branch (m·ln(m/zeros) when raw ≤ 2.5m and zeros > 0), both single
+    * expressions over exact integers.
+    *
+    * @param p register-index bits; m = 2^p registers (64 at the test
+    *          scale; production would use 12–14)
+    * @return per group: `n_keys`, `n_distinct_exact`,
+    *         `registers_used`, `zeros`, `sum_scaled` (the exact
+    *         integer denominator), `hll_raw` (round 2), `hll_est`
+    *         (round 2, correction applied), `err_ppm` (signed, vs
+    *         exact); repeated on every row: `merged_est` (round 2,
+    *         from the max-merged per-group registers),
+    *         `merge_register_mismatches` (vs the ungrouped build)
+    */
   def hllReport(
       df: DataFrame, groupCol: String, keyCol: String,
       p: Int = 6): DataFrame = {

@@ -195,11 +195,6 @@ object Components {
       .select(col("id"), coalesce(col("root"), col("id")).as("component"))
   }
 
-  /** Near-dup clusters with sizes: every doc labeled with its
-    * component's canonical (min) doc id and the cluster row count.
-    * Singletons (no near-dup) are their own component of size 1.
-    * The dedup decision is then a filter: keep `doc_id == component`.
-    */
   /** Multi-source BFS hop distance — "how far is every node from the
     * seed set": frontier expansion with FIXED `maxHops` rounds, each
     * round one edges⋈frontier shuffle + an anti-join against the
@@ -252,6 +247,11 @@ object Components {
       .select(col("id").as(idCol), col("hops"))
   }
 
+  /** Near-dup clusters with sizes: every doc labeled with its
+    * component's canonical (min) doc id and the cluster row count.
+    * Singletons (no near-dup) are their own component of size 1.
+    * The dedup decision is then a filter: keep `doc_id == component`.
+    */
   def dedupClusters(
       docs: DataFrame, idCol: String,
       pairs: DataFrame, srcCol: String, dstCol: String): DataFrame = {

@@ -17,21 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusPipeline {
 
-  /** Returns the per-source accounting of the curated corpus:
-    * documents kept, tokens kept, and how many fell to each gate
-    * (`dropped_exact_dup` / `dropped_quality` / `dropped_near_dup`).
-    * Every source present in the input appears — a source whose docs
-    * all fell shows `docs_kept = 0` with its funnel, which is exactly
-    * the row a curation audit needs to see.
-    *
-    * Near-dup policy: CLUSTER-based. The verified minhash pairs are
-    * edges; [[Components.dedupClusters]] takes their transitive
-    * closure and exactly the minimum id of each connected component
-    * survives. Dropping the larger id of each PAIR instead
-    * under-deletes: with verified pairs (A,C) and (B,C) but no (A,B)
-    * — one cluster {A,B,C} — pair-drop keeps both A and B (see
-    * [[Components]]).
-    */
   /** Every input row tagged with its curation `_fate` (`kept` /
     * `exact_dup` / `quality` / `near_dup`) — the single source of
     * truth behind both [[curate]] (the per-source funnel aggregate)
@@ -118,7 +103,22 @@ object CorpusPipeline {
           .otherwise(lit("kept")))
   }
 
-  /** `lang` and `langs` are MUTUALLY EXCLUSIVE (enforced): a
+  /** Returns the per-source accounting of the curated corpus:
+    * documents kept, tokens kept, and how many fell to each gate
+    * (`dropped_exact_dup` / `dropped_quality` / `dropped_near_dup`).
+    * Every source present in the input appears — a source whose docs
+    * all fell shows `docs_kept = 0` with its funnel, which is exactly
+    * the row a curation audit needs to see.
+    *
+    * Near-dup policy: CLUSTER-based. The verified minhash pairs are
+    * edges; [[Components.dedupClusters]] takes their transitive
+    * closure and exactly the minimum id of each connected component
+    * survives. Dropping the larger id of each PAIR instead
+    * under-deletes: with verified pairs (A,C) and (B,C) but no (A,B)
+    * — one cluster {A,B,C} — pair-drop keeps both A and B (see
+    * [[Components]]).
+    *
+    * `lang` and `langs` are MUTUALLY EXCLUSIVE (enforced): a
     * non-empty `langs` replaces the single-language gate entirely —
     * it keeps every listed language and scores quality against the
     * set's per-language profiles ([[TextAnalysis.qualityScoreFor]]);

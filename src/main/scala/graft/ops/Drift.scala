@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
-  /** @return one row per group: groupCol, `n_a`, `n_b`, `ks`
-    *         (rounded to 4; groups present in only one side are
-    *         omitted — no distribution to compare against)
-    */
   /** Population Stability Index per group from the same two
     * histogram sketches: PSI = Σ_b (p_b − q_b)·ln(p_b/q_b) with the
     * standard ε-floor on empty buckets (industry convention: <0.1
@@ -211,6 +207,10 @@ object Drift {
     abs(col("cum_a").cast("double") / col("n_a").cast("double") -
       col("cum_b").cast("double") / col("n_b").cast("double"))
 
+  /** @return one row per group: groupCol, `n_a`, `n_b`, `ks`
+    *         (rounded to 4; groups present in only one side are
+    *         omitted — no distribution to compare against)
+    */
   def ksFromHists(
       a: DataFrame, b: DataFrame, groupCol: String, valueCol: String,
       lo: Double, hi: Double, nbins: Int): DataFrame = {
@@ -342,6 +342,22 @@ object Drift {
         round(sqrt(col("_nn")) / sqrt(col("_gg")), 6).as("norm_ratio"))
   }
 
+  /** The (`_g`, `_b`, `_cnt`) occupied-bin histogram every OT entry
+    * point starts from — one map-side-combinable corpus aggregate,
+    * checkpointed because each consumer reads it 2–3 times.
+    */
+  def binCounts(
+      df: DataFrame, groupCol: String, valueCol: String,
+      lo: Double, hi: Double, nbins: Int): DataFrame = {
+    val w = (hi - lo) / nbins
+    df.where(col(valueCol).isNotNull)
+      .select(col(groupCol).as("_g"),
+        least(greatest(floor((col(valueCol).cast("double") - lit(lo))
+          / lit(w)), lit(0)), lit(nbins - 1)).cast("long").as("_b"))
+      .groupBy("_g", "_b")
+      .agg(count(lit(1)).as("_cnt")).localCheckpoint()
+  }
+
   /** Entropic optimal-transport (Sinkhorn, Cuturi NeurIPS'13) distance
     * from each group's value distribution to the ALL-GROUPS reference
     * distribution — the principled "how much mass must move, and how
@@ -369,22 +385,6 @@ object Drift {
     *         `ot_cost` (Σ u_i K_ij v_j c_ij, c normalized to [0,1],
     *         round 6)
     */
-  /** The (`_g`, `_b`, `_cnt`) occupied-bin histogram every OT entry
-    * point starts from — one map-side-combinable corpus aggregate,
-    * checkpointed because each consumer reads it 2–3 times.
-    */
-  def binCounts(
-      df: DataFrame, groupCol: String, valueCol: String,
-      lo: Double, hi: Double, nbins: Int): DataFrame = {
-    val w = (hi - lo) / nbins
-    df.where(col(valueCol).isNotNull)
-      .select(col(groupCol).as("_g"),
-        least(greatest(floor((col(valueCol).cast("double") - lit(lo))
-          / lit(w)), lit(0)), lit(nbins - 1)).cast("long").as("_b"))
-      .groupBy("_g", "_b")
-      .agg(count(lit(1)).as("_cnt")).localCheckpoint()
-  }
-
   def sinkhornToReference(
       df: DataFrame, groupCol: String, valueCol: String,
       lo: Double, hi: Double, nbins: Int,

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * copies of the same picture; dHash captures the LUMINANCE GRADIENT
   * structure, which survives both:
   *
-  *  1. decode pixels (the real [[Multimodal.pngPixels]] /
-  *     [[Multimodal.gifPixels]] walks — no external codec),
+  *  1. decode pixels ([[Multimodal.pngPixels]] /
+  *     [[Multimodal.gifPixels]] — the JDK's own readers, no external
+  *     codec),
   *  2. average-pool integer luma (299·R + 587·G + 114·B, the BT.601
   *     weights ×1000 so everything stays exact integer) onto a
   *     (gridW+1) × gridH block grid,
@@ -95,7 +96,7 @@ object ImageHash {
     Some(hash)
   }
 
-  /** Magic-byte dispatch to the real decoders. RGBA PNGs hash with the
+  /** Magic-byte dispatch to the pixel decoders. RGBA PNGs hash with the
     * alpha channel ignored; anything undecodable → None.
     */
   private def decode(b: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =

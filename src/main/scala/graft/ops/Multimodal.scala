@@ -1,5 +1,12 @@
 package graft.ops
 
+import java.awt.image.{BufferedImage, Raster}
+import java.io.ByteArrayInputStream
+import javax.imageio.{ImageIO, ImageReadParam, ImageReader}
+import javax.imageio.event.IIOReadProgressListener
+import javax.imageio.stream.MemoryCacheImageInputStream
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,16 +53,14 @@ object Multimodal {
       lit(mediaType).as("media_type"),
       octet_length(encode(col(payloadCol), "UTF-8")).cast("long").as("n_bytes"))
 
-  /** Little-endian unsigned 32-bit read — the only primitive both real
-    * header formats need.
+  /** Unsigned little- and big-endian 16/32-bit reads: the primitives
+    * of every header walk here (BMP/WAV/GIF fields are little-endian,
+    * PNG/JPEG/MP4 big-endian, Exif's TIFF either way).
     */
   private def le4(b: Array[Byte], off: Int): Long =
     (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
       ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 
-  /** Big-endian 32-bit (PNG chunk fields) and little-endian 16-bit
-    * (GIF logical-screen fields) reads.
-    */
   private def be4(b: Array[Byte], off: Int): Long =
     ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
       ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
@@ -279,20 +284,16 @@ object Multimodal {
     *
     *  - 24-bit BMP → per-channel pixel means (B, G, R), honoring the
     *    `bfOffBits` pixel-array offset and 4-byte row padding;
-    *  - 16-bit PCM RIFF/WAVE (canonical 44-byte header) → RMS
-    *    amplitude, peak |sample|, sample count;
-    *  - PNG (8-bit gray/RGB/RGBA, non-interlaced) → per-channel pixel
-    *    means via [[pngPixels]] — CRC-checked chunk walk, one
-    *    `java.util.zip.Inflater` pass, all five scanline filters
-    *    inverted;
-    *  - GIF (87a/89a, first frame) → palette-mapped per-channel means
-    *    via [[gifPixels]] — pure-Scala variable-width LZW.
-    *
-    *  - JPEG (baseline) → per-band means through the JDK's own
-    *    `javax.imageio` decoder — real DCT/entropy decode, still zero
-    *    EXTERNAL codecs. (Oracle checkability comes from the fixture
-    *    side: constant-per-8×8-block gray images round-trip the lossy
-    *    codec exactly — see `MediaFixtures.jpegBytes`.)
+    *  - 16-bit PCM RIFF/WAVE (canonical 44-byte header, [[wavPcm]]) →
+    *    RMS amplitude, peak |sample|, sample count;
+    *  - PNG (8-bit gray/RGB/RGBA, non-interlaced; [[pngPixels]]), GIF
+    *    (87a/89a, first frame; [[gifPixels]]) and JPEG (baseline) →
+    *    per-channel means (R, G, B) of the pixels the JDK's own
+    *    `javax.imageio` decoders recover — gray fills all three lanes,
+    *    RGBA's alpha is layout-only and not averaged. (JPEG oracle
+    *    checkability comes from the fixture side: constant-per-8×8-block
+    *    gray images round-trip the lossy codec exactly — see
+    *    `MediaFixtures.jpegBytes`.)
     *
     * Anything else falls back to the deterministic byte-histogram
     * stub moments of [[extractFeatures]] (kind `other`) — the one
@@ -308,9 +309,6 @@ object Multimodal {
     */
   def contentFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble + 0.0
     media.select("id", "bytes").as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, b) =>
@@ -337,113 +335,35 @@ object Multimodal {
               val n = (w * h).toDouble
               (id, "bmp", r4(sb / n), r4(sg / n), r4(sr / n))
             } else stubFeatureRow(id, b)
-          } else if (b.length >= 44 &&
-              b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-              b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E' &&
-              b(36) == 'd' && b(37) == 'a' && b(38) == 't' && b(39) == 'a' &&
-              le2(b, 34) == 16) {
-            val dataSize = math.min(le4(b, 40).toInt, b.length - 44)
-            val n = dataSize / 2
-            if (n > 0) {
-              var ss = 0.0
-              var peak = 0L
-              var k = 0
-              while (k < n) {
-                val s = ((b(44 + 2 * k) & 0xff) |
-                  ((b(45 + 2 * k) & 0xff) << 8)).toShort.toLong
-                ss += (s * s).toDouble
-                if (math.abs(s) > peak) peak = math.abs(s)
-                k += 1
-              }
-              (id, "wav", r4(math.sqrt(ss / n)), r4(peak.toDouble),
-                r4(n.toDouble))
-            } else stubFeatureRow(id, b)
-          } else if (b.length >= 8 && (b(0) & 0xff) == 0x89 &&
-              b(1) == 'P' && b(2) == 'N' && b(3) == 'G') {
-            pngPixels(b) match {
-              case Some((w, h, ch, px)) =>
-                // per-channel means (r, g, b); gray fills all three
-                // lanes, RGBA's alpha is layout-only and not averaged
-                var (sr, sg, sb) = (0.0, 0.0, 0.0)
-                var p = 0
-                val np = w * h
-                while (p < np) {
-                  if (ch == 1) {
-                    val v = (px(p) & 0xff).toDouble
-                    sr += v; sg += v; sb += v
-                  } else {
-                    sr += (px(p * ch) & 0xff)
-                    sg += (px(p * ch + 1) & 0xff)
-                    sb += (px(p * ch + 2) & 0xff)
-                  }
-                  p += 1
-                }
-                (id, "png", r4(sr / np), r4(sg / np), r4(sb / np))
-              case None => stubFeatureRow(id, b)
-            }
-          } else if (b.length >= 6 && b(0) == 'G' && b(1) == 'I' &&
-              b(2) == 'F' && b(3) == '8') {
-            gifPixels(b) match {
-              case Some((w, h, rgb)) =>
-                var (sr, sg, sb) = (0.0, 0.0, 0.0)
-                var p = 0
-                val np = w * h
-                while (p < np) {
-                  sr += (rgb(3 * p) & 0xff)
-                  sg += (rgb(3 * p + 1) & 0xff)
-                  sb += (rgb(3 * p + 2) & 0xff)
-                  p += 1
-                }
-                (id, "gif", r4(sr / np), r4(sg / np), r4(sb / np))
-              case None => stubFeatureRow(id, b)
-            }
-          } else if (b.length >= 3 && (b(0) & 0xff) == 0xff &&
-              (b(1) & 0xff) == 0xd8 && (b(2) & 0xff) == 0xff) {
-            // JPEG: the JDK ships a full baseline decoder
-            // (javax.imageio) — no external codec, and unlike the
-            // header-only jpegDims walk this touches every pixel.
-            // Gray fills all three lanes (the PNG color-type-0 rule);
-            // >=3 bands report band 0/1/2 means. Undecodable or
-            // unexpected-layout payloads fall back to the stub.
-            try {
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(b))
-              if (img == null) stubFeatureRow(id, b)
-              else {
-                val ras = img.getRaster
-                val (w, h, bands) =
-                  (img.getWidth, img.getHeight, ras.getNumBands)
+          } else wavPcm(b) match {
+            case Some(s) =>
+              val ss = s.foldLeft(0.0)((acc, v) => acc + v.toDouble * v)
+              (id, "wav", r4(math.sqrt(ss / s.length)),
+                r4(s.map(v => math.abs(v)).max.toDouble), r4(s.length.toDouble))
+            case None => imagePixels(b) match {
+              case Some((kind, ch, px)) =>
                 var (s0, s1, s2) = (0L, 0L, 0L)
-                var y = 0
-                while (y < h) {
-                  var x = 0
-                  while (x < w) {
-                    if (bands == 1) {
-                      val v = ras.getSample(x, y, 0).toLong
-                      s0 += v; s1 += v; s2 += v
-                    } else {
-                      s0 += ras.getSample(x, y, 0)
-                      s1 += ras.getSample(x, y, 1)
-                      s2 += ras.getSample(x, y, 2)
-                    }
-                    x += 1
-                  }
-                  y += 1
+                var o = 0
+                while (o < px.length) { // gray fills all three lanes
+                  s0 += px(o) & 0xff
+                  s1 += px(o + math.min(1, ch - 1)) & 0xff
+                  s2 += px(o + math.min(2, ch - 1)) & 0xff
+                  o += ch
                 }
-                val n = (w.toLong * h).toDouble
-                (id, "jpeg", r4(s0 / n), r4(s1 / n), r4(s2 / n))
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => stubFeatureRow(id, b)
+                val n = (px.length / ch).toDouble
+                (id, kind, r4(s0 / n), r4(s1 / n), r4(s2 / n))
+              case None => stubFeatureRow(id, b)
             }
-          } else stubFeatureRow(id, b)
+          }
         }
       }.toDF("id", "kind", "f1", "f2", "f3")
   }
 
   /** Canonical-header WAV (44-byte fmt/data layout, 16-bit PCM)
-    * sample extraction — the same checks as the [[contentFeatures]]
-    * audio branch, factored for ops that need the raw samples.
+    * sample extraction: the signed samples of the data chunk (its
+    * declared size capped at the payload), or None for any other
+    * layout or an empty chunk. [[contentFeatures]]' audio branch and
+    * [[wavPeriodicity]] both read through it.
     */
   private[graft] def wavPcm(b: Array[Byte]): Option[Array[Int]] = {
     if (b.length >= 44 &&
@@ -454,9 +374,7 @@ object Multimodal {
       val dataSize = math.min(le4(b, 40).toInt, b.length - 44)
       val n = dataSize / 2
       if (n > 0)
-        Some(Array.tabulate(n)(k =>
-          ((b(44 + 2 * k) & 0xff) |
-            ((b(45 + 2 * k) & 0xff) << 8)).toShort.toInt))
+        Some(Array.tabulate(n)(k => le2(b, 44 + 2 * k).toShort.toInt))
       else None
     } else None
   }
@@ -479,9 +397,6 @@ object Multimodal {
   def wavPeriodicity(
       spark: SparkSession, media: DataFrame, maxLag: Int = 16): DataFrame = {
     import spark.implicits._
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble + 0.0
     media.select("id", "bytes").as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, b) =>
@@ -512,26 +427,74 @@ object Multimodal {
       }.toDF("id", "kind", "best_lag", "periodicity")
   }
 
-  /** PNG pixel decode — REAL, zero external codecs: the payload is
-    * zlib (RFC 1950), which `java.util.zip.Inflater` speaks natively,
-    * and the rest is the PNG spec's own byte walk (RFC 2083):
-    *
-    *  1. chunk walk from offset 8 ([len be4][type][data][crc be4]),
-    *     verifying each data-bearing chunk's CRC-32 with
-    *     `java.util.zip.CRC32` (type bytes + data, per §3.4) and
-    *     concatenating every IDAT payload in stream order;
-    *  2. one `Inflater` pass into the exact `h * (1 + w*bpp)` raw
-    *     size (any mismatch → None, no partial images);
-    *  3. per-scanline unfilter of the five §6.1 filters — None(0),
-    *     Sub(1), Up(2), Average(3: floor of the 9-bit sum), Paeth(4)
-    *     — byte-wise mod 256, exactly invertible.
-    *
-    * Supported layout: bit depth 8, color type 0 (gray), 2 (RGB) or
-    * 6 (RGBA), no interlace (Adam7 → None). Returns
-    * (width, height, channels, recovered pixel bytes row-major) or
-    * None for anything malformed — CRC mismatch, short inflate,
-    * unknown filter — so the caller falls back to the stub instead of
-    * fabricating pixels.
+  /** Pixels of a PNG, GIF or JPEG payload as (kind, channels, pixel
+    * bytes row-major): PNG through [[pngPixels]], GIF through
+    * [[gifPixels]] (3 channels), JPEG straight from the reader (gray →
+    * 1 channel, else its first three bands). None for anything else,
+    * for an undecodable payload, and for a 2-band JPEG raster.
+    */
+  private def imagePixels(b: Array[Byte]): Option[(String, Int, Array[Byte])] =
+    if (b.length >= 8 && (b(0) & 0xff) == 0x89 &&
+        b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
+      pngPixels(b).map { case (_, _, ch, px) => ("png", ch, px) }
+    else if (b.length >= 6 && b(0) == 'G' && b(1) == 'I' &&
+        b(2) == 'F' && b(3) == '8')
+      gifPixels(b).map { case (_, _, px) => ("gif", 3, px) }
+    else if (b.length >= 3 && (b(0) & 0xff) == 0xff &&
+        (b(1) & 0xff) == 0xd8 && (b(2) & 0xff) == 0xff)
+      readRaster(b, "jpeg").filter(_.getNumBands != 2).map { ras =>
+        val ch = math.min(ras.getNumBands, 3)
+        ("jpeg", ch, bandBytes(ras, ch))
+      }
+    else None
+
+  /** The first image of `b`, decoded by the JDK's `javax.imageio`
+    * reader for `format` (png | gif | jpeg) and read through a memory
+    * cache (never a temp file); `setup` may adjust the reader and its
+    * read parameters first. None when the reader throws.
+    */
+  private def readRaster(b: Array[Byte], format: String,
+      setup: (ImageReader, ImageReadParam) => Unit = (_, _) => ()
+  ): Option[Raster] = {
+    val reader = ImageIO.getImageReadersByFormatName(format).next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    try {
+      reader.setInput(in, true, true)
+      val param = reader.getDefaultReadParam
+      setup(reader, param)
+      Some(reader.read(0, param).getRaster)
+    } catch {
+      case NonFatal(_) => None
+    } finally {
+      reader.dispose()
+      in.close()
+    }
+  }
+
+  /** The first `ch` bands of a raster, interleaved per pixel. */
+  private def bandBytes(ras: Raster, ch: Int): Array[Byte] = {
+    val nb = ras.getNumBands
+    val all = ras.getPixels(0, 0, ras.getWidth, ras.getHeight,
+      null: Array[Int])
+    val out = new Array[Byte](all.length / nb * ch)
+    var i = 0
+    while (i < out.length) {
+      out(i) = all(i / ch * nb + i % ch).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** PNG pixel decode through the JDK reader, behind the checks the
+    * reader does not make (RFC 2083): signature and IHDR first, bit
+    * depth 8, color type 0 (gray), 2 (RGB) or 6 (RGBA) — palette
+    * images are out — and no interlace (Adam7 → None); then a chunk
+    * walk from offset 8 ([len be4][type][data][crc be4]) that verifies
+    * every chunk's CRC-32 (type bytes + data, §3.4) and requires IEND.
+    * Returns (width, height, channels, pixel bytes row-major) or None
+    * for anything malformed — CRC mismatch, truncation, a zlib stream
+    * or filter byte the reader rejects — so the caller falls back to
+    * the stub instead of fabricating pixels.
     */
   private[graft] def pngPixels(
       b: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
@@ -539,224 +502,102 @@ object Multimodal {
         b(2) != 'N' || b(3) != 'G') return None
     if (!(b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R'))
       return None
-    val w = be4(b, 16).toInt
-    val h = be4(b, 20).toInt
-    val bitDepth = b(24) & 0xff
-    val colorType = b(25) & 0xff
-    val interlace = b(28) & 0xff
-    val channels = colorType match {
+    val channels = b(25) & 0xff match {
       case 0 => 1
       case 2 => 3
       case 6 => 4
       case _ => return None
     }
-    if (w <= 0 || h <= 0 || bitDepth != 8 || interlace != 0) return None
-    // chunk walk: CRC-check + collect IDAT
-    val idat = new java.io.ByteArrayOutputStream()
+    if (be4(b, 16).toInt <= 0 || be4(b, 20).toInt <= 0 ||
+        (b(24) & 0xff) != 8 || (b(28) & 0xff) != 0) return None
     var i = 8
     var sawEnd = false
     while (!sawEnd && i + 12 <= b.length) {
       val len = be4(b, i).toInt
       if (len < 0 || i + 12 + len > b.length) return None
-      val tpe = new String(b, i + 4, 4, "ISO-8859-1")
       val crc = new java.util.zip.CRC32()
       crc.update(b, i + 4, 4 + len)
       if (crc.getValue != be4(b, i + 8 + len)) return None
-      if (tpe == "IDAT") idat.write(b, i + 8, len)
-      if (tpe == "IEND") sawEnd = true
+      sawEnd = new String(b, i + 4, 4, "ISO-8859-1") == "IEND"
       i += 12 + len
     }
-    if (!sawEnd) return None // truncated file: IEND is mandatory
-    val comp = idat.toByteArray
-    if (comp.isEmpty) return None
-    val bpp = channels // bytes per pixel at depth 8
-    val stride = 1 + w * bpp // filter byte + scanline
-    val raw = new Array[Byte](h * stride)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(comp)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        got += n
-      }
-      if (got != raw.length) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inf.end()
-    // unfilter in place into the pixel array
-    val px = new Array[Byte](h * w * bpp)
-    var row = 0
-    while (row < h) {
-      val f = raw(row * stride) & 0xff
-      if (f > 4) return None
-      val ro = row * w * bpp // output row offset
-      var k = 0
-      while (k < w * bpp) {
-        val x = raw(row * stride + 1 + k) & 0xff
-        val a = if (k >= bpp) px(ro + k - bpp) & 0xff else 0 // left
-        val up = if (row > 0) px(ro - w * bpp + k) & 0xff else 0
-        val c =
-          if (row > 0 && k >= bpp) px(ro - w * bpp + k - bpp) & 0xff
-          else 0 // upper-left
-        val recon = f match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + up
-          case 3 => x + (a + up) / 2
-          case 4 => // Paeth predictor, §6.6
-            val p = a + up - c
-            val pa = math.abs(p - a)
-            val pb = math.abs(p - up)
-            val pc = math.abs(p - c)
-            x + (if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c)
-        }
-        px(ro + k) = (recon & 0xff).toByte
-        k += 1
-      }
-      row += 1
-    }
-    Some((w, h, channels, px))
+    if (!sawEnd) return None // IEND is mandatory
+    readRaster(b, "png").map(ras =>
+      (ras.getWidth, ras.getHeight, channels, bandBytes(ras, channels)))
   }
 
-  /** GIF pixel decode — REAL, pure-Scala LZW (the GIF89a spec's
-    * variable-width LZW, appendix F): logical-screen walk, global /
-    * local color table, extension-block skip, first image descriptor's
-    * sub-blocks concatenated and LZW-decoded (code width grows at
-    * table sizes 2^n, Clear resets to the initial width, 12-bit max),
-    * palette-mapped to RGB triples. Interlaced images and index
-    * overruns → None (stub fallback), never fabricated pixels.
+  /** GIF pixel decode through the JDK reader (LZW per the GIF89a spec,
+    * appendix F), behind the checks the reader does not make: a
+    * logical-screen walk past the extension blocks to the first image
+    * descriptor, which must be non-interlaced, have a global or local
+    * color table, a nonzero size, an LZW minimum code size in 2..11
+    * and complete data sub-blocks. The reader writes raw color
+    * indices into an 8-bit destination; it must raise no warning (an
+    * out-of-sequence code), every one of the image's rows must
+    * arrive, and every index must fall inside the color table, which
+    * maps it to an RGB triple. Anything else → None (stub fallback),
+    * never fabricated pixels.
     */
   private[graft] def gifPixels(
       b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (b.length < 14 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F' ||
         b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a')
       return None
-    val packed = b(10) & 0xff
-    val hasGct = (packed & 0x80) != 0
-    val gctLen = if (hasGct) 3 * (1 << ((packed & 7) + 1)) else 0
-    var i = 13 + gctLen
+    def tableLen(packed: Int): Int =
+      if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0
+    var i = 13 + tableLen(b(10) & 0xff)
     if (i > b.length) return None
-    val gct = if (hasGct) b.slice(13, 13 + gctLen) else Array.empty[Byte]
-    while (i < b.length) {
-      (b(i) & 0xff) match {
-        case 0x3b => return None // trailer before any image
-        case 0x21 => // extension: label + sub-blocks
-          i += 2
-          while (i < b.length && (b(i) & 0xff) != 0) i += 1 + (b(i) & 0xff)
-          i += 1
-        case 0x2c => // image descriptor
-          if (i + 10 > b.length) return None
-          val iw = le2(b, i + 5)
-          val ih = le2(b, i + 7)
-          val ipk = b(i + 9) & 0xff
-          if ((ipk & 0x40) != 0) return None // interlaced
-          val lctLen = if ((ipk & 0x80) != 0) 3 * (1 << ((ipk & 7) + 1)) else 0
-          val ct = if (lctLen > 0) b.slice(i + 10, i + 10 + lctLen) else gct
-          if (ct.isEmpty || iw <= 0 || ih <= 0) return None
-          i += 10 + lctLen
-          if (i >= b.length) return None
-          val minCode = b(i) & 0xff
-          i += 1
-          // concatenate the LZW sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          while (i < b.length && (b(i) & 0xff) != 0) {
-            val n = b(i) & 0xff
-            if (i + 1 + n > b.length) return None
-            data.write(b, i + 1, n)
-            i += 1 + n
-          }
-          val idx = lzwDecode(data.toByteArray, minCode, iw * ih)
-            .getOrElse(return None)
-          val nColors = ct.length / 3
-          val rgb = new Array[Byte](iw * ih * 3)
-          var p = 0
-          while (p < iw * ih) {
-            val ci = idx(p) & 0xff
-            if (ci >= nColors) return None
-            rgb(3 * p) = ct(3 * ci)
-            rgb(3 * p + 1) = ct(3 * ci + 1)
-            rgb(3 * p + 2) = ct(3 * ci + 2)
-            p += 1
-          }
-          return Some((iw, ih, rgb))
-        case _ => return None
+    def skipSubBlocks(): Unit =
+      while (i < b.length && (b(i) & 0xff) != 0) i += 1 + (b(i) & 0xff)
+    while (i < b.length && (b(i) & 0xff) == 0x21) { // extension block
+      i += 2
+      skipSubBlocks()
+      i += 1
+    }
+    if (i + 10 > b.length || (b(i) & 0xff) != 0x2c) return None
+    val (w, h, ipk) = (le2(b, i + 5), le2(b, i + 7), b(i + 9) & 0xff)
+    val ct =
+      if (tableLen(ipk) > 0) b.slice(i + 10, i + 10 + tableLen(ipk))
+      else b.slice(13, 13 + tableLen(b(10) & 0xff))
+    if ((ipk & 0x40) != 0 || ct.isEmpty || w <= 0 || h <= 0) return None
+    i += 10 + tableLen(ipk)
+    if (i >= b.length || (b(i) & 0xff) < 2 || (b(i) & 0xff) > 11)
+      return None
+    i += 1
+    skipSubBlocks()
+    if (i > b.length) return None // last sub-block cut short
+    val idx = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+    var rows = 0
+    var warned = false
+    val countRows = new IIOReadProgressListener { // one call per row
+      def imageProgress(r: ImageReader, pct: Float): Unit = rows += 1
+      def sequenceStarted(r: ImageReader, i: Int): Unit = ()
+      def sequenceComplete(r: ImageReader): Unit = ()
+      def imageStarted(r: ImageReader, i: Int): Unit = ()
+      def imageComplete(r: ImageReader): Unit = ()
+      def thumbnailStarted(r: ImageReader, i: Int, t: Int): Unit = ()
+      def thumbnailProgress(r: ImageReader, pct: Float): Unit = ()
+      def thumbnailComplete(r: ImageReader): Unit = ()
+      def readAborted(r: ImageReader): Unit = ()
+    }
+    readRaster(b, "gif", { (r, p) =>
+      p.setDestination(idx)
+      r.addIIOReadProgressListener(countRows)
+      r.addIIOReadWarningListener((_, _) => warned = true)
+    }).filter(_ => rows == h && !warned).flatMap { ras =>
+      val ci = ras.getSamples(0, 0, w, h, 0, null: Array[Int])
+      if (ci.exists(_ >= ct.length / 3)) None
+      else {
+        val rgb = new Array[Byte](3 * ci.length)
+        for (p <- ci.indices) System.arraycopy(ct, 3 * ci(p), rgb, 3 * p, 3)
+        Some((w, h, rgb))
       }
     }
-    None
   }
 
-  /** GIF-flavor LZW decode (appendix F): initial width minCode+1,
-    * Clear = 2^minCode, EOI = Clear+1, dictionary entries stored as
-    * (prefix code, appended byte) pairs, width +1 at sizes 2^n up to
-    * the 12-bit cap, KwKwK first-byte rule. Returns exactly `nPixels`
-    * indices or None.
-    */
-  private def lzwDecode(
-      data: Array[Byte], minCode: Int, nPixels: Int): Option[Array[Byte]] = {
-    if (minCode < 2 || minCode > 11) return None
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val prefix = new Array[Int](4096)
-    val append = new Array[Byte](4096)
-    var tableSize = eoi + 1
-    var width = minCode + 1
-    val out = new Array[Byte](nPixels)
-    var outN = 0
-    var bitPos = 0
-    var prev = -1
-    def emit(code: Int): Boolean = { // expand one code, false on overflow
-      var stack = List.empty[Byte]
-      var c = code
-      while (c >= clear) { stack = append(c) :: stack; c = prefix(c) }
-      stack = c.toByte :: stack
-      if (outN + stack.length > nPixels) return false
-      stack.foreach { v => out(outN) = v; outN += 1 }
-      true
-    }
-    def firstByte(code: Int): Byte = {
-      var c = code
-      while (c >= clear) c = prefix(c)
-      c.toByte
-    }
-    while (outN < nPixels) {
-      if (bitPos + width > data.length * 8) return None
-      var code = 0
-      var k = 0
-      while (k < width) { // LSB-first bit packing
-        val bit = (data((bitPos + k) / 8) >> ((bitPos + k) % 8)) & 1
-        code |= bit << k
-        k += 1
-      }
-      bitPos += width
-      if (code == clear) {
-        tableSize = eoi + 1
-        width = minCode + 1
-        prev = -1
-      } else if (code == eoi) {
-        return if (outN == nPixels) Some(out) else None
-      } else if (prev == -1) {
-        if (code >= clear) return None // first code must be a literal
-        if (!emit(code)) return None
-        prev = code
-      } else {
-        if (code > tableSize || (code == tableSize && tableSize >= 4096))
-          return None
-        val newEntry = code == tableSize // KwKwK
-        if (tableSize < 4096) {
-          prefix(tableSize) = prev
-          append(tableSize) =
-            if (newEntry) firstByte(prev) else firstByte(code)
-          tableSize += 1
-          if (tableSize == (1 << width) && width < 12) width += 1
-        }
-        if (!emit(code)) return None
-        prev = code
-      }
-    }
-    Some(out)
-  }
+  /** Half-up rounding to 4 decimals; a negative zero comes out 0.0. */
+  private def r4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
 
   /** The [[extractFeatures]] stride-moment stub, first three lanes. */
   private def stubFeatureRow(
@@ -767,9 +608,7 @@ object Multimodal {
         var s = 0.0
         var j = i
         while (j < b.length) { s += (b(j) & 0xff); j += 3 }
-        val v = s / b.length
-        BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble + 0.0
+        r4(s / b.length)
       }
     (id, "other", lane(0), lane(1), lane(2))
   }
@@ -806,11 +645,6 @@ object Multimodal {
       latArcMs: Long, lonArcMs: Long,
       strippedBytes: Long, gpsAfterStrip: Boolean)
 
-  private def u16(b: Array[Byte], off: Int, le: Boolean): Int =
-    if (le) le2(b, off) else be2(b, off)
-  private def u32(b: Array[Byte], off: Int, le: Boolean): Long =
-    if (le) le4(b, off) else be4(b, off)
-
   /** (latArcMs, lonArcMs) from the first APP1 Exif segment, or None.
     * Arc-milliseconds = deg·3 600 000 + min·60 000 + sec·1000, kept in
     * exact integer math (each rational is divided AFTER scaling, so
@@ -822,18 +656,20 @@ object Multimodal {
       val t = segStart + 4 + 6 // past marker+len+"Exif\0\0": TIFF start
       if (t + 8 > segStart + 2 + segLen) None
       else {
+        // TIFF byte order: "II" little-endian, "MM" big-endian
         val le = bytes(t) == 'I' && bytes(t + 1) == 'I'
-        val ifd0 = t + u32(bytes, t + 4, le).toInt
-        val n0 = u16(bytes, ifd0, le)
+        val u16: Int => Int = if (le) le2(bytes, _) else be2(bytes, _)
+        val u32: Int => Long = if (le) le4(bytes, _) else be4(bytes, _)
+        val ifd0 = t + u32(t + 4).toInt
+        val n0 = u16(ifd0)
         val gpsOff = (0 until n0).iterator.map(i => ifd0 + 2 + i * 12)
-          .find(e => u16(bytes, e, le) == 0x8825)
-          .map(e => t + u32(bytes, e + 8, le).toInt)
+          .find(e => u16(e) == 0x8825)
+          .map(e => t + u32(e + 8).toInt)
         gpsOff.flatMap { g =>
-          val ng = u16(bytes, g, le)
+          val ng = u16(g)
           def rational3(valOff: Int): Long = {
             def r(k: Int): (Long, Long) =
-              (u32(bytes, valOff + k * 8, le),
-                u32(bytes, valOff + k * 8 + 4, le))
+              (u32(valOff + k * 8), u32(valOff + k * 8 + 4))
             val (dn, dd) = r(0); val (mn, md) = r(1); val (sn, sd) = r(2)
             dn * 3600000L / math.max(dd, 1L) +
               mn * 60000L / math.max(md, 1L) +
@@ -841,8 +677,8 @@ object Multimodal {
           }
           def tagVal(tag: Int): Option[Long] =
             (0 until ng).iterator.map(i => g + 2 + i * 12)
-              .find(e => u16(bytes, e, le) == tag)
-              .map(e => rational3(t + u32(bytes, e + 8, le).toInt))
+              .find(e => u16(e) == tag)
+              .map(e => rational3(t + u32(e + 8).toInt))
           for (la <- tagVal(0x0002); lo <- tagVal(0x0004))
             yield (la, lo)
         }

@@ -14,10 +14,12 @@ import org.apache.spark.sql.types.LongType
   * [[globalRowNumber]] computes the identical 1-based rank with a
   * DISTRIBUTED sort: `RDD.sortBy` range-partitions on the key (every
   * partition sorts in parallel) and `zipWithIndex` numbers rows with
-  * per-partition offsets — no single-task stage anywhere. The same
-  * pattern as `GemPipeline.assignCompanyIds` and
-  * `Sampling.shuffleShards`, factored out and generalized to
+  * per-partition offsets — no single-task stage anywhere, for
   * multi-column mixed-type keys with per-column direction.
+  * `GemPipeline.assignCompanyIds` ranks its distinct company names
+  * through it. `Sampling.shuffleShards` keeps its own sortBy +
+  * zipWithIndex: its null-key check sits inside the sort key and it
+  * breaks ties on `String.valueOf` of the raw value.
   *
   * [[prefixSum]] extends a computed rank to a global running sum
   * (`sum(...) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`) with the
@@ -89,19 +91,6 @@ object Rank {
     spark.createDataFrame(ranked, st.add(rankCol, LongType))
   }
 
-  /** Global running sum of `valueCol` (long) in `rankCol` order
-    * (1-based dense ranks from [[globalRowNumber]]), appended as
-    * `outCol` — inclusive of the current row, exactly
-    * `sum(v) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)`.
-    *
-    * Two-pass bucketed prefix scan: ranks group into buckets of
-    * `bucketSize`; per-bucket sums prefix over the bucket frame
-    * (`n/bucketSize` rows — the ONLY unpartitioned window, sized to
-    * stay driver-trivial: pick bucketSize ≈ √n or larger so both the
-    * bucket frame and each bucket partition stay bounded), then a
-    * bucket-PARTITIONED running sum finishes within buckets in
-    * parallel.
-    */
   /** EXACT per-group discontinuous quantiles at scale — the answer to
     * "p50/p95/p99 per group" when groups are FEW and HUGE, where
     * `Window.partitionBy(group).orderBy(value)` funnels each giant
@@ -149,6 +138,19 @@ object Rank {
         col(valueCol))
   }
 
+  /** Global running sum of `valueCol` (long) in `rankCol` order
+    * (1-based dense ranks from [[globalRowNumber]]), appended as
+    * `outCol` — inclusive of the current row, exactly
+    * `sum(v) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)`.
+    *
+    * Two-pass bucketed prefix scan: ranks group into buckets of
+    * `bucketSize`; per-bucket sums prefix over the bucket frame
+    * (`n/bucketSize` rows — the ONLY unpartitioned window, sized to
+    * stay driver-trivial: pick bucketSize ≈ √n or larger so both the
+    * bucket frame and each bucket partition stay bounded), then a
+    * bucket-PARTITIONED running sum finishes within buckets in
+    * parallel.
+    */
   def prefixSum(
       df: DataFrame, rankCol: String, valueCol: String, outCol: String,
       bucketSize: Long = 1L << 16): DataFrame = {

@@ -204,12 +204,6 @@ object Retrieval {
         round(d("_rr_u") / lit(1e9), 4).as("mrr"))
   }
 
-  /** Shared scoring tail of the inline and stored-index paths:
-    * per-term df from the (already query-pruned) postings, idf ×
-    * length-normalized tf, per-doc sum, explicit
-    * `orderBy().limit(k)` top-k (TakeOrderedAndProject — never a
-    * partition-less window over the corpus).
-    */
   /** Raw per-doc BM25 scores (no top-k cut, no rounding) — the shared
     * kernel behind [[scoreFromPostings]] and the FIELDED scoring of
     * [[bm25TopKWithAnchors]], where two fields' scores must fuse
@@ -231,6 +225,12 @@ object Retrieval {
       .agg(sum(idf * tfNorm).as("score"))
   }
 
+  /** Shared scoring tail of the inline and stored-index paths:
+    * per-term df from the (already query-pruned) postings, idf ×
+    * length-normalized tf, per-doc sum, explicit
+    * `orderBy().limit(k)` top-k (TakeOrderedAndProject — never a
+    * partition-less window over the corpus).
+    */
   private def scoreFromPostings(
       postings: DataFrame, stats: DataFrame, idCol: String,
       k: Int, k1: Double, b: Double): DataFrame = {

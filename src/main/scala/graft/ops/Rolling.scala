@@ -120,28 +120,6 @@ object Rolling {
         .otherwise(lit(null).cast("double")))
   }
 
-  /** EWMA control chart over each group's daily volume: compare every
-    * day's count to the exponentially-weighted average of the PRIOR
-    * `window` days (α·(1−α)^(j−1) weights, renormalized over the lags
-    * available) and flag days beyond `kSigma` rolling standard
-    * deviations — the classic monitoring chart that reacts faster
-    * than a plain moving average because recent days dominate.
-    *
-    * Lag-dependent weights can't ride a plain window frame, so the
-    * prior window is materialized as a bounded shifted equi-join:
-    * each day contributes itself to its next `window` days (a
-    * `window`-sized explode — the ACF discipline), joined back on
-    * (group, day). All frames are (groups × days)-sized.
-    *
-    * Exactness: per-lag weight and weight·x are snapped to integer
-    * micro-units before summation (order-free), σ comes from exact
-    * integer Σx/Σx², and the flag compares doubles both engines
-    * derive from the same integers.
-    *
-    * @return per (group, day) with ≥`minPrior` prior days: `g`, `d`,
-    *         `x`, `n_prior`, `ewma` (round 4), `sigma` (round 4),
-    *         `flag` (0/1)
-    */
   /** Trailing rolling MEDIAN of daily volume — the robust counterpart
     * of [[trailingStats]]' mean (one outage day drags a 7-day mean for
     * a week; the median shrugs). A median can't ride a plain window
@@ -179,6 +157,28 @@ object Rolling {
   def ewmaWeights(alpha: Double, window: Int): Seq[Double] =
     (1 to window).map(j => alpha * math.pow(1.0 - alpha, j - 1))
 
+  /** EWMA control chart over each group's daily volume: compare every
+    * day's count to the exponentially-weighted average of the PRIOR
+    * `window` days (α·(1−α)^(j−1) weights, renormalized over the lags
+    * available) and flag days beyond `kSigma` rolling standard
+    * deviations — the classic monitoring chart that reacts faster
+    * than a plain moving average because recent days dominate.
+    *
+    * Lag-dependent weights can't ride a plain window frame, so the
+    * prior window is materialized as a bounded shifted equi-join:
+    * each day contributes itself to its next `window` days (a
+    * `window`-sized explode — the ACF discipline), joined back on
+    * (group, day). All frames are (groups × days)-sized.
+    *
+    * Exactness: per-lag weight and weight·x are snapped to integer
+    * micro-units before summation (order-free), σ comes from exact
+    * integer Σx/Σx², and the flag compares doubles both engines
+    * derive from the same integers.
+    *
+    * @return per (group, day) with ≥`minPrior` prior days: `g`, `d`,
+    *         `x`, `n_prior`, `ewma` (round 4), `sigma` (round 4),
+    *         `flag` (0/1)
+    */
   def ewmaChart(
       df: DataFrame, groupCol: String, dayCol: String,
       alpha: Double, window: Int, kSigma: Int,

@@ -444,11 +444,6 @@ object Similarity {
     cents.select(col("cell_id").as(idCol), col("centvec").as(vecCol))
   }
 
-  /** Embedding near-duplicate pairs within a blocking key (IVF-style
-    * coarse cell, here any precomputed label/bucket column): cosine ≥
-    * threshold, id_a < id_b. Blocking bounds the pair count — the full
-    * cross product never materializes.
-    */
   /** Semantic decontamination — the embedding-space counterpart of the
     * n-gram [[Dedup.decontaminate]]: drop every corpus row whose max
     * cosine against ANY benchmark vector reaches `threshold` (eval-set
@@ -477,6 +472,11 @@ object Similarity {
       .filter(col("max_bench_cos") < threshold)
   }
 
+  /** Embedding near-duplicate pairs within a blocking key (IVF-style
+    * coarse cell, here any precomputed label/bucket column): cosine ≥
+    * threshold, id_a < id_b. Blocking bounds the pair count — the full
+    * cross product never materializes.
+    */
   def cosineNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, blockCol: String,
       threshold: Double): DataFrame = {

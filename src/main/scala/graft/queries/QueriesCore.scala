@@ -150,19 +150,28 @@ private[queries] object QueriesCore {
 
     // A1+J1 coordinate canonicalization: group-summary + broadcast
     // re-join (`Coalplants_GEM.R:59-76`), nation as the location key.
+    // The balance is averaged in integer cents: integer sums are exact
+    // in both engines whatever the summation order, so the one division
+    // and the half-up rounding agree even on an exact x.xx5 tie. Round
+    // before the BIGINT cast (a bare double cast truncates in Spark and
+    // rounds in DuckDB).
     QueryDef("q10_canon_coords",
       (s, dir) => t(s, dir, "customer")
         .withColumn("c_lon", col("c_custkey").cast("double"))
-        .transform(Coordinates.canonicalize("c_nationkey", "c_acctbal", "c_lon"))
+        .withColumn("c_cents", round(col("c_acctbal") * 100).cast("bigint"))
+        .transform(Coordinates.canonicalize("c_nationkey", "c_cents", "c_lon"))
         .select(col("c_custkey"), col("c_nationkey"),
-          round(col("c_acctbal"), 2).as("acct_canon"))
+          (round(col("c_cents")) / 100).as("acct_canon"))
         .orderBy("c_custkey"),
-      Some("""WITH summ AS (
+      Some("""WITH cust AS (
+             |  SELECT *, CAST(round(c_acctbal * 100) AS BIGINT) AS c_cents
+             |  FROM customer),
+             |summ AS (
              |  SELECT c_nationkey,
-             |    CASE WHEN count(DISTINCT (c_acctbal, CAST(c_custkey AS DOUBLE))) > 1
-             |         THEN avg(c_acctbal) ELSE min(c_acctbal) END AS acct
-             |  FROM customer GROUP BY c_nationkey)
-             |SELECT c.c_custkey, c.c_nationkey, round(s.acct, 2) AS acct_canon
+             |    CASE WHEN count(DISTINCT (c_cents, CAST(c_custkey AS DOUBLE))) > 1
+             |         THEN avg(c_cents) ELSE min(c_cents) END AS cents
+             |  FROM cust GROUP BY c_nationkey)
+             |SELECT c.c_custkey, c.c_nationkey, round(s.cents) / 100 AS acct_canon
              |FROM customer c LEFT JOIN summ s USING (c_nationkey)
              |ORDER BY c_custkey""".stripMargin)),
 

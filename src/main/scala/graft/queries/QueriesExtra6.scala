@@ -209,8 +209,8 @@ private[queries] object QueriesExtra6 {
            |ORDER BY source""".stripMargin
       }),
 
-    // Perceptual image hash (ImageHash.dhash): REAL PNG decode (zlib
-    // inflate + all five scanline filters, the q149 path) → exact
+    // Perceptual image hash (ImageHash.dhash): REAL PNG decode (the
+    // JDK reader, all five scanline filters, the q149 path) → exact
     // integer block-luma pooling onto the 9×8 grid → 64 gradient-sign
     // bits, split into four 16-bit LSH bands. One narrow map riding
     // the image scan — the hashing plan has no exchange (spec-

@@ -81,7 +81,6 @@ private[queries] object Shared {
       }
     }
 
-  /** Stored verified near-dup pairs (`id_a`, `id_b`, `jaccard`). */
   /** Session-memoized ANN index build (round-14 task 4): train the
     * k=8/iters=2 IVF codebook ONCE per session+dir, persist it
     * (`graft_ivf_cents`, plain — k rows) beside the SQ8 codes table
@@ -125,6 +124,7 @@ private[queries] object Shared {
     Layout.table(s, "graft_ivf_sq8_idx")
   }
 
+  /** Stored verified near-dup pairs (`id_a`, `id_b`, `jaccard`). */
   def ndPairs(s: SparkSession, dir: String): DataFrame = {
     ensureNearDupIndex(s, dir)
     Layout.table(s, "graft_nd_pairs")
@@ -137,13 +137,6 @@ private[queries] object Shared {
     ensureNearDupIndex(s, dir)
     Components.clustersFromIndex(Layout.table(s, "graft_cluster_map"))
   }
-
-  /** Shared oracle CTE chain: MinHash signatures → LSH bands → verified
-    * exact-Jaccard pairs on the `doc_id < 1000` slice. q44 selects the
-    * pairs directly; q61 stacks a recursive connected-components CTE on
-    * top. ONE definition so the two oracles cannot drift (the r3/r5
-    * lesson: oracle CTE copies diverge silently).
-    */
 
   /** DuckDB cosine over two list columns, double precision — the exact
     * fragment q29/q45/q52 inline; shared by the IVF-training oracles.
@@ -771,6 +764,12 @@ private[queries] object Shared {
        |$rounds""".stripMargin
   }
 
+  /** Shared oracle CTE chain: MinHash signatures → LSH bands → verified
+    * exact-Jaccard pairs on the `doc_id < 1000` slice. q44 selects the
+    * pairs directly; q61 stacks a recursive connected-components CTE on
+    * top. ONE definition so the two oracles cannot drift (the r3/r5
+    * lesson: oracle CTE copies diverge silently).
+    */
   val minhashVerifiedCtes: String =
     minhashSigCtes("", "doc_id < 1000") + ",\n" +
     """cand AS (
@@ -786,12 +785,6 @@ private[queries] object Shared {
       |  JOIN toks a ON a.doc_id = c.id_a
       |  JOIN toks b ON b.doc_id = c.id_b)""".stripMargin
 
-  /** Near-dup cluster chain on top of [[minhashVerifiedCtes]]:
-    * 0.8-Jaccard pairs → recursive label reach → `comp` (id,
-    * component) + `sizes`. ONE definition behind q61 and q128 (the
-    * r3/r5 oracle-drift lesson). Callers prepend `WITH RECURSIVE`.
-    */
-
   /** 0.8-Jaccard pairs + both-orientation edges on top of
     * [[minhashVerifiedCtes]] — shared prefix of the component chain
     * (q61/q128) and the label-propagation chain (q233).
@@ -801,6 +794,11 @@ private[queries] object Shared {
       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
       |          UNION ALL SELECT id_b, id_a FROM pairs)""".stripMargin
 
+  /** Near-dup cluster chain on top of [[minhashVerifiedCtes]]:
+    * 0.8-Jaccard pairs → recursive label reach → `comp` (id,
+    * component) + `sizes`. ONE definition behind q61 and q128 (the
+    * r3/r5 oracle-drift lesson). Callers prepend `WITH RECURSIVE`.
+    */
   val clusterChainCtes: String =
     pairsEdgesCtes + ",\n" +
     """reach(id, lbl) AS (

@@ -35,14 +35,6 @@ object EventStream {
   final case class SessionAgg(user_id: Long, n_events: Long, total_value: Double,
       first_ts: java.sql.Timestamp, last_ts: java.sql.Timestamp)
 
-  /** Custom stateful sessionization: per-user running aggregate with a
-    * processing-time idle timeout — the `mapGroupsWithState` tier for
-    * semantics windows can't express. State per key is O(1) (five
-    * fields), and idle keys ARE evicted: each update re-arms a
-    * processing-time timeout, and on `hasTimedOut` the final session is
-    * emitted and its state removed — without that the store grows with
-    * every user ever seen (ADVICE.md r2).
-    */
   /** Pure state-merge step, factored out so the session arithmetic is
     * unit-testable without driving a streaming query.
     */
@@ -55,6 +47,14 @@ object EventStream {
       (prev.map(_.first_ts) ++ events.map(_.ts)).minBy(_.getTime),
       (prev.map(_.last_ts) ++ events.map(_.ts)).maxBy(_.getTime))
 
+  /** Custom stateful sessionization: per-user running aggregate with a
+    * processing-time idle timeout — the `mapGroupsWithState` tier for
+    * semantics windows can't express. State per key is O(1) (five
+    * fields), and idle keys ARE evicted: each update re-arms a
+    * processing-time timeout, and on `hasTimedOut` the final session is
+    * emitted and its state removed — without that the store grows with
+    * every user ever seen (ADVICE.md r2).
+    */
   def sessionize(spark: SparkSession, events: DataFrame,
       timeout: String = "30 minutes"): DataFrame = {
     import spark.implicits._
@@ -645,22 +645,6 @@ object EventStream {
     }
   }
 
-  /** Operational QUANTILE-index ingest — the histogram member of the
-    * streaming-maintenance family, completing the symmetry: every
-    * persisted index (bands, codes, postings, cluster map, hist
-    * partials) now has a foreachBatch maintenance path. Each
-    * micro-batch aggregates its own `graft_hist` partial per group
-    * (shard-tagged with the batch id) and APPENDS the occupied-bucket
-    * rows ([[graft.ops.Stats.histPartials]] — counts are sums, so the
-    * probe's combinable fold is bit-identical to a single-pass build
-    * over everything ingested), then serves the current per-group
-    * percentiles FROM the stored index into `outTable`.
-    *
-    * Exactly-once contract: the partial append and the served
-    * percentile rows commit through batch-id-keyed idempotent moves,
-    * so replay is a no-op (the batch id still doubles as the shard
-    * key, keeping the fold combinable).
-    */
   /** Streaming OT drift monitor — entropic-transport distance of every
     * micro-batch's value distribution against the PERSISTED reference
     * histogram ([[graft.ops.Stats.histPartials]] rows in `histTable`,
@@ -838,6 +822,22 @@ object EventStream {
     }
   }
 
+  /** Operational QUANTILE-index ingest — the histogram member of the
+    * streaming-maintenance family, completing the symmetry: every
+    * persisted index (bands, codes, postings, cluster map, hist
+    * partials) now has a foreachBatch maintenance path. Each
+    * micro-batch aggregates its own `graft_hist` partial per group
+    * (shard-tagged with the batch id) and APPENDS the occupied-bucket
+    * rows ([[graft.ops.Stats.histPartials]] — counts are sums, so the
+    * probe's combinable fold is bit-identical to a single-pass build
+    * over everything ingested), then serves the current per-group
+    * percentiles FROM the stored index into `outTable`.
+    *
+    * Exactly-once contract: the partial append and the served
+    * percentile rows commit through batch-id-keyed idempotent moves,
+    * so replay is a no-op (the batch id still doubles as the shard
+    * key, keeping the fold combinable).
+    */
   def incrementalHistIngest(
       docs: DataFrame, histTable: String, outTable: String,
       checkpoint: String, groupCol: String, valueCol: String,

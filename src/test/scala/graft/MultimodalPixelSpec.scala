@@ -61,6 +61,72 @@ class MultimodalPixelSpec extends SparkSpec {
     assert(Multimodal.pngPixels(inter).isEmpty)
   }
 
+  /** The JDK's own PNG writer, progressive (Adam7) when asked. */
+  private def jdkPng(img: java.awt.image.BufferedImage,
+      interlaced: Boolean): Array[Byte] = {
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+    val out = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+    val param = writer.getDefaultWriteParam
+    if (interlaced)
+      param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    writer.setOutput(ios)
+    writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
+    ios.close()
+    writer.dispose()
+    out.toByteArray
+  }
+
+  /** True when the bare JDK reader decodes the payload. */
+  private def jdkDecodes(bytes: Array[Byte]): Boolean =
+    javax.imageio.ImageIO.read(new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))) != null
+
+  private def kindOf(bytes: Array[Byte]): String = {
+    import spark.implicits._
+    Multimodal.contentFeatures(spark,
+        Seq((1L, bytes, "image")).toDF("id", "bytes", "media_type"))
+      .collect()(0).getString(1)
+  }
+
+  // Each payload below is one the JDK reader decodes on its own; the
+  // contract still rejects it, so the explicit checks must.
+  test("a PNG with one CRC byte flipped is rejected though its zlib is intact") {
+    val good = MediaFixtures.pngBytes(5L, 8, 6)
+    val idatLen = ((good(33) & 0xff) << 24) | ((good(34) & 0xff) << 16) |
+      ((good(35) & 0xff) << 8) | (good(36) & 0xff)
+    val bad = good.clone()
+    val crcAt = 41 + idatLen // IDAT payload starts at 41, CRC follows
+    bad(crcAt) = (bad(crcAt) ^ 0x01).toByte
+    assert(jdkDecodes(bad))
+    assert(Multimodal.pngPixels(bad).isEmpty)
+    assert(kindOf(bad) === "other")
+    assert(kindOf(good) === "png")
+  }
+
+  test("a genuinely interlaced (Adam7) PNG is rejected") {
+    val img = new java.awt.image.BufferedImage(8, 6,
+      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    for (y <- 0 until 6; x <- 0 until 8) img.setRGB(x, y, 0x102030 * (x + y))
+    val adam7 = jdkPng(img, interlaced = true)
+    assert(adam7(28) === 1) // IHDR interlace method: Adam7
+    assert(jdkDecodes(adam7))
+    assert(Multimodal.pngPixels(adam7).isEmpty)
+    assert(kindOf(adam7) === "other")
+    assert(Multimodal.pngPixels(jdkPng(img, interlaced = false)).isDefined)
+  }
+
+  test("a palette (color type 3) PNG is rejected") {
+    val img = new java.awt.image.BufferedImage(8, 6,
+      java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
+    for (y <- 0 until 6; x <- 0 until 8) img.setRGB(x, y, 0x330000 * (x % 4))
+    val palette = jdkPng(img, interlaced = false)
+    assert(palette(25) === 3) // IHDR color type: indexed
+    assert(jdkDecodes(palette))
+    assert(Multimodal.pngPixels(palette).isEmpty)
+    assert(kindOf(palette) === "other")
+  }
+
   test("gifPixels round-trips the formula image") {
     for ((id, w, h) <- Seq((0L, 7, 5), (1L, 1, 1), (9L, 16, 11))) {
       val Some((gw, gh, rgb)) =
