@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * copies of the same picture; dHash captures the LUMINANCE GRADIENT
   * structure, which survives both:
   *
-  *  1. decode pixels ([[Multimodal.pngPixels]] /
-  *     [[Multimodal.gifPixels]] — the JDK's own readers, no external
-  *     codec),
+  *  1. decode pixels ([[Multimodal.pngPixels]] through the JDK's own
+  *     reader, [[Multimodal.gifPixels]] through a pure-Scala LZW walk —
+  *     no external codec),
   *  2. average-pool integer luma (299·R + 587·G + 114·B, the BT.601
   *     weights ×1000 so everything stays exact integer) onto a
   *     (gridW+1) × gridH block grid,

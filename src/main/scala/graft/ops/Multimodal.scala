@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.awt.image.{BufferedImage, Raster}
+import java.awt.image.Raster
 import java.io.ByteArrayInputStream
-import javax.imageio.{ImageIO, ImageReadParam, ImageReader}
-import javax.imageio.event.IIOReadProgressListener
+import javax.imageio.ImageIO
 import javax.imageio.stream.MemoryCacheImageInputStream
 import scala.util.control.NonFatal
 
@@ -288,9 +287,10 @@ object Multimodal {
     *    RMS amplitude, peak |sample|, sample count;
     *  - PNG (8-bit gray/RGB/RGBA, non-interlaced; [[pngPixels]]), GIF
     *    (87a/89a, first frame; [[gifPixels]]) and JPEG (baseline) →
-    *    per-channel means (R, G, B) of the pixels the JDK's own
-    *    `javax.imageio` decoders recover — gray fills all three lanes,
-    *    RGBA's alpha is layout-only and not averaged. (JPEG oracle
+    *    per-channel means (R, G, B) of the decoded pixels — PNG and
+    *    JPEG through the JDK's own `javax.imageio` readers, GIF through
+    *    a pure-Scala LZW decoder; gray fills all three lanes, RGBA's
+    *    alpha is layout-only and not averaged. (JPEG oracle
     *    checkability comes from the fixture side: constant-per-8×8-block
     *    gray images round-trip the lossy codec exactly — see
     *    `MediaFixtures.jpegBytes`.)
@@ -449,20 +449,15 @@ object Multimodal {
     else None
 
   /** The first image of `b`, decoded by the JDK's `javax.imageio`
-    * reader for `format` (png | gif | jpeg) and read through a memory
-    * cache (never a temp file); `setup` may adjust the reader and its
-    * read parameters first. None when the reader throws.
+    * reader for `format` (png | jpeg) and read through a memory cache
+    * (never a temp file). None when the reader throws.
     */
-  private def readRaster(b: Array[Byte], format: String,
-      setup: (ImageReader, ImageReadParam) => Unit = (_, _) => ()
-  ): Option[Raster] = {
+  private def readRaster(b: Array[Byte], format: String): Option[Raster] = {
     val reader = ImageIO.getImageReadersByFormatName(format).next()
     val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
     try {
       reader.setInput(in, true, true)
-      val param = reader.getDefaultReadParam
-      setup(reader, param)
-      Some(reader.read(0, param).getRaster)
+      Some(reader.read(0).getRaster)
     } catch {
       case NonFatal(_) => None
     } finally {
@@ -526,73 +521,142 @@ object Multimodal {
       (ras.getWidth, ras.getHeight, channels, bandBytes(ras, channels)))
   }
 
-  /** GIF pixel decode through the JDK reader (LZW per the GIF89a spec,
-    * appendix F), behind the checks the reader does not make: a
-    * logical-screen walk past the extension blocks to the first image
-    * descriptor, which must be non-interlaced, have a global or local
-    * color table, a nonzero size, an LZW minimum code size in 2..11
-    * and complete data sub-blocks. The reader writes raw color
-    * indices into an 8-bit destination; it must raise no warning (an
-    * out-of-sequence code), every one of the image's rows must
-    * arrive, and every index must fall inside the color table, which
-    * maps it to an RGB triple. Anything else → None (stub fallback),
-    * never fabricated pixels.
+  /** GIF pixel decode — REAL, pure-Scala LZW (the GIF89a spec's
+    * variable-width LZW, appendix F): logical-screen walk, global /
+    * local color table, extension-block skip, first image descriptor's
+    * sub-blocks concatenated and LZW-decoded (code width grows at
+    * table sizes 2^n, Clear resets to the initial width, 12-bit max),
+    * palette-mapped to RGB triples. Interlaced images and index
+    * overruns → None (stub fallback), never fabricated pixels.
     */
   private[graft] def gifPixels(
       b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (b.length < 14 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F' ||
         b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a')
       return None
-    def tableLen(packed: Int): Int =
-      if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0
-    var i = 13 + tableLen(b(10) & 0xff)
+    val packed = b(10) & 0xff
+    val hasGct = (packed & 0x80) != 0
+    val gctLen = if (hasGct) 3 * (1 << ((packed & 7) + 1)) else 0
+    var i = 13 + gctLen
     if (i > b.length) return None
-    def skipSubBlocks(): Unit =
-      while (i < b.length && (b(i) & 0xff) != 0) i += 1 + (b(i) & 0xff)
-    while (i < b.length && (b(i) & 0xff) == 0x21) { // extension block
-      i += 2
-      skipSubBlocks()
-      i += 1
-    }
-    if (i + 10 > b.length || (b(i) & 0xff) != 0x2c) return None
-    val (w, h, ipk) = (le2(b, i + 5), le2(b, i + 7), b(i + 9) & 0xff)
-    val ct =
-      if (tableLen(ipk) > 0) b.slice(i + 10, i + 10 + tableLen(ipk))
-      else b.slice(13, 13 + tableLen(b(10) & 0xff))
-    if ((ipk & 0x40) != 0 || ct.isEmpty || w <= 0 || h <= 0) return None
-    i += 10 + tableLen(ipk)
-    if (i >= b.length || (b(i) & 0xff) < 2 || (b(i) & 0xff) > 11)
-      return None
-    i += 1
-    skipSubBlocks()
-    if (i > b.length) return None // last sub-block cut short
-    val idx = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    var rows = 0
-    var warned = false
-    val countRows = new IIOReadProgressListener { // one call per row
-      def imageProgress(r: ImageReader, pct: Float): Unit = rows += 1
-      def sequenceStarted(r: ImageReader, i: Int): Unit = ()
-      def sequenceComplete(r: ImageReader): Unit = ()
-      def imageStarted(r: ImageReader, i: Int): Unit = ()
-      def imageComplete(r: ImageReader): Unit = ()
-      def thumbnailStarted(r: ImageReader, i: Int, t: Int): Unit = ()
-      def thumbnailProgress(r: ImageReader, pct: Float): Unit = ()
-      def thumbnailComplete(r: ImageReader): Unit = ()
-      def readAborted(r: ImageReader): Unit = ()
-    }
-    readRaster(b, "gif", { (r, p) =>
-      p.setDestination(idx)
-      r.addIIOReadProgressListener(countRows)
-      r.addIIOReadWarningListener((_, _) => warned = true)
-    }).filter(_ => rows == h && !warned).flatMap { ras =>
-      val ci = ras.getSamples(0, 0, w, h, 0, null: Array[Int])
-      if (ci.exists(_ >= ct.length / 3)) None
-      else {
-        val rgb = new Array[Byte](3 * ci.length)
-        for (p <- ci.indices) System.arraycopy(ct, 3 * ci(p), rgb, 3 * p, 3)
-        Some((w, h, rgb))
+    val gct = if (hasGct) b.slice(13, 13 + gctLen) else Array.empty[Byte]
+    while (i < b.length) {
+      (b(i) & 0xff) match {
+        case 0x3b => return None // trailer before any image
+        case 0x21 => // extension: label + sub-blocks
+          i += 2
+          while (i < b.length && (b(i) & 0xff) != 0) i += 1 + (b(i) & 0xff)
+          i += 1
+        case 0x2c => // image descriptor
+          if (i + 10 > b.length) return None
+          val iw = le2(b, i + 5)
+          val ih = le2(b, i + 7)
+          val ipk = b(i + 9) & 0xff
+          if ((ipk & 0x40) != 0) return None // interlaced
+          val lctLen = if ((ipk & 0x80) != 0) 3 * (1 << ((ipk & 7) + 1)) else 0
+          val ct = if (lctLen > 0) b.slice(i + 10, i + 10 + lctLen) else gct
+          if (ct.isEmpty || iw <= 0 || ih <= 0) return None
+          i += 10 + lctLen
+          if (i >= b.length) return None
+          val minCode = b(i) & 0xff
+          i += 1
+          // concatenate the LZW sub-blocks
+          val data = new java.io.ByteArrayOutputStream()
+          while (i < b.length && (b(i) & 0xff) != 0) {
+            val n = b(i) & 0xff
+            if (i + 1 + n > b.length) return None
+            data.write(b, i + 1, n)
+            i += 1 + n
+          }
+          val idx = lzwDecode(data.toByteArray, minCode, iw * ih)
+            .getOrElse(return None)
+          val nColors = ct.length / 3
+          val rgb = new Array[Byte](iw * ih * 3)
+          var p = 0
+          while (p < iw * ih) {
+            val ci = idx(p) & 0xff
+            if (ci >= nColors) return None
+            rgb(3 * p) = ct(3 * ci)
+            rgb(3 * p + 1) = ct(3 * ci + 1)
+            rgb(3 * p + 2) = ct(3 * ci + 2)
+            p += 1
+          }
+          return Some((iw, ih, rgb))
+        case _ => return None
       }
     }
+    None
+  }
+
+  /** GIF-flavor LZW decode (appendix F): initial width minCode+1,
+    * Clear = 2^minCode, EOI = Clear+1, dictionary entries stored as
+    * (prefix code, appended byte) pairs, width +1 at sizes 2^n up to
+    * the 12-bit cap, KwKwK first-byte rule. Returns exactly `nPixels`
+    * indices or None.
+    */
+  private def lzwDecode(
+      data: Array[Byte], minCode: Int, nPixels: Int): Option[Array[Byte]] = {
+    if (minCode < 2 || minCode > 11) return None
+    val clear = 1 << minCode
+    val eoi = clear + 1
+    val prefix = new Array[Int](4096)
+    val append = new Array[Byte](4096)
+    var tableSize = eoi + 1
+    var width = minCode + 1
+    val out = new Array[Byte](nPixels)
+    var outN = 0
+    var bitPos = 0
+    var prev = -1
+    def emit(code: Int): Boolean = { // expand one code, false on overflow
+      var stack = List.empty[Byte]
+      var c = code
+      while (c >= clear) { stack = append(c) :: stack; c = prefix(c) }
+      stack = c.toByte :: stack
+      if (outN + stack.length > nPixels) return false
+      stack.foreach { v => out(outN) = v; outN += 1 }
+      true
+    }
+    def firstByte(code: Int): Byte = {
+      var c = code
+      while (c >= clear) c = prefix(c)
+      c.toByte
+    }
+    while (outN < nPixels) {
+      if (bitPos + width > data.length * 8) return None
+      var code = 0
+      var k = 0
+      while (k < width) { // LSB-first bit packing
+        val bit = (data((bitPos + k) / 8) >> ((bitPos + k) % 8)) & 1
+        code |= bit << k
+        k += 1
+      }
+      bitPos += width
+      if (code == clear) {
+        tableSize = eoi + 1
+        width = minCode + 1
+        prev = -1
+      } else if (code == eoi) {
+        return if (outN == nPixels) Some(out) else None
+      } else if (prev == -1) {
+        if (code >= clear) return None // first code must be a literal
+        if (!emit(code)) return None
+        prev = code
+      } else {
+        if (code > tableSize || (code == tableSize && tableSize >= 4096))
+          return None
+        val newEntry = code == tableSize // KwKwK
+        if (tableSize < 4096) {
+          prefix(tableSize) = prev
+          append(tableSize) =
+            if (newEntry) firstByte(prev) else firstByte(code)
+          tableSize += 1
+          if (tableSize == (1 << width) && width < 12) width += 1
+        }
+        if (!emit(code)) return None
+        prev = code
+      }
+    }
+    Some(out)
   }
 
   /** Half-up rounding to 4 decimals; a negative zero comes out 0.0. */

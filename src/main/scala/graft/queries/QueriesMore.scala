@@ -2033,10 +2033,10 @@ private[queries] object QueriesMore {
              |ORDER BY id_a, id_b""".stripMargin)),
 
     // REAL pixel decode (Multimodal.contentFeatures png/gif paths):
-    // even ids carry an 8x6 RGB PNG (filter type cycles (id+y) % 5,
-    // so all five scanline filters are inverted), odd ids a 7x5 GIF
-    // (64-color palette), both decoded by the JDK's own readers. The
-    // oracle never decodes: it recomputes
+    // even ids carry an 8x6 RGB PNG (the JDK's own reader; filter
+    // type cycles (id+y) % 5, so all five scanline filters are
+    // inverted), odd ids a 7x5 GIF (pure-Scala variable-width LZW,
+    // 64-color palette). The oracle never decodes: it recomputes
     // the channel means from MediaFixtures' closed-form pixel
     // formulas, so encode and decode must BOTH be right to go green.
     // PNG and GIF leave the stub list — only the codec-bound formats

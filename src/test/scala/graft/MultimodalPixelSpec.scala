@@ -127,6 +127,51 @@ class MultimodalPixelSpec extends SparkSpec {
     assert(kindOf(palette) === "other")
   }
 
+  /** A GIF89a with a 4-color table and LZW minimum code size 2
+    * (Clear = 4, EOI = 5) whose image data is `codes`, each packed
+    * LSB-first at its given bit width.
+    */
+  private def gifOfCodes(w: Int, h: Int, codes: Seq[(Int, Int)]): Array[Byte] = {
+    var acc = BigInt(0)
+    var nBits = 0
+    for ((c, width) <- codes) { acc |= BigInt(c) << nBits; nBits += width }
+    val data = Array.tabulate((nBits + 7) / 8)(k => (acc >> (8 * k)).toByte)
+    "GIF89a".getBytes("ISO-8859-1") ++
+      Array[Byte](w.toByte, 0, h.toByte, 0, 0x81.toByte, 0, 0) ++
+      MediaFixtures.gifPalette(4) ++
+      Array[Byte](0x2c, 0, 0, 0, 0, w.toByte, 0, h.toByte, 0, 0,
+        2, data.length.toByte) ++
+      data ++ Array[Byte](0, 0x3b)
+  }
+
+  // The two GIFs below are single-row images, which the JDK reader
+  // decodes without complaint: it drops any pixels past the last row.
+  test("a GIF whose LZW data runs past the last pixel is rejected") {
+    // index 0 throughout: the codes expand to 1 + 2 + 3 pixels, and the
+    // code width grows to 4 bits once the table holds 8 entries
+    val codes = Seq(4 -> 3, 0 -> 3, 6 -> 3, 7 -> 3, 5 -> 4)
+    val Some((_, _, rgb)) = Multimodal.gifPixels(gifOfCodes(6, 1, codes))
+    assert(rgb.toSeq === Seq.fill(18)(0.toByte))
+    val over = gifOfCodes(4, 1, codes) // 6 pixels for a 4x1 image
+    assert(jdkDecodes(over))
+    assert(Multimodal.gifPixels(over).isEmpty)
+    assert(kindOf(over) === "other")
+  }
+
+  test("a GIF with a Clear followed by a non-literal code is rejected") {
+    // 0, 1, then code 6 = "0 1" from the table: pixels 0 1 0 1
+    val ok = gifOfCodes(4, 1, Seq(4 -> 3, 0 -> 3, 1 -> 3, 6 -> 3, 5 -> 4))
+    val Some((_, _, rgb)) = Multimodal.gifPixels(ok)
+    assert(rgb.grouped(3).map(_.head).toSeq === Seq(0, 3, 0, 3).map(_.toByte))
+    // a Clear before the 6, which then names an entry the reset table
+    // no longer holds; a final 0 fills the row
+    val bad = gifOfCodes(4, 1,
+      Seq(4 -> 3, 0 -> 3, 1 -> 3, 4 -> 3, 6 -> 3, 0 -> 3, 5 -> 3))
+    assert(jdkDecodes(bad))
+    assert(Multimodal.gifPixels(bad).isEmpty)
+    assert(kindOf(bad) === "other")
+  }
+
   test("gifPixels round-trips the formula image") {
     for ((id, w, h) <- Seq((0L, 7, 5), (1L, 1, 1), (9L, 16, 11))) {
       val Some((gw, gh, rgb)) =
