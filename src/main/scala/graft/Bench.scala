@@ -90,13 +90,14 @@ object Bench {
       .mkString("{", ",", "}")
     val spreadGt5 = results.count { case (_, _, s, ok) => ok && s > 5.0 }
     println(f"""{"metric":"summary","total_s":$total%.3f,"n":${results.size},"failed":$failed,"passes":$repeat,"spread_gt5":$spreadGt5,"slowest":$slowest,"sf":"$sfDir"}""")
-    // Self-contained artifact (round 15, VERDICT r14 task 4): the
-    // stdout capture that becomes BENCH_r{N}.json is tail-truncated by
-    // the driver, so the full per-query map survives only here. One
-    // overwritten file at the repo root, committed per session, lets
-    // the next round diff EVERY query r{N-1}↔r{N} instead of the
-    // fragment visible in the stdout window.
-    try java.nio.file.Files.write(
+    // Self-contained artifact: a tail-truncated stdout capture loses
+    // the per-query map, so a full-catalog run also writes it to
+    // BENCH_DETAIL.json in the working directory, where the next
+    // full run can diff every query against it. A run restricted by
+    // SPARK_GRAFT_BENCH_ONLY leaves the file alone: its subset map
+    // would overwrite the full-catalog one.
+    if (only.nonEmpty) System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY set: BENCH_DETAIL.json kept")
+    else try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"passes":$repeat$spreadField,"sf":"$sfDir"}%n"""
         .getBytes("UTF-8"))

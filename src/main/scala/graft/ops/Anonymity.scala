@@ -22,7 +22,7 @@ object Anonymity {
       topN: Int): DataFrame = {
     val classes = df.groupBy(qiCols.map(col): _*)
       .agg(count(lit(1)).as("class_size"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val summary = classes.agg(
       count(lit(1)).as("n_classes"),
       sum(when(col("class_size") < k, 1L).otherwise(0L))
@@ -76,7 +76,7 @@ object Anonymity {
     val cells = df.groupBy(
         (qiCols.map(col) :+ col(sensitiveCol).cast("long").as("_sv")): _*)
       .agg(count(lit(1)).as("_n"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val domain = cells.select(col("_sv")).distinct()
     val global = cells.groupBy("_sv").agg(sum("_n").as("_gn"))
     val classes = cells.groupBy(qiCols.map(col): _*)
@@ -97,7 +97,7 @@ object Anonymity {
         col("_cc").cast("double") / col("class_size").cast("double") -
           col("_cg").cast("double") / col("_gt").cast("double"))), 4)
         .as("emd"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val summary = emd.agg(
       count(lit(1)).as("n_classes"),
       sum(when(col("emd") > t, 1L).otherwise(0L)).as("n_above_t"),
@@ -138,7 +138,7 @@ object Anonymity {
     val classes = cells.groupBy(qiCols.map(col): _*)
       .agg(sum("_n").as("class_size"),
         count(lit(1)).as("n_sensitive"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val summary = classes.agg(
       count(lit(1)).as("n_classes"),
       sum(when(col("n_sensitive") < l, 1L).otherwise(0L))
@@ -225,7 +225,7 @@ object Anonymity {
       .withColumn("suppressed",
         when(col("_rel") < suppressBelow, 1).otherwise(0))
       .withColumn("released", when(col("suppressed") === 0, col("_rel")))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val summary = noisy.agg(
       count(lit(1)).as("n_groups"),
       sum("suppressed").cast("long").as("n_suppressed"),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * map-side-combinable sum for pair counts, one `limit(1)` collect for
   * the argmax (the merge rule is a driver-side decision by nature, K
   * rows total), one narrow `replace` projection to apply the rule.
-  * Per-round `localCheckpoint` truncates the growing lineage — the
+  * A per-round [[Pin.loop]] truncates the growing lineage — the
   * [[Components]] / [[PageRank]] iteration pattern.
   *
   * Engine-parity by construction: a word's working state is the string
@@ -64,7 +64,7 @@ object Bpe {
       .withColumn("state",
         concat(lit(" "), concat_ws("  ", chars), lit(" ")))
       .select("state", "freq")
-      .localCheckpoint()
+      .transform(Pin.shared)
 
     // Adjacent symbol pairs of a state, with multiplicity. Guard
     // single-symbol states: Spark's sequence(1, 0) counts DOWN.
@@ -90,9 +90,9 @@ object Bpe {
         case Some(r) =>
           val (l, rgt, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
           rules += Row(step, l, rgt, l + rgt, cnt)
-          // pinEvery: merges is caller-chosen and each step chains a
-          // checkpoint generation (Iterate's planning-knee doc).
-          vocab = Iterate.pinEvery(step, vocab
+          // Pin.loop: merges is caller-chosen and each step chains a
+          // checkpoint generation (Pin's planning-knee doc).
+          vocab = Pin.loop(step, vocab
             .withColumn("state", replace(
               col("state"), lit(s" $l  $rgt "), lit(s" ${l + rgt} "))))
           step += 1

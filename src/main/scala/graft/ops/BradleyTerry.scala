@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * broadcast of the tiny strength frame into the pair-count frame +
   * one combinable sum back to item grain; the pair frame itself is
   * aggregated ONCE up front from the raw comparison log and
-  * localCheckpointed. Nothing data-sized ever reaches the driver and
+  * pinned. Nothing data-sized ever reaches the driver and
   * lineage stays flat across rounds.
   */
 object BradleyTerry {
@@ -43,21 +43,21 @@ object BradleyTerry {
     val counts = pairs
       .groupBy(col(winCol).as("_w"), col(loseCol).as("_l"))
       .agg(sum(col(nCol).cast("long")).as("_n"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // Undirected game counts m_ij, materialized in BOTH orientations
     // (a, b, m) so the per-item denominator is one groupBy("a").
     val games = counts.select(col("_w").as("_a"), col("_l").as("_b"), col("_n"))
       .unionByName(
         counts.select(col("_l").as("_a"), col("_w").as("_b"), col("_n")))
       .groupBy("_a", "_b").agg(sum("_n").as("_m"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val wins = games.select(col("_a").as("item")).distinct()
       .join(counts.groupBy(col("_w").as("item"))
         .agg(sum("_n").as("n_wins")), Seq("item"), "left")
       .na.fill(0L, Seq("n_wins"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     var model = wins.select(col("item"), lit(1.0).as("pi"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     for (_ <- 1 to iters) {
       val pa = model.select(col("item").as("_a"), col("pi").as("_pa"))
       val pb = model.select(col("item").as("_b"), col("pi").as("_pb"))
@@ -71,10 +71,10 @@ object BradleyTerry {
         .select(col("item"),
           (col("n_wins").cast("double") / col("_d")).as("_raw"))
       val z = raw.agg(sum("_raw").as("_z"))
-      // Iterate.pin, NOT bare localCheckpoint: checkpoint generations
-      // compound carried plan metadata and planning goes exponential
-      // past ~16 rounds (measured on THIS loop — see Iterate's doc).
-      model = Iterate.pin(raw.crossJoin(broadcast(z))
+      // Pin.rebase, not Pin.shared: carried checkpoint statistics
+      // compound across rounds and planning goes exponential past
+      // ~16 rounds (measured on this loop, see Pin's doc).
+      model = Pin.rebase(raw.crossJoin(broadcast(z))
         .select(col("item"), (col("_raw") / col("_z")).as("pi")))
     }
     val totGames = games.groupBy(col("_a").as("item"))

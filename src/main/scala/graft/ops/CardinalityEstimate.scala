@@ -235,7 +235,7 @@ object CardinalityEstimate {
       hllSummarize(regs, grp, p)
     // per-group register tables → per-group estimates
     val regs = base.groupBy("_g", "_b").agg(max("_rho").as("_m"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val perGroup = summarize(regs, Seq("_g"))
     val exact = base.groupBy("_g").agg(
       count(lit(1)).as("n_keys"),

@@ -96,7 +96,7 @@ object Classifier {
           .as("pos"),
         sum(when(!col(labelCol).cast("boolean"), 1L).otherwise(0L))
           .as("neg"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val ranked = Rank.globalRowNumber(byScore, Seq("s" -> true), "_rk")
     val cum = Rank.prefixSum(ranked, "_rk", "neg", "_cneg")
     val auc = cum.agg(

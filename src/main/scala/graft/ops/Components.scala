@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
   * only nodes whose label moved last round re-broadcast (a stable
   * label was already sent the round it was adopted), so after round 1
   * the dominant edges×labels join runs against the shrinking frontier,
-  * not the full label frame. Lineage is truncated with an eager
-  * `localCheckpoint` per round so the plan does not grow with the
-  * iteration count — the classic iterative-Spark failure mode. Only
+  * not the full label frame. Lineage is truncated with a [[Pin.loop]]
+  * per round so the plan does not grow with the iteration count — the
+  * classic iterative-Spark failure mode. Only
   * edge ENDPOINTS iterate: nodes touching no edge can never change
   * label, so singletons sit out of the loop and are joined back at the
   * end — on a near-dup graph where most docs are unique, the frame in
@@ -79,7 +79,7 @@ object Components {
     // frontier: each node must announce its own label once.
     var ckpt = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"), lit(true).as("changed"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
 
     var round = 0
     var converged = false
@@ -97,10 +97,9 @@ object Components {
           .select(col("id").as("src"), col("component")), "src")
         .groupBy(col("dst").as("id"))
         .agg(min("component").as("cand"))
-      // pinEvery: maxIter=20 reaches past the ~16-generation
-      // checkpoint-metadata planning knee (Iterate's doc) — periodic
-      // full pins reset the chain on long-diameter graphs.
-      val next = Iterate.pinEvery(round, labels
+      // Pin.loop: maxIter=20 reaches past the planning knee in Pin's
+      // doc, so long-diameter graphs need the periodic rebase.
+      val next = Pin.loop(round, labels
         .join(cand, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), col("cand")).as("component"),
@@ -108,7 +107,6 @@ object Components {
       // The probe reads the blocks the checkpoint just materialized —
       // no join, no shuffle, stops at the first changed row.
       converged = next.where(col("changed")).isEmpty
-      ckpt.unpersist()
       ckpt = next
       round += 1
     }
@@ -161,7 +159,7 @@ object Components {
 
     var cur = canon(edges.select(
       col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     var round = 0
     var converged = cur.isEmpty
     while (!converged && round < maxIter) {
@@ -171,9 +169,9 @@ object Components {
         .select(col("v").as("a"), col("m").as("b")))
       val s2 = sym(large)
       val m2 = minOfStar(s2)
-      // pinEvery: star rounds are bounded O(log² n) but maxIter=30
-      // allows generations past the planning knee (Iterate's doc).
-      val small = Iterate.pinEvery(round, canon(
+      // Pin.loop: star rounds are bounded O(log² n) but maxIter=30
+      // allows generations past the planning knee (Pin's doc).
+      val small = Pin.loop(round, canon(
         s2.join(m2, "u").filter(col("v") <= col("u"))
           .select(col("v").as("a"), col("m").as("b"))
           .union(m2.select(col("u").as("a"), col("m").as("b")))))
@@ -181,7 +179,6 @@ object Components {
       // one-sided except ⇒ set equality (both are distinct sets).
       converged = small.count() == cur.count() &&
         small.exceptAll(cur).isEmpty
-      cur.unpersist()
       cur = small
       round += 1
     }
@@ -225,19 +222,19 @@ object Components {
       .select(col(seeds.columns.head).cast("long").as("id"))
       .distinct()
       .withColumn("hops", lit(0))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     var frontier = settled
     var hop = 1
     while (hop <= maxHops && !frontier.isEmpty) {
-      // pinEvery: maxHops is caller-chosen and may exceed the
-      // checkpoint-generation planning knee (Iterate's doc).
-      val next = Iterate.pinEvery(hop, frontier
+      // Pin.loop: maxHops is caller-chosen and may exceed the
+      // planning knee (Pin's doc).
+      val next = Pin.loop(hop, frontier
         .join(sym, frontier("id") === sym("src"))
         .select(col("dst").as("id"))
         .distinct()
         .join(settled.select("id"), Seq("id"), "left_anti")
         .withColumn("hops", lit(hop)))
-      settled = Iterate.pinEvery(hop, settled.unionByName(next))
+      settled = Pin.loop(hop, settled.unionByName(next))
       frontier = next
       hop += 1
     }
@@ -356,7 +353,7 @@ object Components {
         col(labelACol).as("la"))
       .join(b.select(col(nodeCol).as("node"), col(labelBCol).as("lb")),
         Seq("node"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // Integer DIV keeps the binomial exact in int64 for any cluster
     // size — Spark's `/` on longs is double division, exact only
     // below 2^53 (cluster sizes under ~9.5e7). The product is always
@@ -399,7 +396,7 @@ object Components {
     * Scale shape: per round one edges⋈labels shuffle, a (node, label)
     * count aggregate, and a per-node argmax window — identical cost
     * to a [[connectedComponents]] round. Lineage is cut per round via
-    * localCheckpoint (the Components discipline). Rounds are FIXED,
+    * [[Pin.loop]] (the Components discipline). Rounds are FIXED,
     * not run to convergence, so the cost model is exact.
     *
     * @return (`id`, `community`) for every node in `nodes`
@@ -418,7 +415,7 @@ object Components {
       .persist()
     val allNodes = nodes.select(col(idCol).cast("long").as("id")).distinct()
     var lab = allNodes.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("c").desc, col("lbl").asc)
     (1 to rounds).foreach { rnd =>
@@ -429,10 +426,9 @@ object Components {
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1)
         .select(col("id"), col("lbl").as("cand"))
-      // pinEvery: rounds is caller-chosen (Iterate's planning-knee doc).
-      val next = Iterate.pinEvery(rnd, lab.join(best, Seq("id"), "left")
+      // Pin.loop: rounds is caller-chosen (Pin's planning-knee doc).
+      val next = Pin.loop(rnd, lab.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("cand"), col("lbl")).as("lbl")))
-      lab.unpersist()
       lab = next
     }
     sym.unpersist()
@@ -453,7 +449,7 @@ object Components {
     * Scale shape per round: one edge-to-labels equi-join, one
     * combinable (node, label) count, one per-node argmax window
     * (high-cardinality key), one left join back; lineage pinned via
-    * [[Iterate.pinEvery]].
+    * [[Pin.loop]].
     *
     * @param docs    node frame; `labelCol` null = unlabeled
     * @param pairs   undirected near-dup pairs (aCol, bCol)
@@ -478,7 +474,7 @@ object Components {
         col(labelCol).as("lbl"),
         when(col(labelCol).isNotNull, 0).otherwise(lit(null))
           .cast("int").as("labeled_at"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("c").desc, col("lbl").asc)
     (1 to rounds).foreach { rnd =>
@@ -490,8 +486,8 @@ object Components {
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1)
         .select(col("id"), col("lbl").as("cand"))
-      // pinEvery: rounds is caller-chosen (Iterate's planning-knee doc).
-      state = Iterate.pinEvery(rnd, state.join(best, Seq("id"), "left")
+      // Pin.loop: rounds is caller-chosen (Pin's planning-knee doc).
+      state = Pin.loop(rnd, state.join(best, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("lbl"), col("cand")).as("lbl"),
           when(col("lbl").isNull && col("cand").isNotNull, lit(rnd))
@@ -726,7 +722,7 @@ object Components {
     // 2. all members of touched components, at their CURRENT label
     val members = stored.join(broadcast(touchedComps), "component")
       .groupBy("doc_id").agg(min("component").as("component"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // 3. delta-sized union-find: batch + members, all linking edges
     val nodes = batchDocs.select(col(idCol).cast("long").as("id"))
       .union(members.select(col("doc_id").as("id")))

@@ -55,7 +55,7 @@ object Conformal {
       .withColumn("_cal",
         pmod(graft.functions.Hashing.portableHash(
           col("_id").cast("string")), lit(2L)) === 0L)
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val mu = in.where(col("_cal"))
       .groupBy("_g")
       // Predictor mean floors to integer micro-units so both engines

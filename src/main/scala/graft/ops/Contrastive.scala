@@ -40,13 +40,13 @@ object Contrastive {
       .union(pairs.select(col(bCol).cast("long").as("u"),
         col(aCol).cast("long").as("v")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val anchors = sym.groupBy(col("u").as("anchor"))
       .agg(min("v").as("pos"))
     val ranked = Sampling.shuffleShards(
         docs.select(col(idCol)), idCol, shardSize = Long.MaxValue)
       .select(col(idCol).cast("long").as("neg"), col("rank"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val nTot = ranked.agg(count(lit(1)).as("_n"))
     val drawn = anchors
       .crossJoin(broadcast(nTot))

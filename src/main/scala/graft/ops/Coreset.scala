@@ -40,7 +40,7 @@ object Coreset {
     val spark = df.sparkSession
     val pts = df.select(col(idCol).cast("long").as("_id"),
         col(vecCol).as("_v"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val seed = pts
       .withColumn("_h", portableHash(col("_id").cast("string")))
       .orderBy(col("_h"), col("_id")).limit(1)

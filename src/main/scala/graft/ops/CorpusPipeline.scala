@@ -59,7 +59,7 @@ object CorpusPipeline {
     // them costs nothing extra and the funnel attributes them to the
     // gate that actually removed them (exact dedup runs first).
     //
-    // Materialized ONCE (localCheckpoint) for its three consumers:
+    // Pinned ONCE for its three consumers:
     // the minhash pair join, the cluster node list, and the final
     // fate join. Lazy recomputation ran the exact-dedup join +
     // scoring ~3x once near-dup went cluster-based (pairs AND nodes
@@ -80,7 +80,7 @@ object CorpusPipeline {
       .withColumn("_gate_ok",
         coalesce(col("_exact_w"), lit(false)) &&
           col("_quality") >= minQuality && langOk(col("_lang")))
-      .localCheckpoint()
+      .transform(Pin.shared)
     val gated = scored.filter(col("_gate_ok"))
       .select(df.columns.map(col).toSeq: _*)
 

@@ -57,7 +57,7 @@ object Dedup {
     }
     // One 1-row aggregate, materialized ONCE (each cutoff row below
     // re-reads it).
-    val one = hashed.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val one = hashed.agg(aggs.head, aggs.tail: _*).transform(Pin.shared)
     cuts.map { c =>
       one.select(lit(c).as("cutoff"), col(s"n_$c").as("n_docs"),
         col(s"d_$c").as("n_distinct"),
@@ -196,9 +196,9 @@ object Dedup {
     def toksOf(df: DataFrame) = Par.spread(df, col(idCol)).select(col(idCol),
       array_sort(array_distinct(TextAnalysis.tokens(col(textCol)))).as("toks"))
       .withColumn("n_toks", size(col("toks")))
-      .localCheckpoint(true)
-    val bandsOld = lshBands(old, idCol, textCol, k, bands).localCheckpoint(true)
-    val bandsBatch = lshBands(batch, idCol, textCol, k, bands).localCheckpoint(true)
+      .transform(Pin.shared)
+    val bandsOld = lshBands(old, idCol, textCol, k, bands).transform(Pin.shared)
+    val bandsBatch = lshBands(batch, idCol, textCol, k, bands).transform(Pin.shared)
     val toksOld = toksOf(old)
     val toksBatch = toksOf(batch)
     def selfPairs(b: DataFrame, toks: DataFrame): DataFrame = {
@@ -284,19 +284,15 @@ object Dedup {
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, threshold: Double = 0.7): DataFrame = {
-    // Band + token frames are eager-localCheckpointed (r20): the band
-    // frame feeds BOTH sides of the self-join and the token frame both
-    // verify joins, so the lazy form ran the k-hash signature fold
-    // twice and the tokenize+sort fold twice per call — the dominant
-    // CPU of every minhash consumer (q286's profile: 4 × ~5-11 s
-    // 32-task fold stages for one pair build). Checkpoint = one fold,
-    // block-manager reads after; the r19 measurement that rejected
-    // materializing ("10 s vs 19 s") was through the STORAGE layer
-    // (bucketed table write), not the block manager. An eager action
-    // inside the operator matches the binCounts/ngramJaccard posture.
-    // Executor loss then fails the job instead of recomputing the
-    // frames (see the failure model in [[Iterate]]'s doc).
-    val b = lshBands(df, idCol, textCol, k, bands).localCheckpoint(true)
+    // Band + token frames are pinned: the band frame feeds BOTH sides
+    // of the self-join and the token frame both verify joins, so the
+    // lazy form ran the k-hash signature fold twice and the
+    // tokenize+sort fold twice per call — the dominant CPU of every
+    // minhash consumer (q286's profile: 4 × ~5-11 s 32-task fold
+    // stages for one pair build). A pin is one fold and block-manager
+    // reads after; materializing through a bucketed table write
+    // instead measured slower (10 s vs 19 s).
+    val b = lshBands(df, idCol, textCol, k, bands).transform(Pin.shared)
     val candidates = bandCandidates(b, idCol)
     // Verify with a merge-count over SORTED distinct token arrays
     // (graft_overlap): one scan per candidate pair instead of the
@@ -306,7 +302,7 @@ object Dedup {
     val toks = Par.spread(df, col(idCol)).select(col(idCol),
       array_sort(array_distinct(TextAnalysis.tokens(col(textCol)))).as("toks"))
       .withColumn("n_toks", size(col("toks")))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     verifyJaccard(candidates, toks, toks, idCol, threshold,
       "id_a", "id_b")
   }

@@ -320,7 +320,6 @@ object Drift {
     val byGroup = comps.groupBy("_g", "_i")
       .agg(sum("_v").as("_s"), count(lit(1)).as("_n"))
       .select(col("_g"), col("_i"), (col("_s") / col("_n")).as("_c"))
-      .localCheckpoint(true)
     // Global centroid = mean over ALL vectors, computed directly from
     // the component stream (NOT reconstructed from per-group means:
     // that walks a different floating-point path than the oracle's
@@ -355,7 +354,7 @@ object Drift {
         least(greatest(floor((col(valueCol).cast("double") - lit(lo))
           / lit(w)), lit(0)), lit(nbins - 1)).cast("long").as("_b"))
       .groupBy("_g", "_b")
-      .agg(count(lit(1)).as("_cnt")).localCheckpoint()
+      .agg(count(lit(1)).as("_cnt")).transform(Pin.shared)
   }
 
   /** Entropic optimal-transport (Sinkhorn, Cuturi NeurIPS'13) distance
@@ -372,7 +371,7 @@ object Drift {
     * scaling vectors — through `iters` fixed Sinkhorn rounds
     * (u = p ⊘ Kv, v = q ⊘ Kᵀu), each two bounded joins + two
     * combinable aggregates, lineage pinned per round
-    * ([[Iterate.pinEvery]]). Nothing data-proportional iterates.
+    * ([[Pin.rebase]]). Nothing data-proportional iterates.
     *
     * Determinism: the kernel `exp(−|i−j| / ((B−1)·eps))` and all
     * scaling arithmetic are fixed-shape double expressions an
@@ -415,7 +414,7 @@ object Drift {
       s"nbins >= 2, eps > 0, iters >= 1: $nbins, $eps, $iters")
     val spark = hist.sparkSession
     val cnts = hist.select(col("_g"), col("_b"), col("_cnt"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     val p = cnts.withColumn("_m",
       col("_cnt").cast("double") /
         sum("_cnt").over(Window.partitionBy("_g")))
@@ -425,11 +424,11 @@ object Drift {
       .select(col("_b").as("_j"),
         (col("_cnt").cast("double") / col("_tot").cast("double"))
           .as("_qm"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     // The B² kernel literal: both engines evaluate exp on the same
     // IEEE argument, so the tables agree to the ulp. Stays a
     // LocalRelation — checkpointing a driver-literal frame only costs
-    // an action (r20).
+    // an action.
     import spark.implicits._
     val kernel = (0 until nbins).flatMap { i =>
       (0 until nbins).map { j =>
@@ -438,7 +437,7 @@ object Drift {
       }
     }.toDF("_i", "_j", "_kk", "_c")
     val pm = p.select(col("_g"), col("_b").as("_i"), col("_m"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     var v = cnts.select("_g").distinct()
       .crossJoin(q.select("_j")).withColumn("_vv", lit(1.0))
     def uFrom(vCur: DataFrame): DataFrame = {
@@ -456,12 +455,11 @@ object Drift {
         .select(col("_g"), col("_j"),
           when(col("_qm") > 0, col("_qm") / col("_s2"))
             .otherwise(lit(0.0)).as("_vv"))
-      // The v-chain is LINEAR (each round consumes v once), so the
-      // per-round eager checkpoint was pure action overhead — the OT
-      // family's 200-job floor (VERDICT r19 item 3). Pin every 4th
-      // round to bound plan depth, and on the last round because the
-      // cost expression consumes the final v twice.
-      v = if (it % 4 == 0 || it == iters) Iterate.pin(next) else next
+      // The v-chain is LINEAR (each round consumes v once), so a
+      // per-round pin would be one action per round for nothing. Pin
+      // every 4th round to bound plan depth, and on the last round
+      // because the cost expression consumes the final v twice.
+      v = if (it % 4 == 0 || it == iters) Pin.rebase(next) else next
     }
     val cost = uFrom(v).join(kernel, Seq("_i"))
       .join(v, Seq("_g", "_j"))
@@ -512,7 +510,7 @@ object Drift {
     import spark.implicits._
     // bins is a driver literal (LocalRelation) and groups a one-join
     // derivation of the checkpointed counts — neither is worth an
-    // eager checkpoint action (r20).
+    // eager checkpoint action.
     val bins = (0L until nbins.toLong).toDF("_b")
     val groups = cnts.select("_g").distinct()
     val p = groups.crossJoin(bins)
@@ -521,7 +519,7 @@ object Drift {
         (coalesce(col("_cnt"), lit(0L)).cast("double") /
           sum(coalesce(col("_cnt"), lit(0L)))
             .over(Window.partitionBy("_g"))).as("_m"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     val kernel = (0 until nbins).flatMap { i =>
       (0 until nbins).map { j =>
         val c = math.abs(i - j).toDouble / (nbins - 1)
@@ -542,11 +540,11 @@ object Drift {
             .as("_uu"))
       // phi_k = (K^T u_k) * v_k — each group's current projection onto
       // the barycenter marginal; all strictly positive when any mass
-      // exists (K > 0), so the ln is total on real corpora. Left lazy
-      // (r20): it is groups × bins sized and consumed twice inside the
-      // SAME round plan; the per-round v checkpoint below bounds the
-      // replication at one round's depth, so the former dedicated
-      // checkpoint action bought nothing but a job.
+      // exists (K > 0), so the ln is total on real corpora. Left lazy:
+      // it is groups × bins sized and consumed twice inside the SAME
+      // round plan, and the per-round v pin below bounds the
+      // replication at one round's depth, so a pin of its own would
+      // buy nothing but a job.
       val phi = u.join(kernel, Seq("_i"))
         .groupBy("_g", "_j").agg(sum(col("_kk") * col("_uu")).as("_kt"))
         .join(v, Seq("_g", "_j"))
@@ -556,7 +554,7 @@ object Drift {
         .agg(exp(avg(log(col("_phi")))).as("_bm"))
       bary = b
       // v_k ← v_k · b ⊘ φ_k, and φ_k = v_k · Kᵀu_k, so v_k = b ⊘ Kᵀu_k.
-      v = Iterate.pinEvery(it, phi.join(b, Seq("_j"))
+      v = Pin.loop(it, phi.join(b, Seq("_j"))
         .select(col("_g"), col("_j"),
           (col("_bm") / col("_kt")).as("_vv")))
     }

@@ -85,11 +85,11 @@ object Dsir {
       dim: Int = 1024, alpha: Double = 1.0, k: Int = 100): DataFrame = {
     require(alpha > 0, s"alpha must be positive for unseen buckets: $alpha")
     require(k > 0, s"k must be positive: $k")
-    // Eager-pinned (r20): rawFeats feeds BOTH the q-distribution fit
+    // Pinned: rawFeats feeds BOTH the q-distribution fit
     // and the per-doc scoring join; lazy, the token+bigram explode —
     // the operator's dominant CPU — ran twice.
     val rawFeats = docFeatures(raw, idCol, textCol, dim)
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val qCounts = rawFeats.groupBy("bucket").agg(sum("n").as("qcnt"))
     val tCounts = corpusFeatures(target, textCol, dim)
       .withColumnRenamed("cnt", "tcnt")

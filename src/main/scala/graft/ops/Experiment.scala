@@ -169,7 +169,7 @@ object Experiment {
         col("von").as("v1"))
     val strata = a0.join(a1, Seq("s"))
       .withColumn("n_s", col("n0") + col("n1"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val tot = strata.agg(sum("n_s").as("_nt"))
     val staged = strata.crossJoin(broadcast(tot))
       .withColumn("_w", d(col("n_s")) / d(col("_nt")))
@@ -178,7 +178,7 @@ object Experiment {
         .cast("long"))
       .withColumn("_wv_n", round(col("_w") * col("_w") *
         (col("v0") + col("v1")) * lit(1e9)).cast("long"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val pooled = staged.agg(sum("_wd_n").as("_e"), sum("_wv_n").as("_v"))
     staged.crossJoin(broadcast(pooled))
       .select(col("s"), col("n0"), col("n1"),

@@ -131,17 +131,14 @@ object GraphMetrics {
       .union(edges.select(col(dstCol).cast("long").as("src"),
         col(srcCol).cast("long").as("dst")))
       .distinct()
-      .localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
+      .transform(Pin.shared)
+    (1 to rounds).foreach { rnd =>
       val keep = sym.groupBy("src").agg(count(lit(1)).as("dg"))
         .where(col("dg") >= k).select(col("src").as("n"))
-      val next = sym
+      sym = Pin.loop(rnd, sym
         .join(keep.select(col("n").as("src")), "src")
         .join(keep.select(col("n").as("dst")), "dst")
-        .select("src", "dst")
-        .localCheckpoint(true)
-      sym.unpersist()
-      sym = next
+        .select("src", "dst"))
     }
     // No post-filter: degrees < k surviving here mean `rounds` was
     // too small for this graph's peel depth — visible, not hidden.
@@ -175,14 +172,14 @@ object GraphMetrics {
     // report costs one evaluation of each, not five (measured 28.7 s
     // → 4.1 s on q232 at sf0.1).
     val e = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val lab = labels.select(col(nodeCol).as("node"),
         col(labelCol).as("lbl"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val labeled = e
       .join(lab.select(col("node").as("a"), col("lbl").as("la")), "a")
       .join(lab.select(col("node").as("b"), col("lbl").as("lb")), "b")
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val intra = labeled.where(col("la") === col("lb"))
       .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("e_c"))
     val degPerLbl = labeled.select(col("la").as("lbl"))

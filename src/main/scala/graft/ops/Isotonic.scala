@@ -38,7 +38,7 @@ object Isotonic {
       .withColumn("i", row_number().over(w))
       .withColumn("cs", sum("s").over(w))
       .withColumn("ct", sum("t").over(w))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // broadcast the tiny sides explicitly: the non-equi joins must
     // plan as BroadcastNestedLoopJoin over the bounded frame, never a
     // partitioned CartesianProduct (the PlanShapeSpec contract)

@@ -38,7 +38,7 @@ object JoinDiagnostics {
     // window then runs on the ≤ topK survivors only.
     val joined = la.join(ra, Seq("key"))
       .withColumn("out_rows", col("n_left") * col("n_right"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     joined
       .orderBy(col("out_rows").desc, col("key"))
       .limit(topK)

@@ -139,7 +139,7 @@ object LanguageModel {
       train: DataFrame, test: DataFrame, groupCol: String,
       textCol: String, d: Double = 0.75): DataFrame = {
     require(d > 0 && d < 1, s"discount must be in (0, 1): $d")
-    val bi = trainBigram(train, textCol).localCheckpoint(true)
+    val bi = trainBigram(train, textCol).transform(Pin.shared)
     val ctx = bi.groupBy("prev").agg(sum("bcnt").as("c1"),
       count(lit(1)).as("n1fwd"))
     val cont = bi.groupBy("cur").agg(count(lit(1)).as("ncont"))

@@ -92,7 +92,7 @@ object Linkage {
       .withColumn("band", expr(s"r DIV $w"))
       // Self-joined below (base × down-replicated probe): pin so the
       // ranked union materializes once.
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // The probe side always has the LARGER rank (y.r > x.r), so its
     // band is ≥ the base band — it must replicate DOWN onto
     // (band − 1, band) to meet every base row within w ranks.

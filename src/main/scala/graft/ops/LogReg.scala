@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the same discipline as [[Similarity]]'s Lloyd loop
   * and [[Pca.fit]]): the per-doc feature frame is computed ONCE,
-  * pre-partitioned by doc id and localCheckpointed for its K reuses;
+  * pre-partitioned by doc id and pinned ([[Pin.shared]]) for its K reuses;
   * each iteration is ONE job — an exchange-free window computes the
   * per-doc margin on the existing partitioning, the per-bucket
   * gradient is a map-side-combinable aggregate, and the ≤ dim+1-row
@@ -64,7 +64,7 @@ object LogReg {
     // checkpoint per round, ~4 actions; this shape pays ONE
     // aggregate-and-collect job per round).
     // Partition count derived from the INPUT size, not inherited from
-    // defaultParallelism (r20, VERDICT r19 item 1): the feature frame
+    // defaultParallelism: the feature frame
     // is corpus-bytes-proportional, and at bench scale it is sub-MB —
     // 32 near-empty partitions made every GD round pay the ~150 ms
     // per-task constant × 32, which is why the 8-core bench beat the
@@ -76,7 +76,7 @@ object LogReg {
           .select(col(idCol), lit(-1L).as("bucket"),
             lit(1.0).as("x"), col("y")))
       .repartition(Par.sizedParts(df), col(idCol))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // ONE setup job for both model-sized facts (was two: a distinct
     // count + a distinct collect): nDocs and the bucket universe are
     // both bounded aggregates of the checkpointed feature frame.

@@ -35,7 +35,7 @@ object Markov {
       .withColumn("i", lag("j", 1).over(w))
       .where(col("i").isNotNull)
       .groupBy("i", "j").agg(count(lit(1)).as("n_ij"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
   }
 
   /** Conditional entropy of the transition structure: per state the
@@ -97,12 +97,12 @@ object Markov {
     val p = trans.join(outTot, Seq("i"))
     val states = trans.select(col("i").as("state"))
       .union(trans.select(col("j"))).distinct()
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val nStates = states.count()
     var pi = states.select(col("state"),
       lit(math.round(1e9 / nStates)).as("pi_nano"))
-    (1 to rounds).foreach { _ =>
-      pi = p
+    (1 to rounds).foreach { rnd =>
+      pi = Pin.loop(rnd, p
         .join(pi.select(col("state").as("i"), col("pi_nano")), "i")
         // Snap each cell's mass flow BEFORE the per-state sum.
         .withColumn("_cell",
@@ -110,8 +110,7 @@ object Markov {
             col("n_ij").cast("double") / col("n_i").cast("double"))
             .cast("long"))
         .groupBy(col("j").as("state"))
-        .agg(sum("_cell").as("pi_nano"))
-        .localCheckpoint(true)
+        .agg(sum("_cell").as("pi_nano")))
     }
     val tot = pi.agg(sum("pi_nano").as("_tot"))
     states

@@ -108,7 +108,7 @@ object Mixing {
       .withColumn("w_ppb", expr("(n * 1000000000) DIV _tot"))
       .drop("_tot")
       .withColumn("n_ppb", col("w_ppb"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     for (_ <- 0 until rounds) {
       val rm = w.groupBy(rowCol).agg(sum("w_ppb").as("_rm"))
       w = w.join(broadcast(rm), Seq(rowCol))
@@ -127,8 +127,8 @@ object Mixing {
       // Each round reads `w` TWICE (marginal + rescale join), so the
       // un-pinned logical plan doubles per half-round — the measured
       // exponential-planning trap. Grid state is model-sized: pin
-      // every round (see Iterate scaladoc).
-      w = Iterate.pin(w)
+      // every round (see Pin's doc).
+      w = Pin.rebase(w)
     }
     val rowDev = w.groupBy(rowCol).agg(sum("w_ppb").as("_am"))
       .join(rt, Seq(rowCol), "left")

@@ -59,7 +59,6 @@ object NaiveBayes {
         round(log((d(col("c")) + lit(1.0)) /
           (d(col("cl")) + d(col("v")))) * lit(1e9)).cast("long")
           .as("w_n"))
-      .localCheckpoint(true)
     val defaults = withV.select(col("label"),
       round(log(lit(1.0) / (d(col("cl")) + d(col("v")))) * lit(1e9))
         .cast("long").as("def_n"))

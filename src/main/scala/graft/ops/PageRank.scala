@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * ONE shuffle join (edges × ranks) + one map-side-combinable sum per
   * destination — the BSP round every distributed PageRank (Pregel,
   * GraphX) runs, expressed on DataFrames so AQE/Tungsten stay in play.
-  * Lineage is truncated per round with an eager `localCheckpoint` —
+  * Lineage is truncated per round with [[Pin.loop]] —
   * the iterative-Spark failure mode [[Components]] documents.
   */
 object PageRank {
@@ -89,7 +89,7 @@ object PageRank {
     // D_{i-1} = nIso·prIso_{i-1} — scalar recurrence, identical IEEE
     // double steps to the oracle's unrolled 1-row CTEs.
     var prIso = 1.0 / n
-    var cur = endpoints.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
+    var cur = endpoints.withColumn("pr", lit(1.0 / n)).transform(Pin.shared)
     for (it <- 1 to iters) {
       val dmass = nIso * prIso
       val contribs = sym
@@ -97,8 +97,8 @@ object PageRank {
           .select(col("id").as("src"), (col("pr") / col("deg")).as("c")), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum("c").as("contrib"))
-      // pinEvery: iters is caller-chosen (Iterate's planning-knee doc).
-      cur = Iterate.pinEvery(it, endpoints
+      // Pin.loop: iters is caller-chosen (Pin's planning-knee doc).
+      cur = Pin.loop(it, endpoints
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - d) / n) +
@@ -142,7 +142,7 @@ object PageRank {
     val (ids, sym, deg) = graph(nodes, idCol, edges, srcCol, dstCol)
     val endpoints = deg.select("id")
     val seedIds = seeds.select(col(seedIdCol).cast("long").as("id"))
-      .distinct().join(ids, "id").localCheckpoint(true)
+      .distinct().join(ids, "id").transform(Pin.shared)
     // ONE action computes both seed counts (total + isolated): the
     // fused left-join aggregate replaces two separate count() jobs in
     // the pre-round setup (round-14 shave; q83/q372 pay this once).
@@ -159,9 +159,9 @@ object PageRank {
     val sVec = endpoints
       .join(seedIds.withColumn("_s1", lit(1.0)), Seq("id"), "left")
       .select(col("id"), (coalesce(col("_s1"), lit(0.0)) / nS).as("s"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     var prIsoSeed = 1.0 / nS
-    var cur = sVec.select(col("id"), col("s").as("pr")).localCheckpoint(true)
+    var cur = sVec.select(col("id"), col("s").as("pr")).transform(Pin.shared)
     for (it <- 1 to iters) {
       val dmass = kIso * prIsoSeed
       val contribs = sym
@@ -169,7 +169,7 @@ object PageRank {
           .select(col("id").as("src"), (col("pr") / col("deg")).as("c")), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum("c").as("contrib"))
-      cur = Iterate.pinEvery(it, sVec
+      cur = Pin.loop(it, sVec
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit(1.0 - d) * col("s") +

@@ -47,7 +47,7 @@ object Pca {
       iters: Int = 3): (Array[Double], Array[Double]) = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val xs = df.select(col(vecCol).as("vec")).filter(size(col("vec")) === dim)
-      .localCheckpoint(true) // reused 2x per round + the mean pass
+      .transform(Pin.shared) // reused 2x per round + the mean pass
     val mu: Array[Double] = xs
       .select(posexplode(col("vec")).as(Seq("p", "x")))
       .groupBy("p").agg(avg(col("x").cast("double")).as("m"))
@@ -122,8 +122,8 @@ object Pca {
     * fitted component from every vector (the [[removeTop]] residual,
     * unrounded), fit again on the residual frame — each stage is the
     * [[fit]] power iteration, so the whole trajectory stays
-    * oracle-replayable. The residual frames localCheckpoint per stage
-    * (lineage would otherwise double every component).
+    * oracle-replayable. The residual frames are pinned per stage
+    * ([[Pin.loop]]; lineage would otherwise double every component).
     *
     * @return one row per (component 1..k, pos 1..dim): the unit
     *         loading (raw double, caller rounds)
@@ -141,8 +141,7 @@ object Pca {
       val (mu, v) = fit(cur, "_v", dim, iters)
       comps += v
       if (c < k)
-        cur = cur.select(residual(col("_v"), mu, v, dim).as("_v"))
-          .localCheckpoint(true)
+        cur = Pin.loop(c, cur.select(residual(col("_v"), mu, v, dim).as("_v")))
     }
     spark.createDataset(for {
       c <- 1 to k; p <- 1 to dim
@@ -164,10 +163,10 @@ object Pca {
     require(k >= 1, s"k must be >= 1: $k")
     var cur = df.select(col(idCol), col(vecCol).as("_v"))
       .filter(size(col("_v")) === dim)
-    for (_ <- 1 to k) {
+    for (c <- 1 to k) {
       val (mu, v) = fit(cur.select("_v"), "_v", dim, iters)
-      cur = cur.select(col(idCol), residual(col("_v"), mu, v, dim).as("_v"))
-        .localCheckpoint(true)
+      cur = Pin.loop(c,
+        cur.select(col(idCol), residual(col("_v"), mu, v, dim).as("_v")))
     }
     cur.select(col(idCol),
       transform(col("_v"), e => round(e, 4) + lit(0.0)).as("resid"))

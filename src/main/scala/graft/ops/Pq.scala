@@ -65,7 +65,9 @@ object Pq {
       .drop("_rn", "_d", "centvec")
   }
 
-  /** Train the m per-subspace codebooks: (sub, cell_id, centvec). */
+  /** Train the m per-subspace codebooks: (sub, cell_id, centvec),
+    * already pinned, so callers read it without a pin of their own.
+    */
   def train(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int, ks: Int, iters: Int): DataFrame = {
@@ -81,7 +83,7 @@ object Pq {
       .select(col(idCol), col("cell_id"))
     var cents = sv.join(broadcast(seeds), Seq(idCol))
       .select(col("sub"), col("cell_id"), col("v").as("centvec"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     for (it <- 1 to iters) {
       cents = assign(sv, cents)
         .select(col("sub"), col("cell_id"),
@@ -94,7 +96,7 @@ object Pq {
         .select(col("sub"), col("cell_id"),
           transform(col("_pm"), p => round(p("_mu"), 6).cast("float"))
             .as("centvec"))
-        .transform(d => Iterate.pinEvery(it, d))
+        .transform(d => Pin.loop(it, d))
     }
     cents
   }
@@ -167,7 +169,6 @@ object Pq {
       vecCol: String, m: Int, subDim: Int, ks: Int, iters: Int,
       k: Int): DataFrame = {
     val codebook = train(corpus, idCol, vecCol, m, subDim, ks, iters)
-      .localCheckpoint(true)
     val codes = encode(corpus, idCol, vecCol, codebook, m, subDim)
     val qsv = subVecs(queries, idCol, vecCol, m, subDim)
       .select(col(idCol).as("query_id"), col("sub"), col("v"))
@@ -179,7 +180,7 @@ object Pq {
       .join(exactTopK(corpus, q, idCol, vecCol, k),
         Seq("query_id", "neighbor_id"), "left")
       .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     joined.crossJoin(broadcast(recallPpm(joined, k)))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("adc_micro"), col("exact_hit"), col("recall_ppm"))
@@ -207,11 +208,9 @@ object Pq {
       m: Int, subDim: Int, ks: Int, iters: Int, k: Int): DataFrame = {
     require(m * subDim == dim, s"m*subDim must equal dim: $m*$subDim != $dim")
     val coarseCb = train(corpus, idCol, vecCol, 1, dim, kCoarse, iters)
-      .localCheckpoint(true)
     val cells = encode(corpus, idCol, vecCol, coarseCb, 1, dim)
       .select(col(idCol), col("code").as("cell"))
     val pqCb = train(corpus, idCol, vecCol, m, subDim, ks, iters)
-      .localCheckpoint(true)
     val codes = encode(corpus, idCol, vecCol, pqCb, m, subDim)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val wp = Window.partitionBy(col("query_id"))
@@ -228,7 +227,7 @@ object Pq {
     val admitted = cells.join(broadcast(probes), Seq("cell"))
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val nCand = admitted.groupBy("query_id")
       .agg(count(lit(1)).as("n_candidates"))
     val approx = rankAdc(admitted.join(codes, Seq(idCol))
@@ -238,7 +237,7 @@ object Pq {
         Seq("query_id", "neighbor_id"), "left")
       .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))
       .join(broadcast(nCand), Seq("query_id"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     joined.crossJoin(broadcast(recallPpm(joined, k)))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("adc_micro"), col("exact_hit"), col("n_candidates"),

@@ -34,7 +34,7 @@ object QuantileNormalize {
       .select(col(groupCol).as("g"), x.as("v"))
       // Consumed three times (pooled rank, per-group rank, total):
       // pin it so the source scans once.
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // The pooled rank runs over the RAW input rows — a DISTRIBUTED
     // sort (Rank.globalRowNumber), never a single-task
     // `row_number().over(Window.orderBy(v))` of the corpus itself

@@ -97,7 +97,7 @@ object Quantize {
     require(dims.nonEmpty && k > 0, "dims non-empty, k > 0")
     val full = Similarity.bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val nq = queries.select(col(idCol)).distinct().count()
     dims.map { dd =>
       def trunc(df: DataFrame) =

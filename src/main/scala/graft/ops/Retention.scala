@@ -57,7 +57,7 @@ object Retention {
     val active = df.select(col(entityCol).as("e"),
         col(dayCol).cast("long").as("d"))
       .where(col("e").isNotNull && col("d").isNotNull).distinct()
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val span = active.agg(max("d").as("_mx"))
     val shifted = active
       .select(col("e"), explode(sequence(lit(1), lit(maxLag))).as("lag"),
@@ -71,7 +71,7 @@ object Retention {
       .groupBy("lag")
       .agg(count(lit(1)).as("n_base"),
         sum(coalesce(col("_hit"), lit(0L))).as("n_retained"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // Zero-retention lags carry no ln: drop them from the fit (an
     // ANSI engine would otherwise throw casting ln 0 = −∞).
     val pts = hits.where(col("n_retained") > 0)

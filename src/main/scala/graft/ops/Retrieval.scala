@@ -496,7 +496,7 @@ object Retrieval {
     * Scale shape: the corpus is touched exactly once (the bm25TopK
     * scan); every greedy step operates on the ≤ pool-row candidate
     * frame with a ≤ pool×select broadcast pair join — driver-side
-    * loop, pool-sized state, localCheckpoint per step. Ties at equal
+    * loop, pool-sized state, [[Pin.loop]] per step. Ties at equal
     * MMR break to the smaller id.
     *
     * @return `select` rows: `step`, idCol, `rel` (round 6), `max_sim`
@@ -516,12 +516,12 @@ object Retrieval {
       .crossJoin(broadcast(ranked.agg(max("score").as("_mx"))))
       .select(col(idCol), col("_tk"),
         (col("score") / col("_mx")).as("_rel"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     var selected = cands.limit(0)
       .select(col(idCol), col("_tk"), col("_rel"),
         lit(0.0).as("_maxsim"), lit(0.0).as("_mmr"),
         lit(0).as("step"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     for (step <- 1 to select) {
       val rem = cands
         .join(selected.select(col(idCol)), Seq(idCol), "left_anti")
@@ -547,9 +547,8 @@ object Retrieval {
             .select(col(idCol), col("_tk"), col("_rel"),
               col("_maxsim"), col("_mmr"))
         }
-      selected = selected
-        .unionByName(pick.withColumn("step", lit(step)))
-        .localCheckpoint(true)
+      selected = Pin.loop(step,
+        selected.unionByName(pick.withColumn("step", lit(step))))
     }
     selected.where(col("step") >= 1)
       .select(col("step"), col(idCol), round(col("_rel"), 6).as("rel"),

@@ -29,7 +29,7 @@ object Rfm {
         sum(col(amountCol).cast("long")).as("cents"))
       // The three axis ranks re-sort this frame three times: pin it
       // so the upstream aggregation runs once.
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // Three DISTRIBUTED global ranks (Rank.globalRowNumber — range-
     // partitioned sortBy+zipWithIndex), replacing the three
     // unpartitioned row_number windows that funneled every entity

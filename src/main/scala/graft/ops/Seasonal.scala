@@ -195,7 +195,7 @@ object Seasonal {
     val series = grid.join(joined, Seq("d"), "left")
       .select(col("d"), coalesce(col("xa"), lit(0L)).as("xa"),
         coalesce(col("xb"), lit(0L)).as("xb"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val mom = series.agg(count(lit(1)).as("nd"),
       sum("xa").as("sa"), sum(col("xa") * col("xa")).as("saa"),
       sum("xb").as("sb"), sum(col("xb") * col("xb")).as("sbb"))

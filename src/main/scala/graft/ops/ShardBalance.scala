@@ -32,7 +32,7 @@ object ShardBalance {
       .select(col(keyCol).cast("string").as("k"))
     val perKey = keyed.groupBy("k").agg(count(lit(1)).as("kn"))
       // Ranked AND counted below: pin so the rollup runs once.
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val hashShard = perKey.select(lit("hash").as("strategy"),
       pmod(Hashing.portableHash(col("k")), lit(shards.toLong)).as("shard"),
       col("kn"))

@@ -421,7 +421,7 @@ object Similarity {
       .orderBy(col("_h"), col(idCol)).limit(k)
       .withColumn("cell_id", row_number().over(seedW) - 1)
       .select(col("cell_id"), col(vecCol).as("centvec"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     for (it <- 1 to iters) {
       val w = Window.partitionBy(col(idCol))
         .orderBy(col("cell_cos").desc, col("cell_id"))
@@ -438,8 +438,8 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cell_id"),
           transform(col("pm"), p => round(p("m"), 6).cast("float")).as("centvec"))
-        // pinEvery: iters is caller-chosen (Iterate's planning-knee doc).
-        .transform(d => Iterate.pinEvery(it, d))
+        // Pin.loop: iters is caller-chosen (Pin's planning-knee doc).
+        .transform(d => Pin.loop(it, d))
     }
     cents.select(col("cell_id").as(idCol), col("centvec").as(vecCol))
   }
@@ -516,7 +516,7 @@ object Similarity {
         count(lit(1)).as("n"),
         sum(when(col("pred_label") === col("true_label"), 1L)
           .otherwise(0L)).as("n_correct"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     def d(c: Column) = c.cast("double")
     val withRates = bins
       .withColumn("_conf", d(col("n_votes")) / lit(k.toDouble))

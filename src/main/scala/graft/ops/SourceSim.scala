@@ -44,7 +44,7 @@ object SourceSim {
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .groupBy("s", "tok").agg(count(lit(1)).as("c"))
     val tot = counts.groupBy("s").agg(sum("c").as("n"))
-    val withP = counts.join(tot, Seq("s")).localCheckpoint(true)
+    val withP = counts.join(tot, Seq("s")).transform(Pin.shared)
     val pairs = withP.as("a").join(withP.as("b"),
         col("a.tok") === col("b.tok") && col("a.s") < col("b.s"))
       .select(col("a.s").as("src_a"), col("b.s").as("src_b"),

@@ -54,13 +54,13 @@ object SpanDedup {
     // lambdas) — O(tokens x doc_len) regex calls instead of O(docs).
     // Materialized once for its three consumers (the window frame
     // feeds both the keeper aggregate and the join-back; the token
-    // arrays feed reassembly) — the same 3-consumer localCheckpoint
-    // trade as CorpusPipeline.fates.
+    // arrays feed reassembly) — the same 3-consumer pin trade as
+    // CorpusPipeline.fates.
     // Par.spread: the tokenize fold (and the 1-partition checkpoint it
-    // would otherwise pin) rides the single-row-group scan (r19).
+    // would otherwise pin) rides the single-row-group scan.
     val tokenized = Par.spread(df, col(idCol))
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .localCheckpoint()
+      .transform(Pin.shared)
 
     // Every n-token window of every doc: (id, pos, gram), pos 0-based.
     // ngramsFromTokens already guards docs shorter than n.

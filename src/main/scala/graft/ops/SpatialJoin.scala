@@ -99,7 +99,7 @@ object SpatialJoin {
       // Cell key: interleave-free encoding — grids are ≪ 1e6 cells
       // per axis by construction.
       .withColumn("cell", col("cla") * lit(1000000L) + col("clo"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val off = Seq(-1L, 0L, 1L)
     val shifted = cells.select(col("cell").as("nb_cell"),
         col("cla"), col("clo"))

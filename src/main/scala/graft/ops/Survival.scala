@@ -46,7 +46,7 @@ object Survival {
       .agg(min("d").as("first_d"), max("d").as("last_d"))
       // Entity-sized frame referenced twice (horizon + labeling):
       // one lineage cut instead of two event scans.
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val horizon = spans.agg(max("last_d").as("h"))
     // 1-row broadcast cross: every entity needs the global horizon.
     val labeled = spans.crossJoin(broadcast(horizon))

@@ -29,7 +29,7 @@ object TextAnalysis {
     val counts = df
       .select(explode(tokens(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     val tot = counts.agg(sum("c").as("total_tokens"),
       count(lit(1)).as("vocab"))
     // Explicit top-K over the vocab frame (TakeOrderedAndProject —

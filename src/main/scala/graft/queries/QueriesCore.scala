@@ -1364,11 +1364,10 @@ private[queries] object QueriesCore {
     // per-source funnel accounting (CorpusPipeline.curate). The oracle
     // mirrors the clusters with a recursive min-reachable-id CTE, same
     // pattern as q61.
-    // Perf (r9): the r8 12.85 s regression was `fates` recomputing its
-    // gating stages ~3x once near-dup went cluster-based; the scored
-    // frame is now localCheckpointed once for its 3 consumers —
-    // 5.8 s warm / ~10 s cold at sf0.1, and q50 now costs ~1.4x its
-    // own cluster pass (q61) vs 3x before. The remaining floor is the
+    // Perf: `fates` pins the scored frame once for its 3 consumers;
+    // lazy, it recomputed its gating stages ~3x (12.85 s at sf0.1
+    // against 5.8 s warm / ~10 s cold pinned), and q50 costs ~1.4x
+    // its own cluster pass (q61) instead of 3x. The remaining floor is the
     // cluster iteration + per-query codegen, shared with q61/q100.
     // Heuristic-gate leg (trainedLangId = false): the oracle CTE chain
     // replays the stopword-ratio gate in SQL — this query's claim is

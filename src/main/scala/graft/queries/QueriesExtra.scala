@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -625,7 +625,7 @@ private[queries] object QueriesExtra {
           .join(LogReg.score(docs, "doc_id", "text", model, dim = 256)
             .select(col("doc_id"), col("p")), Seq("doc_id"))
           // Ranked AND totalled below: pin so scoring runs once.
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         // Rank on the ROUNDED score: ulp-level engine differences in
         // the float dot product must not reorder near-ties at a
         // decile boundary; round-6 + doc_id makes the order exact.
@@ -1783,7 +1783,7 @@ private[queries] object QueriesExtra {
           .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
             .as("cents"))
           // Ranked AND totalled below: pin so the rollup runs once.
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         // The Pareto running sum is the r11 verdict's q203 scale-
         // killer when written as an unpartitioned window (the part
         // dim is data-proportional): instead, a DISTRIBUTED rank
@@ -2451,19 +2451,18 @@ private[queries] object QueriesExtra {
     // composed into a lake-format conformance test.
     QueryDef("q220_format_integrity",
       (s, dir) => {
-        // Spread + pin before the three format writes (r20, VERDICT
-        // r19 item 7): the single-row-group scan wrote each sink from
-        // 1 task; the q158 checksum compare is per-bucket (count,
+        // Spread + pin before the three format writes: unspread, the
+        // single-row-group scan wrote each sink from 1 task; the q158 checksum compare is per-bucket (count,
         // bit_xor) — order- and file-count-insensitive — and the CSV
         // header is skipped per file, so the multi-file layout cannot
-        // change the result. The checkpoint pays the spread shuffle
-        // once for the three writes.
+        // change the result. The pin pays the spread shuffle once for
+        // the three writes.
         val base = graft.ops.Par.spread(
             t(s, dir, "lineitem")
               .select("l_orderkey", "l_linenumber", "l_quantity",
                 "l_returnflag"),
             col("l_orderkey"))
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         val tmp = sys.props("java.io.tmpdir")
         base.write.mode("overwrite").parquet(s"$tmp/graft_fmt_pq")
         Orc.write(base, s"$tmp/graft_fmt_orc")
@@ -2590,7 +2589,7 @@ private[queries] object QueriesExtra {
           val per = o.where(col("p") === period)
             .groupBy(col("o_custkey").as("c"))
             .agg(sum("cents").as("v"))
-            .localCheckpoint(true)
+            .transform(Pin.shared)
           Rank.globalRowNumber(per, Seq("v" -> true, "c" -> true), "_rk")
             .crossJoin(broadcast(per.agg(count(lit(1)).as("_n"))))
             .select(col("c"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{CorpusPipeline, Sampling}
+import graft.ops.{CorpusPipeline, Pin, Sampling}
 import org.apache.spark.sql.functions._
 import Shared._
 
@@ -269,7 +269,7 @@ private[graft] object QueriesExtra10 {
         val kept = CorpusPipeline.curatedDocs(
             t(s, dir, "documents")
               .select(col("doc_id"), col("source"), cjkSent.as("text")))
-          .select("doc_id", "source").localCheckpoint(true)
+          .select("doc_id", "source").transform(Pin.shared)
         val mixed = Sampling.temperatureMix(
           kept, "doc_id", "source", targetRows = 2L)
         Sampling.shuffleShards(mixed, "doc_id", shardSize = 2L)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -443,7 +443,7 @@ private[queries] object QueriesExtra2b {
         // sf0.1) is the TWO component iterations — the q61 round
         // floor, twice, which is the query's honest price.
         val pairs7 = Dedup.minhashNearDups(docs, "doc_id", "text",
-          k = 64, bands = 8, threshold = 0.7).localCheckpoint(true)
+          k = 64, bands = 8, threshold = 0.7).transform(Pin.shared)
         def clusters(pairs: DataFrame, as: String) =
           Components.dedupClusters(docs, "doc_id", pairs,
               "id_a", "id_b")
@@ -823,7 +823,7 @@ private[queries] object QueriesExtra2b {
         // probes the shared persisted pairs table (same slice +
         // parameters as ensureNearDupIndex) instead of re-running
         // minhash per invocation (round 14, the q372 pattern)
-        val pairs = ndPairs(s, dir).localCheckpoint(true)
+        val pairs = ndPairs(s, dir).transform(Pin.shared)
         val clusters = Components.dedupClusters(docs, "doc_id",
           pairs, "id_a", "id_b")
         Components.medoidPerCluster(clusters, "doc_id",
@@ -963,7 +963,7 @@ private[queries] object QueriesExtra2b {
             coalesce(round(col("entropy_norm") * 1e4), lit(0.0))
               .cast("long"))
           .withColumn("c_u", round(col("cv2") * 1e4).cast("long"))
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         val mom = base.agg(count(lit(1)).as("nn"),
           sum("r_u").as("sr"), sum(col("r_u") * col("r_u")).as("srr"),
           sum("e_u").as("se"), sum(col("e_u") * col("e_u")).as("see"),
@@ -1079,7 +1079,7 @@ private[queries] object QueriesExtra2b {
       (s, dir) => {
         val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
         val tk = Dedup.tokenIndex(docs, "doc_id", "text")
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         val a = tk.select(col("doc_id").as("id_a"),
           col("toks").as("ta"), col("n_toks").as("na"))
         val b = tk.select(col("doc_id").as("id_b"),
@@ -1595,7 +1595,7 @@ private[queries] object QueriesExtra2b {
             explode(sequence(col("_lo"), col("_hi"))).as("d"))
         val daily = grid.join(counted, Seq("g", "d"), "left")
           .withColumn("x", coalesce(col("x"), lit(0L)))
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         def dd(c: String) = col(c).cast("double")
         val fit = daily.groupBy("g").agg(
             max("_hi").as("hi"), count(lit(1)).as("n"),
@@ -2126,10 +2126,10 @@ private[queries] object QueriesExtra2b {
         val full = t(s, dir, "documents").filter(col("doc_id") < 1000)
         val slice = full.select("doc_id", "text")
         val aug = piiAugmented(full)
-        val pii = Pii.scan(aug, "doc_id", "text").localCheckpoint(true)
+        val pii = Pii.scan(aug, "doc_id", "text").transform(Pin.shared)
         // r13: probe the persisted cluster map (ensureNearDupIndex)
         // instead of re-running minhash + component iteration inline.
-        val clusters = ndClusters(s, dir).localCheckpoint(true)
+        val clusters = ndClusters(s, dir).transform(Pin.shared)
         val keepers = clusters.groupBy("component")
           .agg(min(col("doc_id")).as("doc_id"))
         val nRaw = slice.agg(count(lit(1)).as("n_raw"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -230,7 +230,7 @@ private[queries] object QueriesExtra4 {
         val toks = graft.ops.Par.spread(t(s, dir, "documents"),
             col("doc_id"))
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         val bg = when(size(col("tk")) >= 2,
           transform(sequence(lit(2), size(col("tk"))), i =>
             struct(element_at(col("tk"), i - 1).as("wa"),

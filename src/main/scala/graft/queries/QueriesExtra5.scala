@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -627,7 +627,7 @@ private[queries] object QueriesExtra5 {
       (s, dir) => {
         val slice = t(s, dir, "documents").filter(col("doc_id") < 1000)
         val pairs0 = Dedup.minhashNearDups(slice, "doc_id", "text",
-          k = 64, bands = 8, threshold = 0.7).localCheckpoint(true)
+          k = 64, bands = 8, threshold = 0.7).transform(Pin.shared)
         val taus = Seq(700, 800, 900)
         def lift(p: Int, c: Column): Column = lit(p.toLong) * 10000000L + c
         // ONE scan of the slice, exploded into the three threshold
@@ -956,8 +956,8 @@ private[queries] object QueriesExtra5 {
     // and the pre-forget audit shows them as orphaned index entries
     // (still probe-able — the residual risk); Layout.forgetKeys then
     // rewrites the index minus those keys and the post-forget audit
-    // certifies zero orphans, zero missing. The pre row materializes
-    // (localCheckpoint) BEFORE the forget mutates the table — the
+    // certifies zero orphans, zero missing. The pre row is pinned
+    // (Pin.shared) BEFORE the forget mutates the table — the
     // lazy-evaluation trap every read-then-rewrite composition must
     // dodge. Oracle is pure set algebra on the documents table.
     QueryDef("q365_forget_audit",
@@ -981,7 +981,7 @@ private[queries] object QueriesExtra5 {
         val pre = Reconcile.indexSync(remaining, "doc_id",
             Layout.table(s, "graft_cluster_map_f"), "doc_id")
           .withColumn("phase", lit("pre_forget"))
-          .localCheckpoint(true)
+          .transform(Pin.shared)
         Layout.forgetKeys(s, "graft_cluster_map_f", "doc_id",
           "doc_id", deleted, buckets = 8)
         val post = Reconcile.indexSync(remaining, "doc_id",
@@ -1208,7 +1208,7 @@ private[queries] object QueriesExtra5 {
     // KS/PSI can't express (a uniform one-bin shift is cheap under OT,
     // saturating under PSI). One corpus pass builds the histogram;
     // the 8 Sinkhorn rounds run on model-sized frames (B² kernel
-    // literal, groups × B scalings, Iterate-pinned). The oracle
+    // literal, groups × B scalings, pinned every 4th round). The oracle
     // unrolls the rounds as materialized CTEs (q118's GD-loop
     // precedent); only the emitted cost is rounded.
     QueryDef("q368_sinkhorn_ot",
@@ -1603,7 +1603,7 @@ private[queries] object QueriesExtra5 {
           "graft_cluster_map_g", "doc_id", buckets = 8)
         val deleted = t(s, dir, "documents")
           .filter(col("doc_id") < 300 && col("doc_id") % 50 === 0)
-          .select("doc_id").localCheckpoint(true)
+          .select("doc_id").transform(Pin.shared)
         val family = Seq(
           ("bands", "graft_nd_bands_f", "band_hash"),
           ("toks", "graft_nd_toks_f", "doc_id"),
@@ -1618,7 +1618,7 @@ private[queries] object QueriesExtra5 {
             .select(lit(nm).as("idx"), lit(phase).as("phase"),
               col("n_rows"), col("n_deleted_rows"))
         }.reduce(_ unionByName _)
-        val pre = audit("pre_forget").localCheckpoint(true)
+        val pre = audit("pre_forget").transform(Pin.shared)
         family.foreach { case (_, tb, bucketCol) =>
           Layout.forgetKeys(s, tb, bucketCol, "doc_id", deleted,
             buckets = 8)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -380,7 +380,7 @@ private[queries] object QueriesMore {
         // The curated set costs a minhash pass + component rounds to
         // produce but is tiny (≲ docs/5 ids). Downstream consumes it
         // three times (mix stats, mix membership, shard sort) —
-        // localCheckpoint materializes it ONCE and truncates the
+        // Pin.shared materializes it ONCE and truncates the
         // iterative lineage, measured 12.4 s → ~5 s at sf0.1.
         // Heuristic-gate leg (the q50 oracle-replayability note); the
         // trained DEFAULTS path of this composition is q429's
@@ -389,7 +389,7 @@ private[queries] object QueriesMore {
         val kept = CorpusPipeline.curatedDocs(
             t(s, dir, "documents").filter(col("doc_id") < 1000),
             trainedLangId = false)
-          .select("doc_id", "source").localCheckpoint(true)
+          .select("doc_id", "source").transform(Pin.shared)
         val mixed = Sampling.temperatureMix(
           kept, "doc_id", "source", targetRows = 50L)
         Sampling.shuffleShards(mixed, "doc_id", shardSize = 32L)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Graft
 import graft.functions.{CmsSketch, Hashing}
-import graft.ops.{ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
+import graft.ops.{Pin, ActiveLearning, Agreement, Allocate, Anonymity, AsofJoin, Attribution,
   Behavior, Bootstrap, Bpe, BradleyTerry, CardinalityEstimate, Conformal,
   Mixing,
   Chunking, Classifier, Cleaning, Components, Compressibility, Coreset,
@@ -63,7 +63,7 @@ private[queries] object Shared {
         val slice = t(s, dir, "documents")
           .filter(col("doc_id") < 1000).select("doc_id", "text")
         val pairs = Dedup.minhashNearDups(slice, "doc_id", "text",
-          k = 64, bands = 8, threshold = 0.8).localCheckpoint(true)
+          k = 64, bands = 8, threshold = 0.8).transform(Pin.shared)
         Layout.replaceBucketed(s, pairs, "graft_nd_pairs", "id_a",
           buckets = 8)
         Components.writeClusterIndex(s, slice, "doc_id",
@@ -103,7 +103,6 @@ private[queries] object Shared {
         val emb = t(s, dir, "embeddings")
         val cents = Similarity.trainCentroids(
           emb, "vec_id", "embedding", k = 8, iters = 2)
-          .localCheckpoint(true)
         Layout.replaceTable(s, cents, "graft_ivf_cents")
         Layout.replaceBucketed(s,
           Similarity.buildIvfSq8Index(emb, cents, "vec_id", "embedding"),
@@ -1441,7 +1440,7 @@ private[queries] object Shared {
       .filter(col("doc_id") < 1000).select("doc_id", "text")
     val old = docs.filter(col("doc_id") < 500)
     val batch = docs.filter(col("doc_id") >= 500)
-      .localCheckpoint(true)
+      .transform(Pin.shared)
     // One band/token build per corpus half: the three pair frames
     // share one signature fold and one tokenize fold.
     val (oldPairs, internal, cross) = Dedup.maintenancePairSets(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Pin
 import graft.sources.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -295,7 +296,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         refreshed.foreach(Layout.refresh(sp, _))
-        body(sp, batch.localCheckpoint(true), batchId)
+        body(sp, Pin.shared(batch), batchId)
       }
       .start()
 
@@ -509,11 +510,11 @@ object EventStream {
         bodyStatsTable, batchId)
       // 2. anchor history
       val bEdges = WebCorpus.anchorEdgeCounts(b, "url", "html")
-        .localCheckpoint(true)
+        .transform(Pin.shared)
       val bDocs = b.select(col("doc_id"),
           WebCorpus.canonUrl(col("url")).as("dst_url"))
         .where(col("dst_url").isNotNull)
-        .localCheckpoint(true)
+        .transform(Pin.shared)
       Layout.idempotentAppendBucketed(bEdges, edgesTable,
         "dst_url", buckets, batchId = batchId)
       Layout.idempotentAppendBucketed(bDocs, docsTable,
@@ -532,7 +533,7 @@ object EventStream {
         .join(broadcast(touched), "dst_url")
         .join(field, "dst_url")
         .select("doc_id", "anchor_text")
-        .localCheckpoint(true)
+        .transform(Pin.shared)
       Layout.idempotentAppendBucketed(
         Retrieval.bm25Postings(affected, "doc_id", "anchor_text")
           .withColumn("gen", lit(batchId)),
@@ -630,10 +631,10 @@ object EventStream {
     import graft.ops.ImageHash
     maintain(media, checkpoint, bandsTable) { (sp, b, batchId) =>
       // Hash once, reuse for probe AND append (the decode is the
-      // expensive step; a localCheckpoint pins it).
+      // expensive step; Pin.shared materializes it once).
       val hashes = ImageHash
         .dhash(sp, b, idCol, bytesCol)
-        .localCheckpoint(true)
+        .transform(Pin.shared)
       Layout.idempotentAppendTable(
         ImageHash.incrementalPairsFromIndex(hashes,
             Layout.table(sp, bandsTable), idCol, maxHamming)

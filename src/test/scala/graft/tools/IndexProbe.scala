@@ -1,4 +1,4 @@
-package graft
+package graft.tools
 
 import graft.core.Graft
 import graft.ops.{Components, Dedup, Retrieval, Similarity}
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * once at build time and never again per query". Prints one JSON
   * line per (index, phase, rep).
   *
-  * Usage: `sbt "runMain graft.IndexProbe [sfDir] [reps]"`.
+  * Usage: `sbt "Test/runMain graft.tools.IndexProbe [sfDir] [reps]"`.
   */
 object IndexProbe {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,6 @@
-package graft
+package graft.tools
 
+import graft.SparkEntry
 import graft.core.Graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import scala.collection.mutable
@@ -11,7 +12,7 @@ import scala.collection.mutable
   * and writes each query's `.explain("formatted")` to
   * `plans/r20/<name>_<tag>.txt` for the before/after artifact trail.
   *
-  * Usage: `runMain graft.Prof <tag> <qname> [<qname> ...]`
+  * Usage: `Test/runMain graft.tools.Prof <tag> <qname> [<qname> ...]`
   * (env `SPARK_GRAFT_SF_DIR` picks the data directory, default sf0.1;
   * `SPARK_GRAFT_PROF_PASSES` repeats the timed run, default 2 —
   * pass 1 includes codegen/JIT warm-up, pass 2 is the steady state.)

@@ -1,4 +1,4 @@
-package graft
+package graft.tools
 
 import graft.core.Graft
 import graft.ops.{Bpe, Components, CorpusPipeline, Dedup, GraphMetrics,
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * text would instead add N·|docs| artificial exact-dup cliques and
   * measure a different, quadratically-inflated problem.)
   *
-  * Usage: `sbt "runMain graft.ScaleProbe [sfDir] [tiles,...] [reps]
+  * Usage: `sbt "Test/runMain graft.tools.ScaleProbe [sfDir] [tiles,...] [reps]
   * [ops,...]"`; defaults: sf0.1, tiles 1,3,10, 2 interleaved reps
   * (this box's per-run variance is ±2-3×, so the minimum over
   * interleaved passes is the number to read), all ops. Prints one

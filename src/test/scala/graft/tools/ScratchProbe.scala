@@ -1,4 +1,4 @@
-package graft
+package graft.tools
 
 import graft.core.Graft
 import org.apache.spark.sql.functions._
