@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two `graft.ExplainPlans` logs query by query.
 
-    python3 tools/plan_diff.py BEFORE.log AFTER.log [--context N] [--max-lines N]
+    python3 tools/plan_diff.py BEFORE.log AFTER.log [--root BEFORE_DIR --root AFTER_DIR]
 
 Each log is the captured output of
 `sbt -batch "runMain graft.ExplainPlans <sfDir> [query ...]"`, one per
@@ -24,18 +24,20 @@ remain:
   above the call site, and name the operator that created the RDD).
 
 A query whose blocks still differ is then compared once more with the
-items of every `[...]` list and every `hashpartitioning(...)` argument
-list sorted, and the Expand grouping ids masked. If that makes them
-equal, the difference is only an order of grouping columns: an
-Expand/Aggregate that rewrites several distinct
-aggregates orders its grouping columns by expression-id hashes, which
-depend on how many expressions earlier queries in the same run built
-(seen on q89_profile and q219_threshold_sweep). Such queries are listed
-as "order-only"; rerun each alone on both checkouts
-(`... ExplainPlans <sfDir> <query>`), where it must match.
+detail lines of its Expand, HashAggregate and Exchange nodes loosened:
+the items of every `[...]` list and `hashpartitioning(...)` argument
+list sorted, and the Expand grouping ids masked. Every other line must
+still match exactly. If that makes the blocks equal, the difference is
+only an order of grouping columns: an Expand/Aggregate that rewrites
+several distinct aggregates orders its grouping columns by
+expression-id hashes, which depend on how many expressions earlier
+queries in the same run built (seen on q89_profile and
+q219_threshold_sweep). Such queries are listed as "order-only"; rerun
+each alone on both checkouts (`... ExplainPlans <sfDir> <query>`),
+where it must match.
 
-Prints a summary, then a unified diff of each changed query. Exits 1 if
-any query changed or is missing on one side, else 0.
+Prints a summary, then a unified diff (at most 80 lines) of each changed
+query. Exits 1 if any query changed or is missing on one side, else 0.
 """
 import argparse
 import difflib
@@ -45,6 +47,9 @@ import sys
 GID = re.compile(r"gid#N = \d+")
 INT = re.compile(r"-?\d+")
 HEADER = re.compile(r"^========== (\S+) ==========$")
+NODE = re.compile(r"^\(\d+\) (\w+)")
+LOOSE_NODES = {"Expand", "HashAggregate", "Exchange"}
+MAX_DIFF_LINES = 80
 ROOT = re.compile(r"set current project to .* \(in build file:(.*?)/?\)$")
 
 SUBS = [
@@ -138,15 +143,24 @@ def unordered(line):
     return "".join(out)
 
 
+def loosened(block):
+    """`block` with `unordered` applied to the detail lines of its
+    Expand, HashAggregate and Exchange nodes only."""
+    out, node = [], None
+    for l in block:
+        m = NODE.match(l)
+        if m:
+            node = m.group(1)
+        out.append(unordered(l) if node in LOOSE_NODES and not m else l)
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
     ap.add_argument("--root", action="append", default=[],
                     help="checkout path of BEFORE, then of AFTER (default: from the sbt log)")
-    ap.add_argument("--context", type=int, default=2, help="diff context lines")
-    ap.add_argument("--max-lines", type=int, default=80,
-                    help="diff lines printed per changed query (0: all)")
     a = ap.parse_args()
     roots = a.root + [None] * (2 - len(a.root))
     before = read_blocks(a.before, roots[0])
@@ -157,7 +171,7 @@ def main():
         b, c = before[q], after[q]
         if b == c:
             same.append(q)
-        elif [unordered(l) for l in b] == [unordered(l) for l in c]:
+        elif loosened(b) == loosened(c):
             order_only.append(q)
         else:
             changed.append(q)
@@ -173,8 +187,8 @@ def main():
             print(f"{label}: {' '.join(qs)}")
     for q in changed:
         diff = list(difflib.unified_diff(before[q], after[q], f"before/{q}", f"after/{q}",
-                                         n=a.context, lineterm=""))
-        shown = diff if a.max_lines == 0 else diff[:a.max_lines]
+                                         n=2, lineterm=""))
+        shown = diff[:MAX_DIFF_LINES]
         print(f"\n##### {q}")
         print("\n".join(shown))
         if len(shown) < len(diff):
